@@ -2,6 +2,7 @@ package graft.cdc
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.{ImageSteps, MaterializeImages}
 
 /** Materialization: committed messages ⋈ dictionary → filtered, projected,
   * envelope-ready rows (SURVEY.md §2.4/§2.5 — J2 + F1-F7).
@@ -11,8 +12,13 @@ import org.apache.spark.sql.functions._
   * versioned lookup); table selection falls out of the inner join (events
   * for unselected tables are dropped before any value work — the same
   * "filter before decode" ordering the reference uses); the per-table
-  * condition (F2) and column-format projection (F3/F4) are pure Catalyst
-  * expressions, fully codegen'd.
+  * condition (F2) is a plain Catalyst filter on (op, attrs); and the whole
+  * image rewrite (charset decode, guard resurrection, visibility, column
+  * format, unknown/experimental types, schemaless naming, tag, hex) is ONE
+  * projection of the native [[MaterializeImages]] kernel, which makes one
+  * pass over each row's before/after maps inside the join's whole-stage
+  * codegen — no higher-order-function projections, one Project above the
+  * join (pinned by MaterializePlanSpec).
   */
 object Materialize {
 
@@ -89,6 +95,60 @@ object Materialize {
     }
   }
 
+  /** The image rewrite after enrich + conditions, as ONE projection of
+    * the native [[MaterializeImages]] kernel: charset decode → guard
+    * resurrection → visibility → column format → unknown-type →
+    * experimental types → schemaless COL_n naming → tag →
+    * CHAR_FORMAT::HEX, in one pass over each row's images.
+    *
+    * Order rationale (the reference's): charset decode first, value-side,
+    * before any projection policy; guard resurrection BEFORE visibility
+    * (the guard bitmap is read off the raw image, and the guard column
+    * itself is hidden and stripped right after); unknown-type AFTER the
+    * column-format diff (the reference diffs raw redo values, so a
+    * changed unknown column stays in a CHANGED update and only then
+    * renders as "?" or disappears); tag BEFORE hex rendering (the message
+    * key derives from the logical values; rendering is a sink-side
+    * concern). */
+  private[graft] def project(conditioned: DataFrame, opts: Options): DataFrame =
+    rewrite(conditioned, ImageSteps(
+      charsetDecode = true,
+      guardResurrection = true,
+      visibility = true,
+      changedOnly = opts.columnFormat == Changed,
+      unknownType = true,
+      unknownTypeShow = opts.unknownTypeShow,
+      experimentalTypes = true,
+      experimentalJson = opts.experimentalJson,
+      experimentalXmlType = opts.experimentalXmlType,
+      schemalessNaming = opts.schemaless,
+      tag = true,
+      charFormatHex = opts.charFormatHex))
+
+  /** One select: before/after replaced by the kernel's images (under
+    * CHANGED moved to the end of the row, the column order of CHANGED
+    * output) and the tag set or appended; subexpression elimination
+    * evaluates the kernel once per row. */
+  private def rewrite(df: DataFrame, steps: ImageSteps): DataFrame = {
+    val k = MaterializeImages.column(steps)
+    def img(c: String): Column = k.getField(c).as(c)
+    val cols = df.columns.toSeq
+      .filterNot(c => steps.changedOnly && (c == "before" || c == "after"))
+      .map {
+        case c @ ("before" | "after") => img(c)
+        case "tag" if steps.tag => k.getField("tag").as("tag")
+        case c => col(c)
+      }
+    val imgs = if (steps.changedOnly) Seq(img("before"), img("after")) else Nil
+    val tag =
+      if (steps.tag && !df.columns.contains("tag")) Seq(k.getField("tag").as("tag"))
+      else Nil
+    df.select(cols ++ imgs ++ tag: _*)
+  }
+
+  // Each step alone (queries compose them); every one runs the same
+  // kernel with only its own step enabled.
+
   /** Guard-column bitmap resurrection (Builder.cpp:1323-1372): a table
     * may carry a hidden guard column (SYS_NC...$, a RAW bitmap — hex in
     * the pre-decoded feed) where bit `guardSeg(c)` set means column c was
@@ -99,133 +159,62 @@ object Materialize {
     * the map analogue of the reference's present-with-size-0 sentinel.
     * Unconditional like the reference: active exactly when the dictionary
     * declares guard metadata; pure per-row map surgery, no exchange. */
-  def applyGuardResurrection(df: DataFrame): DataFrame = {
-    val masks = array((0 until 8).map(b => lit(1 << b)): _*)
-    def fix(imgName: String): Column = {
-      val img = col(imgName)
-      val gv = element_at(img, col("guard_col"))
-      val adds = filter(col("guarded_cols"), g => {
-        val seg = g.getField("seg")
-        val bytePos = floor(seg / 8).cast("int")
-        val byteVal = conv(gv.substr(bytePos * 2 + 1, lit(2)), 16, 10)
-          .cast("int")
-        !array_contains(map_keys(img), g.getField("name")) &&
-          length(gv) >= (bytePos + 1) * 2 &&
-          byteVal.bitwiseAND(
-            element_at(masks, pmod(seg, lit(8)).cast("int") + 1)) > 0
-      })
-      when(col("guard_col").isNull || img.isNull || gv.isNull ||
-          size(adds) === 0, img)
-        .otherwise(map_concat(img, map_from_arrays(
-          transform(adds, g => g.getField("name")),
-          transform(adds, _ => lit(null).cast("string")))))
-    }
-    df.withColumn("before", fix("before"))
-      .withColumn("after", fix("after"))
-  }
+  def applyGuardResurrection(df: DataFrame): DataFrame =
+    rewrite(df, ImageSteps(guardResurrection = true))
 
   /** F4: suppress hidden/nested/unused columns from the images — the
     * dictionary row carries the table's visible set (per the Options
     * flags); unknown tables (schemaless passthrough, visible_cols null)
     * keep everything. */
-  def applyVisibility(df: DataFrame): DataFrame = {
-    def visible(img: Column): Column =
-      when(col("invisible_cols").isNull || size(col("invisible_cols")) === 0,
-        img)
-        .otherwise(map_filter(img, (k, _) =>
-          !array_contains(col("invisible_cols"), k)))
-    df.withColumn("before", visible(col("before")))
-      .withColumn("after", visible(col("after")))
-  }
+  def applyVisibility(df: DataFrame): DataFrame =
+    rewrite(df, ImageSteps(visibility = true))
 
-  /** F3/F6: column-format projection on the before/after maps.
-    * keyCols come from the joined dictionary row (array column). */
-  def applyColumnFormat(df: DataFrame, opts: Options = Options()): DataFrame = {
-    val isKey: (Column, Column) => Column =
-      (k, keys) => array_contains(coalesce(keys, array().cast("array<string>")), k)
+  /** F3/F6: column-format projection on the before/after maps. Under
+    * CHANGED an update keeps its key columns (the joined dictionary row's
+    * key_cols) and the columns whose value changed; both images are
+    * diffed against the ORIGINAL other image. FULL formats pass the
+    * images through (already full in the feed). */
+  def applyColumnFormat(df: DataFrame, opts: Options = Options()): DataFrame =
     opts.columnFormat match {
-      case FullUpd | FullInsDec => df // images already full in the feed
-      case Changed =>
-        // updates: keep key cols + cols whose value actually changed.
-        // Both projections must read the ORIGINAL images — compute them in
-        // one select, not chained withColumns (the second would see the
-        // already-filtered first).
-        val changedAfter = map_filter(col("after"), (k, v) =>
-          isKey(k, col("key_cols")) || !(element_at(col("before"), k) <=> v))
-        val changedBefore = map_filter(col("before"), (k, v) =>
-          isKey(k, col("key_cols")) || !(element_at(col("after"), k) <=> v))
-        df.withColumn("before_chg",
-            when(col("op") === MsgOp.Update, changedBefore).otherwise(col("before")))
-          .withColumn("after_chg",
-            when(col("op") === MsgOp.Update, changedAfter).otherwise(col("after")))
-          .drop("before", "after")
-          .withColumnRenamed("before_chg", "before")
-          .withColumnRenamed("after_chg", "after")
+      case FullUpd | FullInsDec => df
+      case Changed => rewrite(df, ImageSteps(changedOnly = true))
     }
-  }
 
   /** UNKNOWN_TYPE (Builder.cpp:605-612 default branch): HIDE drops the
     * unknown-typed columns from both images; SHOW keeps them with the
     * reference's QUESTION_MARK rendering. Tables without unknown columns
     * (and schemaless passthrough rows, unknown_cols null) short-circuit. */
-  def applyUnknownType(df: DataFrame, show: Boolean): DataFrame = {
-    def fix(img: Column): Column =
-      when(col("unknown_cols").isNull || size(col("unknown_cols")) === 0, img)
-        .otherwise(
-          if (show)
-            transform_values(img, (k, v) =>
-              when(array_contains(col("unknown_cols"), k), lit("?"))
-                .otherwise(v))
-          else
-            map_filter(img, (k, _) =>
-              !array_contains(col("unknown_cols"), k)))
-    df.withColumn("before", fix(col("before")))
-      .withColumn("after", fix(col("after")))
-  }
+  def applyUnknownType(df: DataFrame, show: Boolean): DataFrame =
+    rewrite(df, ImageSteps(unknownType = true, unknownTypeShow = show))
 
   /** Experimental type handling (Builder.cpp:143-158): JSON (type 119)
     * columns drop from the images unless `experimentalJson`, where the
     * assembled LOB renders as raw hex; XMLTYPE-backed BLOB columns render
     * raw hex unless `experimentalXmlType`, where the decoded XML text
     * passes through. Tables with neither (json_cols/xml_cols empty or the
-    * schemaless null passthrough) short-circuit. */
-  /** The per-image Column form of the experimental-type surgery —
-    * exposed so a query can evaluate BOTH flag settings over one scan
-    * (q96) instead of materializing twice and joining. */
+    * schemaless null passthrough) short-circuit.
+    *
+    * This per-image Column form is exposed so a query can evaluate BOTH
+    * flag settings over one scan (q96) instead of materializing twice
+    * and joining. */
   private[graft] def experimentalImage(img: Column,
-      experimentalJson: Boolean, experimentalXmlType: Boolean): Column = {
-    val j = when(col("json_cols").isNull || size(col("json_cols")) === 0,
-      img).otherwise(
-      if (experimentalJson)
-        transform_values(img, (k, v) =>
-          when(array_contains(col("json_cols"), k),
-            hex(encode(v, "UTF-8"))).otherwise(v))
-      else
-        map_filter(img, (k, _) => !array_contains(col("json_cols"), k)))
-    when(col("xml_cols").isNull || size(col("xml_cols")) === 0, j)
-      .otherwise(
-        if (experimentalXmlType) j
-        else transform_values(j, (k, v) =>
-          when(array_contains(col("xml_cols"), k),
-            hex(encode(v, "UTF-8"))).otherwise(v)))
-  }
+      experimentalJson: Boolean, experimentalXmlType: Boolean): Column =
+    MaterializeImages.column(ImageSteps(experimentalTypes = true,
+        experimentalJson = experimentalJson,
+        experimentalXmlType = experimentalXmlType),
+      before = lit(null).cast("map<string,string>"), after = img)
+      .getField("after")
 
   def applyExperimentalTypes(df: DataFrame, opts: Options): DataFrame =
-    df.withColumn("before", experimentalImage(col("before"),
-        opts.experimentalJson, opts.experimentalXmlType))
-      .withColumn("after", experimentalImage(col("after"),
-        opts.experimentalJson, opts.experimentalXmlType))
+    rewrite(df, ImageSteps(experimentalTypes = true,
+      experimentalJson = opts.experimentalJson,
+      experimentalXmlType = opts.experimentalXmlType))
 
   /** CHAR_FORMAT::HEX: every image value as uppercase hex of its UTF-8
     * bytes (Builder.h:1129-1184 valueBufferAppendHex path — byte-level,
     * after charset mapping; the pre-decoded feed is already UTF-8). */
-  def applyCharFormatHex(df: DataFrame): DataFrame = {
-    def hx(img: Column): Column =
-      when(img.isNull, img)
-        .otherwise(transform_values(img, (_, v) => hex(encode(v, "UTF-8"))))
-    df.withColumn("before", hx(col("before")))
-      .withColumn("after", hx(col("after")))
-  }
+  def applyCharFormatHex(df: DataFrame): DataFrame =
+    rewrite(df, ImageSteps(charFormatHex = true))
 
   /** Schemaless COL_<n> naming (Builder.cpp:96-99): a row whose obj# has
     * no dictionary match renders its raw columns as COL_0..COL_n-1. The
@@ -234,26 +223,12 @@ object Materialize {
     * is the image's sorted key order (documented contract — both sides
     * of the gate derive the same numbering). Matched rows pass through
     * untouched. */
-  def applySchemalessNaming(df: DataFrame): DataFrame = {
-    def colN(img: Column): Column = {
-      val ks = array_sort(map_keys(img))
-      when(col("table_name").isNotNull || img.isNull, img)
-        .otherwise(map_from_arrays(
-          transform(ks, (_, i) => concat(lit("COL_"), i.cast("string"))),
-          transform(ks, k => element_at(img, k))))
-    }
-    df.withColumn("before", colN(col("before")))
-      .withColumn("after", colN(col("after")))
-  }
+  def applySchemalessNaming(df: DataFrame): DataFrame =
+    rewrite(df, ImageSteps(schemalessNaming = true))
 
   /** F7: message key = tag columns from the after (else before) image. */
   def withTag(df: DataFrame): DataFrame =
-    df.withColumn("tag",
-      when(col("tag_cols").isNull || size(col("tag_cols")) === 0, lit(null))
-        .otherwise(concat_ws("|",
-          transform(col("tag_cols"), c =>
-            coalesce(element_at(col("after"), c), element_at(col("before"), c),
-              lit(""))))))
+    rewrite(df, ImageSteps(tag = true))
 
   /** Charset decode (§2.7; Builder.cpp:131 parseString(data, size,
     * column->charsetId, ...) over the Locales.cpp:648-800 id space): a
@@ -262,48 +237,15 @@ object Materialize {
     * decodes here, value-side, before any projection policy — exactly
     * where the reference decodes, between redo extraction and the
     * column-format diff. Tables without charset columns short-circuit on
-    * the null/empty map; the per-row id makes one codegen'd projection
-    * serve a feed mixing charsets. */
-  def applyCharsetDecode(df: DataFrame): DataFrame = {
-    import graft.functions.CharsetExpressions.charsetDecode
-    def dec(img: Column): Column =
-      when(col("charset_cols").isNull || size(col("charset_cols")) === 0,
-        img).otherwise(
-        transform_values(img, (k, v) =>
-          when(v.isNotNull && map_contains_key(col("charset_cols"), k),
-            charsetDecode(unhex(v), element_at(col("charset_cols"), k)))
-            .otherwise(v)))
-    df.withColumn("before", dec(col("before")))
-      .withColumn("after", dec(col("after")))
-  }
+    * the null/empty map; the per-row id makes one projection serve a
+    * feed mixing charsets. */
+  def applyCharsetDecode(df: DataFrame): DataFrame =
+    rewrite(df, ImageSteps(charsetDecode = true))
 
-  /** Full path: enrich → charset decode → conditions → visibility →
-    * column format → unknown-type → schemaless COL_n naming → tag. */
+  /** Full path: enrich → conditions → one kernel projection (see
+    * [[project]]). The conditions read only (op, attrs), never the
+    * images, so filtering before the rewrite skips it for dropped rows. */
   def apply(messages: Dataset[ChangeMessage], dict: Dictionary,
-      opts: Options = Options())(implicit spark: SparkSession): DataFrame = {
-    // unknown-type AFTER column format: the reference diffs raw redo
-    // values, so a changed unknown column stays in a CHANGED update and
-    // only then renders as "?" (SHOW) or disappears (HIDE — same final
-    // images as filtering before the diff, since the column is dropped
-    // either way)
-    // guard resurrection BEFORE visibility: the guard bitmap is read off
-    // the raw image (the guard column itself is hidden and is stripped by
-    // the visibility pass right after, like the reference's output)
-    val formatted = applyExperimentalTypes(
-      applyUnknownType(
-        applyColumnFormat(
-          applyVisibility(applyGuardResurrection(
-            applyConditions(
-              applyCharsetDecode(enrich(messages, dict, opts)), dict))),
-          opts),
-        opts.unknownTypeShow),
-      opts)
-    val named =
-      if (opts.schemaless) applySchemalessNaming(formatted) else formatted
-    // tag BEFORE hex rendering: the message key derives from the logical
-    // values (Builder computes tags on decoded columns, rendering is a
-    // sink-side concern)
-    val tagged = withTag(named)
-    if (opts.charFormatHex) applyCharFormatHex(tagged) else tagged
-  }
+      opts: Options = Options())(implicit spark: SparkSession): DataFrame =
+    project(applyConditions(enrich(messages, dict, opts), dict), opts)
 }

@@ -349,37 +349,48 @@ object TxnAssembly {
     * processing-time TTL for abandoned transactions (T7 cross-log
     * continuity comes free from the state store). Events within a key must
     * arrive scn-ordered (guaranteed per redo thread; the source preserves
-    * file order per partition). */
+    * file order per partition).
+    *
+    * Grouped by the `xid` COLUMN, not `groupByKey(_.xid)`: the lambda key
+    * adds an AppendColumns step that deserializes every event into a full
+    * ChangeEvent (five Scala maps) just to read its xid. The state key
+    * schema is a single string either way, so checkpoints written by the
+    * lambda-keyed query restart on this one (StreamingSpec). */
   def assembleStream(events: Dataset[ChangeEvent], cfg: Config = Config())(
       implicit spark: SparkSession): Dataset[ChangeMessage] = {
+    import org.apache.spark.sql.functions.col
     import spark.implicits._
     // implicit product encoder for TxnStateData via spark.implicits —
     // explicit state schema in the store (see TxnStateData for the v1
     // kryo → v2 product bump)
-    // ProcessingTimeTimeout makes Spark schedule timeout-check batches
-    // forever — only pay that when an abandoned-txn TTL is requested.
-    val timeout =
-      if (cfg.stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    events.groupByKey(_.xid).flatMapGroupsWithState(
-      OutputMode.Append, timeout)(
-      (xid: String, it: Iterator[ChangeEvent],
-          state: GroupState[TxnStateData]) => {
-        if (state.hasTimedOut) { // abandoned txn: drop state, emit nothing
-          state.remove()
-          Iterator.empty
-        } else {
-          val st = state.getOption.map(_.thaw).getOrElse(TxnState.empty)
-          val out = ArrayBuffer.empty[ChangeMessage]
-          it.toArray.sorted(ordering)
-            .foreach(e => out ++= onEvent(xid, e, st, cfg))
-          if (st.ops.isEmpty && !st.open) state.remove()
-          else {
-            state.update(TxnStateData.freeze(st))
-            if (cfg.stateTtlMs > 0) state.setTimeoutDuration(cfg.stateTtlMs)
-          }
-          out.iterator
-        }
-      })
+    events.toDF().groupBy(col("xid")).as[String, ChangeEvent]
+      .flatMapGroupsWithState(OutputMode.Append, stateTimeout(cfg))(
+        streamStep(cfg))
   }
+
+  /** ProcessingTimeTimeout makes Spark schedule timeout-check batches
+    * forever — only pay that when an abandoned-txn TTL is requested. */
+  private[graft] def stateTimeout(cfg: Config): GroupStateTimeout =
+    if (cfg.stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
+    else GroupStateTimeout.NoTimeout
+
+  /** One XID group of one micro-batch against its keyed state. */
+  private[graft] def streamStep(cfg: Config)(xid: String,
+      it: Iterator[ChangeEvent],
+      state: GroupState[TxnStateData]): Iterator[ChangeMessage] =
+    if (state.hasTimedOut) { // abandoned txn: drop state, emit nothing
+      state.remove()
+      Iterator.empty
+    } else {
+      val st = state.getOption.map(_.thaw).getOrElse(TxnState.empty)
+      val out = ArrayBuffer.empty[ChangeMessage]
+      it.toArray.sorted(ordering)
+        .foreach(e => out ++= onEvent(xid, e, st, cfg))
+      if (st.ops.isEmpty && !st.open) state.remove()
+      else {
+        state.update(TxnStateData.freeze(st))
+        if (cfg.stateTtlMs > 0) state.setTimeoutDuration(cfg.stateTtlMs)
+      }
+      out.iterator
+    }
 }

@@ -93,10 +93,12 @@ object Tables {
     * TABLE IF EXISTS …")` pays parse + analysis + command dispatch per
     * statement, and the index-lifecycle queries issue up to 7 of them per
     * build (IvfIndex.write). This goes straight to the session catalog:
-    * one exists probe, a relation-cache refresh, and the drop (the
+    * one exists probe, an uncache when anything is cached (the SQL
+    * command's uncache step — a cached plan of the dropped table would
+    * otherwise serve its old rows to a same-named table recreated at the
+    * same location), a relation-cache refresh, and the drop (the
     * external catalog deletes a managed table's directory, exactly like
-    * the SQL command — our tables never enter the CacheManager, so the
-    * command's uncache step is a no-op here). The manual location rm
+    * the SQL command). The manual location rm
     * covers a MANAGED location orphaned by a previous session's
     * warehouse, which would otherwise make the next saveAsTable refuse
     * even with overwrite (the LshIndex.write lesson). */
@@ -104,6 +106,8 @@ object Tables {
     val ident = org.apache.spark.sql.catalyst.TableIdentifier(table)
     val cat = spark.sessionState.catalog
     if (cat.tableExists(ident)) {
+      if (!spark.sharedState.cacheManager.isEmpty)
+        spark.catalog.uncacheTable(table)
       cat.refreshTable(ident)
       cat.dropTable(ident, ignoreIfNotExists = true, purge = false)
     }

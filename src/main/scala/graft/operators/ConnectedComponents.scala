@@ -79,6 +79,11 @@ object ConnectedComponents {
   def runPropagation(edges: DataFrame, maxRounds: Int = 200,
       escalateAfter: Int = 20)(
       implicit spark: SparkSession): DataFrame = {
+    // a zero bound would skip every round and hand back labels that were
+    // never materialized (their edge RDD is released on the way out)
+    require(escalateAfter >= 1 && maxRounds >= 1,
+      s"runPropagation needs escalateAfter >= 1 and maxRounds >= 1, " +
+        s"got $escalateAfter / $maxRounds")
     import spark.implicits._
     // The inner loop is the co-partitioned Pregel shape (GraphX's): the
     // adjacency is hash-partitioned by node ONCE, labels keep the SAME
@@ -199,6 +204,7 @@ object ConnectedComponents {
     * callers union singletons back if they need them. */
   def run(edges: DataFrame, maxRounds: Int = 50)(
       implicit spark: SparkSession): DataFrame = {
+    require(maxRounds >= 1, s"run needs maxRounds >= 1, got $maxRounds")
     val nodes = edges.select(col("src").cast("long").as("n"))
       .union(edges.select(col("dst").cast("long").as("n"))).distinct()
       .localCheckpoint(true)

@@ -30,7 +30,14 @@ object Metrics {
       processedRowsPerSec: Double,
       stateRows: Long,
       stateBytes: Long,
-      batchDurationMs: Long)
+      batchDurationMs: Long) {
+
+    /** Memory the open transactions hold: the store's reported bytes
+      * while any keyed state row (an open transaction) remains, 0 once
+      * none does — a store's own resident footprint (RocksDB memtables,
+      * caches) is not transaction memory. */
+    def openTxnBytes: Long = if (stateRows == 0L) 0L else stateBytes
+  }
 
   /** Collects progress for queries on one SparkSession. Thread-safe;
     * `snapshots` drains in arrival order. */

@@ -204,12 +204,13 @@ final class Prometheus(tagNames: Prometheus.TagNames = Prometheus.TagNames.None)
     inc("transactions", Map("type" -> outcome, "filter" -> filter), c)
 
   // ---- engine bridges ---------------------------------------------------
-  /** Fold one micro-batch progress snapshot into the gauges: keyed
-    * transaction state ≙ memory_used_mb{type="transactions"}, batch
+  /** Fold one micro-batch progress snapshot into the gauges: memory of
+    * the open transactions (keyed state; 0 with none open) ≙
+    * memory_used_mb{type="transactions"}, batch
     * duration ≙ checkpoint_lag (the engine's lag yardstick — both measure
     * "how far behind live is the pipeline"). */
   def observeBatch(b: Metrics.BatchMetrics): Unit = {
-    emitMemoryUsedMb("transactions", b.stateBytes / 1048576.0)
+    emitMemoryUsedMb("transactions", b.openTxnBytes / 1048576.0)
     emitCheckpointLag(b.batchDurationMs / 1000.0)
     emitMemoryUsedTotalMb(
       (Runtime.getRuntime.totalMemory - Runtime.getRuntime.freeMemory)

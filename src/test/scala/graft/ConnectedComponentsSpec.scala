@@ -76,6 +76,25 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     assert(got2 == want)
   }
 
+  test("a zero round bound fails loudly instead of returning " +
+      "unmaterialized labels") {
+    implicit val s: SparkSession = spark
+    import s.implicits._
+    val edges = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
+    Seq(
+      () => ConnectedComponents.run(edges, maxRounds = 0),
+      () => ConnectedComponents.runPropagation(edges, maxRounds = 0),
+      () => ConnectedComponents.runPropagation(edges, escalateAfter = 0)
+    ).foreach { call =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains(">= 1"), e.getMessage)
+    }
+    // the smallest legal trip wire still returns the exact labels
+    assert(ConnectedComponents.runPropagation(edges, escalateAfter = 1)
+        .as[(Long, Long)].collect().toMap ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
+  }
+
   test("fuzz: 60 random graphs match union-find (escalation forced)") {
     val rnd = new scala.util.Random(7)
     implicit val s: SparkSession = spark

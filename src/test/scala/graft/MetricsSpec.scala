@@ -113,6 +113,17 @@ class MetricsSpec extends AnyFunSuite {
       assert(batches.head.stateRows == nTxn.toLong) // one state row per open txn
       assert(batches.head.stateBytes > 0L)
       assert(batches.last.stateRows == 0L) // commit batch drains the store
+      // the transaction-memory gauge follows: non-zero while the txns are
+      // open, back to 0 after the last commit (RocksDB still reports its
+      // own resident bytes then — that is not transaction memory)
+      val prom = new graft.streaming.Prometheus()
+      def gauge(): Double = prom.render().linesIterator
+        .find(_.startsWith("memory_used_mb{type=\"transactions\"}"))
+        .map(_.split(" ").last.toDouble).getOrElse(fail("gauge missing"))
+      prom.observeBatch(batches.head)
+      assert(gauge() > 0.0)
+      prom.observeBatch(batches.last)
+      assert(gauge() == 0.0)
     } finally {
       Metrics.detach(spark, collector)
       prev match {

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import java.nio.file.Files
@@ -285,6 +285,62 @@ class StreamingSpec extends AnyFunSuite {
       val result = spark.read.json(outDir).select("c_scn", "xid").collect()
         .map(r => (r.getString(0), r.getString(1))).toSeq.sorted
       assert(result == Seq(("2", "1.0.1"), ("4", "9.0.2")),
+        s"got $result")
+    } finally {
+      prev match {
+        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
+        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      }
+    }
+  }
+
+  test("restart on a RocksDB checkpoint written by the lambda-keyed " +
+      "(groupByKey(_.xid)) assembly resumes its open transactions") {
+    // assembleStream groups by the xid COLUMN; checkpoints of the earlier
+    // groupByKey(_.xid) shape (key schema `value: string`) must restart
+    // on it with their keyed state intact — same state operator, same
+    // value schema, a key schema equal up to its field name
+    implicit val s: SparkSession = spark
+    import s.implicits._
+    import org.apache.spark.sql.streaming.OutputMode
+    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try {
+      val dir = Files.createTempDirectory("graft_rekey").toString
+      val srcDir = s"$dir/events"
+      val outDir = s"$dir/out"
+      val ckpt = s"$dir/ckpt"
+      Files.createDirectories(java.nio.file.Paths.get(srcDir))
+      def writeBatch(n: Int, events: Seq[ChangeEvent]): Unit =
+        Seq(events).toDS().flatMap(identity).coalesce(1)
+          .write.json(s"$srcDir/batch$n")
+      def runOnce(assemble: Dataset[ChangeEvent] => Dataset[ChangeMessage])
+          : Unit = {
+        val events = graft.sources.EventSource.streamJson(spark, s"$srcDir/*")
+        val q = assemble(events)
+          .selectExpr("CAST(cScn AS STRING) AS c_scn", "xid",
+            "after['k'] AS k")
+          .writeStream.format("json").option("path", outDir)
+          .option("checkpointLocation", ckpt).start()
+        q.processAllAvailable()
+        q.stop()
+      }
+      val cfg = TxnAssembly.Config()
+      // run 1, lambda-keyed: txn A commits, txn B stays open in state
+      writeBatch(1, Seq(
+        ev(1, Op.Ins).copy(after = Map("k" -> "a")), ev(2, Op.Commit),
+        ev(3, Op.Ins).copy(xid = "9.0.2", after = Map("k" -> "b"))))
+      runOnce(_.groupByKey(_.xid).flatMapGroupsWithState(
+        OutputMode.Append, TxnAssembly.stateTimeout(cfg))(
+        TxnAssembly.streamStep(cfg)))
+      // run 2, column-keyed: B's buffered insert flushes at its commit
+      writeBatch(2, Seq(ev(4, Op.Commit).copy(xid = "9.0.2")))
+      runOnce(TxnAssembly.assembleStream(_, cfg))
+      val result = spark.read.json(outDir).select("c_scn", "xid", "k")
+        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
+        .toSeq.sorted
+      assert(result == Seq(("2", "1.0.1", "a"), ("4", "9.0.2", "b")),
         s"got $result")
     } finally {
       prev match {

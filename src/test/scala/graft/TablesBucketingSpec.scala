@@ -75,4 +75,34 @@ class TablesBucketingSpec extends AnyFunSuite {
       s"bucketed agg must not shuffle:\n${plan.take(800)}")
     assert(agg.count() == 1000L)
   }
+
+  test("dropTableFast uncaches: a recreated table serves only its new " +
+      "rows and is not cached") {
+    import spark.implicits._
+    val t = "graft_drop_cache_t"
+    val base = Files.createTempDirectory("graft_drop_cache")
+    val loc = base.resolve("t")
+    Tables.dropTableFast(spark, t)
+    (1 to 3).toDF("v").write.parquet(loc.toString)
+    spark.catalog.createTable(t, loc.toString)
+    spark.catalog.cacheTable(t)
+    assert(spark.table(t).count() == 3L) // materializes the cache
+    Tables.dropTableFast(spark, t)
+    try {
+      // new files land at the same location behind Spark's back (a
+      // directory move, as an external producer would make), then the
+      // table is recreated over it
+      val next = base.resolve("next")
+      (10 to 11).toDF("v").write.parquet(next.toString)
+      def rm(f: java.io.File): Unit = {
+        if (f.isDirectory) f.listFiles().foreach(rm)
+        f.delete()
+      }
+      rm(loc.toFile)
+      Files.move(next, loc)
+      spark.catalog.createTable(t, loc.toString)
+      assert(spark.table(t).as[Int].collect().sorted.toSeq == Seq(10, 11))
+      assert(!spark.catalog.isCached(t))
+    } finally Tables.dropTableFast(spark, t)
+  }
 }
