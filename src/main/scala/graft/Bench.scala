@@ -1,293 +1,397 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import java.io.File
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import scala.collection.immutable.ListMap
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+import scala.util.matching.Regex
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.util.QueryExecutionListener
+
+/** The query-suite bench: times every SparkEntry query at one scale factor,
+  * prints one JSON line and writes the full record to BENCH_FULL.json.
+  * Each query's fastest run is split by layer (see [[Layers]]). A run
+  * filtered by SPARK_GRAFT_BENCH_FILTER is the per-query profiler: it
+  * prints each query's layers before the JSON line and writes no artifact;
+  * `-Dspark.eventLog.enabled=true` adds Spark's own per-stage log. */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  type Query = (SparkSession, String) => DataFrame
+
+  /** The bench's inputs, parsed before the session starts: a bad value
+    * fails at once with its variable's name, not after the timed loop. */
+  final case class Env(sfDir: String, cpus: Int, iters: Int,
+      stdoutBudget: Int, filter: Option[Regex], warmDir: String,
+      oracleFile: File, outFile: Option[File])
+
+  object Env {
+    def apply(env: Map[String, String]): Env = {
+      val sfDir = env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+      val filter = env.get("SPARK_GRAFT_BENCH_FILTER").map { s =>
+        try s.r catch { case e: java.util.regex.PatternSyntaxException =>
+          throw new IllegalArgumentException(
+            s"SPARK_GRAFT_BENCH_FILTER is not a regex: ${e.getMessage}") }
+      }
+      Env(sfDir,
+        cpus = positiveInt(env, "SPARK_GRAFT_CPUS", 32),
+        // three runs, not two: with two, a both-slow pair has spread ~1 and
+        // host noise reads as a regression; three plus the median tell one
+        // slow outlier from a uniformly slow host
+        iters = positiveInt(env, "SPARK_GRAFT_BENCH_ITERS", 3),
+        // a caller that keeps a 2000-char tail of stdout still gets the line
+        stdoutBudget = positiveInt(env, "SPARK_GRAFT_STDOUT_BUDGET", 1800),
+        filter = filter,
+        warmDir = env.getOrElse("SPARK_GRAFT_WARM_DIR",
+          sfDir.replaceAll("sf[0-9.]+$", "sf0.01")),
+        oracleFile = new File(
+          env.getOrElse("SPARK_GRAFT_ORACLE_TIMES", "ORACLE_TIMES.json")),
+        // a filtered subset prints only: it never overwrites the artifact
+        outFile = if (filter.nonEmpty) None else Some(new File(
+          env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json")).getAbsoluteFile))
+    }
+  }
+
+  private def positiveInt(env: Map[String, String], name: String,
+      default: Int): Int =
+    env.get(name).fold(default)(s => s.trim.toIntOption.filter(_ > 0)
+      .getOrElse(throw new IllegalArgumentException(
+        s"$name must be a positive integer, got '$s'")))
+
+  /** The local session of the bench and the tools built on it: local[cpus]
+    * with one shuffle partition per core, UTC, no UI, and the engine's
+    * tuning ([[graft.core.Tables.tune]]). */
+  def session(cpus: Int = positiveInt(sys.env, "SPARK_GRAFT_CPUS", 32))
+      : SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Warm the JVM/codegen/file-source paths so the first measured query
-    // doesn't absorb one-time startup cost.
-    try {
-      Seq("lineitem", "documents", "embeddings", "events").foreach(t =>
-        graft.core.Tables.load(spark, sfDir, t).count())
-      // q58's JSONL feed fixture is one-time scaffolding, not the operator
-      // under measurement (the DSv2 pushdown read is) — pre-create it
-      graft.queries.CdcOps.ensureDsv2Feed(spark, sfDir)
-      // the ChangeEvent/ChangeMessage encoders are shared by every CDC
-      // query; generate their (de)serializer code once up front
-      locally {
-        import spark.implicits._
-        implicit val s = spark
-        graft.cdc.TxnAssembly.assembleBatch(
-          Seq(graft.cdc.ChangeEvent(1L, "w.0.1", graft.cdc.Op.Ins)).toDS(),
-          graft.cdc.TxnAssembly.Config(commitAtEnd = true)).count()
-      }
-    } catch { case _: Throwable => }
-    // local-iteration escape hatch: regex over query names (driver sets
-    // nothing → full set, same as before)
-    val nameFilter = sys.env.get("SPARK_GRAFT_BENCH_FILTER").map(_.r)
-    val picked = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(kv => nameFilter.forall(_.findFirstIn(kv._1).isDefined))
-    // Steady-state warmup (JMH discipline): run every query once against
-    // the TINY scale factor before the timed loop. The measured sf0.1 plans
-    // are structurally identical, so this pre-compiles each query's
-    // generated code (janino), interpreted-HOF paths, and shuffle/broadcast
-    // machinery without touching the measured data — the timed loop then
-    // reports engine throughput, not one-time JVM compilation (which at
-    // sf0.1 dominates: e.g. q06 first-run 2.4s vs 0.5s steady).
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
-      sfDir.replaceAll("sf[0-9.]+$", "sf0.01"))
-    if (new java.io.File(warmDir).isDirectory && warmDir != sfDir) {
-      // a warmup failure silently reverts that query to cold-start timing —
-      // make any degradation visible instead of skewing the steady-state
-      // numbers without a trace
-      val failed = picked.flatMap { case (name, fn) =>
-        try { fn(spark, warmDir).count(); None }
-        catch { case _: Throwable => Some(name) }
-      }
-      if (failed.nonEmpty)
-        System.err.println(
-          s"[bench] WARMUP FAILED (cold-start timings) for: " +
-            failed.mkString(", "))
+    graft.core.Tables.tune(spark)
+  }
+
+  /** Warm-up before the timed loop (JMH discipline). First the one-time
+    * set-up that queries share: the file-source paths of the big tables,
+    * q58's JSONL feed fixture (scaffolding, not the DSv2 read under
+    * measurement) and the ChangeEvent/ChangeMessage encoders. Then each
+    * query runs once at the small warm scale, whose plans have the same
+    * shape, so the timed loop measures steady-state code rather than
+    * codegen and JIT (sf0.1 q06: 2.4 s first run vs 0.5 s steady). A query
+    * that fails at the warm scale is recorded as failed and not timed. */
+  def warm(spark: SparkSession, meter: Meter, sfDir: String, warmDir: String,
+      picked: Seq[(String, Query)]): Unit = {
+    Seq("lineitem", "documents", "embeddings", "events").foreach(t =>
+      graft.core.Tables.load(spark, sfDir, t).count())
+    graft.queries.CdcOps.ensureDsv2Feed(spark, sfDir)
+    locally {
+      import spark.implicits._
+      implicit val s: SparkSession = spark
+      graft.cdc.TxnAssembly.assembleBatch(
+        Seq(graft.cdc.ChangeEvent(1L, "w.0.1", graft.cdc.Op.Ins)).toDS(),
+        graft.cdc.TxnAssembly.Config(commitAtEnd = true)).count()
     }
-    // JMH measurement discipline, part 2: the sf0.01 warmup compiles the
-    // plans, but C2 tiers the generated loops up only after real
-    // iteration counts — a single sf0.1 shot measures half-JIT'ed code
-    // (measured r6: q55 single-shot 1.43s vs 0.73s steady). Run each
-    // query `iters` times at the measured SF and report the fastest —
-    // the steady-state engine throughput the 100 TB projection scales
-    // from, not the one-time JIT ramp.
-    // Default 3 (r9 verdict ask #3): with 2 iterations a BOTH-slow pair
-    // has spread ~1 and persistent host noise is indistinguishable from
-    // a real regression (r9's q84: spread 1.32 yet 7.5x off). Three
-    // iterations plus the per-query median below let the artifact itself
-    // separate "one slow outlier" from "uniformly slow host".
-    val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt.max(1)
-    // Run-condition guard (r8 verdict ask #3): the r8 driver bench ran
-    // uniformly ~1.21x slower than r7 with zero code changes — host
-    // contention that cost a judge re-bench to exonerate. Record the host
-    // load average around the timed loop and each query's iteration
-    // spread (max/min) so a regression is attributable from the artifact
-    // alone: uniform spread + high load → noise; isolated spread-1 slowdown
-    // → a real plan change.
-    def loadavg(): Double =
-      try java.nio.file.Files.readString(
-        java.nio.file.Paths.get("/proc/loadavg")).split(" ")(0).toDouble
-      catch { case _: Throwable => -1.0 }
-    val loadBefore = loadavg()
-    // Block hygiene between queries: localCheckpoint-based operators
-    // (propagation rounds, the LSH/weighted banded frames) pin RDD blocks
-    // that only the ContextCleaner releases, and it needs a JVM GC to
-    // notice the dropped references. Left alone, a checkpoint-heavy query
-    // squeezes storage memory for every query that runs AFTER it —
-    // measured r12: q186 landing lexicographically before q19-q48 slowed
-    // that family 3-15x. NOTE clearCache() IS a blanket unpersist of
-    // every CacheManager entry (any cross-query .cache()/persist memo
-    // would be evicted between queries) — it only coexists with the BPE
-    // vocab memo because that memo uses localCheckpoint + a strong
-    // driver reference, which the CacheManager never tracks and the GC
-    // never collects. Any future cross-query memo must follow the same
-    // localCheckpoint discipline to survive this hygiene step.
-    def releaseBlocks(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      System.gc()
-      Thread.sleep(200) // let the async ContextCleaner process the refs
-    }
-    val timed = picked.map { case (name, fn) =>
-      val times = (1 to iters).map { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        (System.nanoTime() - t0) / 1e9
+    if (new File(warmDir).isDirectory && warmDir != sfDir)
+      picked.foreach { case (name, fn) =>
+        try fn(spark, warmDir).count()
+        catch { case NonFatal(e) => meter.fail(name, s"warm-up at $warmDir", e) }
       }
-      releaseBlocks()
-      val sorted = times.sorted
-      // true median: even lengths average the two middle elements (an
-      // upper-middle pick would record the MAX for iters=2, defeating the
-      // min-vs-median contention-attribution signal this field exists for)
-      val median =
-        if (sorted.length % 2 == 1) sorted(sorted.length / 2)
-        else (sorted(sorted.length / 2 - 1) + sorted(sorted.length / 2)) / 2.0
-      // per-query loadavg AT measurement time: attributes an isolated
-      // slow number to a contention window without cross-referencing the
-      // whole-run before/after pair
-      (name, times.min, median,
-        if (times.min > 0) times.max / times.min else 1.0, loadavg())
+  }
+
+  /** Block hygiene between queries: localCheckpoint-based operators pin RDD
+    * blocks that only the ContextCleaner frees, after a GC notices the
+    * dropped references; left alone, a checkpoint-heavy query squeezes
+    * storage memory for every query after it (q186 once slowed q19-q48
+    * 3-15x). `clearCache()` unpersists every CacheManager entry, so a
+    * cross-query memo must use localCheckpoint plus a driver reference, as
+    * the BPE vocab memo does, to survive this step. */
+  def releaseBlocks(spark: SparkSession): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    System.gc()
+    Thread.sleep(200) // let the async ContextCleaner process the refs
+  }
+
+  /** One query's fastest run split by layer, as Structured Streaming splits
+    * a trigger's `durationMs`:
+    *  - `build_s`: `fn(spark, dir)`, i.e. plan construction plus eager side
+    *    jobs (index builds, collected artifacts, localCheckpoints);
+    *  - `plan_s`: Catalyst analysis, optimization and physical planning of
+    *    the measured `count()`, from its `qe.tracker`;
+    *  - `exec_s`: the rest of the `count()`;
+    *  - the scheduler and executor counters of every job the run started,
+    *    build included: `task_s` is summed executor run time,
+    *    `shuffle_mb` shuffle bytes written, `spill_mb` bytes spilled to
+    *    disk. */
+  final case class Layers(build_s: Double, plan_s: Double, exec_s: Double,
+      jobs: Long, stages: Long, tasks: Long, task_s: Double,
+      shuffle_mb: Double, spill_mb: Double)
+
+  /** The local property that keys a run's jobs to (query, iteration). */
+  private val KeyProperty = "graft.bench.run"
+
+  private final case class Run(key: String, wall: Double, build: Double,
+      fromMs: Long, toMs: Long)
+
+  private final class Counts {
+    var jobs, stages, tasks, taskMs, shuffleBytes, spillBytes = 0L
+  }
+
+  /** Times query runs and records their layers: one SparkListener counts
+    * the jobs of each run (keyed by [[KeyProperty]], so no drain is needed
+    * per run) and one QueryExecutionListener takes planning time from
+    * each execution's tracker (matched to the run whose action window
+    * holds it). Registers itself on `spark`; [[close]] unregisters. */
+  final class Meter(spark: SparkSession) extends SparkListener
+      with QueryExecutionListener with AutoCloseable {
+    /** Query name -> why it failed; a failed query keeps no timing. */
+    val failed = mutable.LinkedHashMap.empty[String, String]
+    private val runs = mutable.LinkedHashMap.empty[String, Vector[Run]]
+    private val counts = new ConcurrentHashMap[String, Counts]()
+    private val stageKey = new ConcurrentHashMap[Int, String]()
+    // (first planning phase start, planning ms) of each SQL execution
+    private val plans = new ConcurrentLinkedQueue[(Long, Long)]()
+
+    spark.sparkContext.addSparkListener(this)
+    spark.listenerManager.register(this)
+
+    /** Runs `query` (build, then `count()`) `n` more times under `name`;
+      * the first run that throws moves `name` to [[failed]]. */
+    def time(name: String, n: Int)(query: => DataFrame): Unit = {
+      val sc = spark.sparkContext
+      var i = 0
+      while (i < n && !failed.contains(name)) {
+        val prior = runs.getOrElse(name, Vector.empty)
+        val key = s"$name#${prior.size}"
+        sc.setLocalProperty(KeyProperty, key)
+        try {
+          val t0 = System.nanoTime()
+          val df = query
+          val t1 = System.nanoTime()
+          val fromMs = System.currentTimeMillis()
+          df.count()
+          val toMs = System.currentTimeMillis()
+          runs(name) = prior :+ Run(key, (System.nanoTime() - t0) / 1e9,
+            (t1 - t0) / 1e9, fromMs, toMs)
+        } catch { case NonFatal(e) => fail(name, "run", e) }
+        finally sc.setLocalProperty(KeyProperty, null)
+        i += 1
+      }
     }
-    val loadAfter = loadavg()
-    val results0 = timed.map { case (n, mn, _, _, _) => n -> mn }
-    val medians = timed.map { case (n, _, md, _, _) => n -> md }
-    val spreads = timed.map { case (n, _, _, sp, _) => n -> sp }
-    val loadQ = timed.map { case (n, _, _, _, la) => n -> la }
-    // Per-query oracle ratios (the r7 verdict's #1 ask): when a DuckDB
-    // timing artifact from tools/bench_oracle.py is present, fold it into
-    // the durable BENCH_FULL.json as {"oracle_s", "ratio"} plus the
-    // violation list OracleRatioSpec gates on. The stdout one-line
-    // contract stays compact: only a violation COUNT is appended there.
-    val oracleFile = new java.io.File(
-      sys.env.getOrElse("SPARK_GRAFT_ORACLE_TIMES", "ORACLE_TIMES.json"))
-    val oracle: Map[String, Double] =
-      if (!oracleFile.isFile) Map.empty
-      else try {
-        val om = new com.fasterxml.jackson.databind.ObjectMapper()
-        val root = om.readTree(java.nio.file.Files.readString(oracleFile.toPath))
-        val it = root.get("oracle_s").fields()
-        val b = Map.newBuilder[String, Double]
-        while (it.hasNext) {
-          val e = it.next()
-          if (e.getValue.isNumber) b += e.getKey -> e.getValue.asDouble()
+
+    def fail(name: String, stage: String, e: Throwable): Unit = {
+      val msg = s"$stage: ${e.getClass.getName}: " +
+        String.valueOf(e.getMessage).linesIterator.nextOption().getOrElse("")
+      System.err.println(s"[bench] $name FAILED $msg")
+      failed(name) = msg.take(500)
+      runs.remove(name)
+    }
+
+    /** Queries with timings, in the order they were first run. */
+    def timed: Seq[String] = runs.keys.toSeq
+    /** Wall seconds of each run of `name`, in run order. */
+    def walls(name: String): Seq[Double] = runs(name).map(_.wall)
+
+    /** Waits until every listener event so far is delivered. */
+    def drain(): Unit = Bridge.drainListeners(spark.sparkContext)
+
+    /** The layers of `name`'s fastest run; complete after [[drain]]. */
+    def layers(name: String): Layers = {
+      val r = runs(name).minBy(_.wall)
+      val plan = plans.asScala.collect {
+        case (at, ms) if at >= r.fromMs && at <= r.toMs => ms
+      }.sum / 1e3
+      val c = Option(counts.get(r.key)).getOrElse(new Counts)
+      c.synchronized {
+        Layers(r4(r.build), r4(plan), r4(math.max(0.0, r.wall - r.build - plan)),
+          c.jobs, c.stages, c.tasks, r4(c.taskMs / 1e3),
+          r4(c.shuffleBytes / 1048576.0), r4(c.spillBytes / 1048576.0))
+      }
+    }
+
+    private def count(key: String)(f: Counts => Unit): Unit =
+      if (key != null) {
+        val c = counts.computeIfAbsent(key, _ => new Counts)
+        c.synchronized(f(c))
+      }
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      val key = Option(e.properties).map(_.getProperty(KeyProperty)).orNull
+      if (key != null) e.stageIds.foreach(stageKey.put(_, key))
+      count(key)(_.jobs += 1)
+    }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      count(stageKey.get(e.stageInfo.stageId))(_.stages += 1)
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      count(stageKey.get(e.stageId)) { c =>
+        c.tasks += 1
+        val m = e.taskMetrics
+        if (m != null) {
+          c.taskMs += m.executorRunTime
+          c.shuffleBytes += m.shuffleWriteMetrics.bytesWritten
+          c.spillBytes += m.diskBytesSpilled
         }
-        b.result()
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] bad $oracleFile: ${e.getMessage}")
-        Map.empty
       }
-    def violationsOf(mins: Seq[(String, Double)]): Seq[String] =
-      mins.collect {
-        case (k, v) if v > RatioGateMinSparkS &&
-          oracle.get(k).exists(o => o > 0 && v / o > RatioGateMax) &&
-          !RatioExemptions.contains(k) => k
-      }
-    // Second-chance pass (r10 verdict ask #1 — self-exonerating ratio
-    // gate): three consecutive rounds needed a judge re-bench to dismiss
-    // host-contention false positives (r10: q144 36.2s→1.3s quiet). A
-    // multi-minute contention window can swallow all `iters` back-to-back
-    // iterations of adjacent queries, so min-of-N alone doesn't save
-    // them. Re-run each would-be violator up to 2 more times AFTER the
-    // full loop (time-separated from its contention window, plus an
-    // explicit pause), fold the new minimum in, and record the recheck
-    // times so the artifact itself distinguishes "was noise" (recheck
-    // clears the gate) from "really slow" (recheck confirms).
-    val prelim = violationsOf(results0)
-    // Spread-triggered recheck (r12 verdict ask #5): a committed number
-    // with iteration spread > 2.0 was measured under live contention
-    // (r12's q158: best 3.4s against a 5.3s median under loadavg ~2.1)
-    // and several 1.3-1.6x apparent regressions were pure noise. Every
-    // such query gets time-separated extra iterations alongside the
-    // ratio violators, so BENCH_FULL commits either spread <= 2 or an
-    // explicit recheck entry - a regression claim is then always
-    // adjudicable from the artifact alone.
-    val noisy = spreads.collect { case (n, sp) if sp > 2.0 => n }
-    val toRecheck = (prelim ++ noisy).distinct
-    val rechecked: Map[String, Double] =
-      if (toRecheck.isEmpty || nameFilter.nonEmpty) Map.empty
-      else {
-        Thread.sleep(15000) // step out of a still-live contention window
-        val fnByName = picked.toMap
-        toRecheck.map { name =>
-          val fn = fnByName(name)
-          val o = oracle.getOrElse(name, Double.MaxValue)
-          val prior = results0.toMap.getOrElse(name, Double.MaxValue)
-          var best = Double.MaxValue
-          var i = 0
-          // ratio violators iterate until the gate clears (up to 4 extra
-          // runs - a query straddling the 2s line by centiseconds under
-          // residual load needs more min-of-N convergence than the
-          // original 2, which r13's q191 2.01s flake proved); spread-only
-          // entries until the re-measurement confirms the committed min
-          // (within 10%), at most 2
-          val maxExtra = if (prelim.contains(name)) 4 else 2
-          while (i < maxExtra && !(best <= RatioGateMinSparkS ||
-              best / o <= RatioGateMax || best <= prior * 1.1)) {
-            val t0 = System.nanoTime()
-            try { fn(spark, sfDir).count() } catch { case _: Throwable => }
-            best = math.min(best, (System.nanoTime() - t0) / 1e9)
-            i += 1
-          }
-          releaseBlocks()
-          name -> best
-        }.toMap
-      }
-    val results = results0.map { case (k, v) =>
-      k -> math.min(v, rechecked.getOrElse(k, v)) }
-    // 4-decimal seconds keep the one-line contract compact (the driver's
-    // stdout capture is tail-truncated; a full-precision 101-query map
-    // overflowed it in r5 and lost q01–q37)
-    val qs = results.map { case (k, v) => "\"" + k + f"""":$v%.4f""" }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    val ratios = results.flatMap { case (k, v) =>
-      oracle.get(k).filter(_ > 0).map(o => k -> v / o)
-    }.toMap
-    val violations = violationsOf(results)
-    val extra =
-      if (oracle.isEmpty) {
-        // no oracle artifact: spread-triggered recheck entries still
-        // belong in the durable record
-        if (rechecked.isEmpty) ""
-        else s""","rechecked":${rechecked.toSeq.sortBy(_._1).map { case (k, v) =>
-          "\"" + k + f"""":$v%.4f""" }.mkString("{", ",", "}")}"""
-      }
-      else {
-        val os = results.flatMap { case (k, _) =>
-          oracle.get(k).map(o => "\"" + k + f"""":$o%.4f""") }
-          .mkString("{", ",", "}")
-        val rs = results.flatMap { case (k, _) =>
-          ratios.get(k).map(r => "\"" + k + f"""":$r%.4f""") }
-          .mkString("{", ",", "}")
-        val vs = violations.map("\"" + _ + "\"").mkString("[", ",", "]")
-        val rc = rechecked.toSeq.sortBy(_._1).map { case (k, v) =>
-          "\"" + k + f"""":$v%.4f""" }.mkString("{", ",", "}")
-        s""","oracle_s":$os,"ratio":$rs,"ratio_violations":$vs,"rechecked":$rc"""
-      }
-    // durable artifact: same JSON, written to the repo tree so each round's
-    // full per-query map survives even if the captured stdout is truncated.
-    // FILTERED local-iteration runs print only — a subset must never
-    // overwrite the full-set artifact.
-    val sps = spreads.map { case (k, v) => "\"" + k + f"""":$v%.2f""" }
-      .mkString("{", ",", "}")
-    // min drives the headline (steady-state throughput); median makes a
-    // persistently-noisy host attributable from the artifact alone: an
-    // isolated min-vs-r(N-1) regression with median ~ min is a real plan
-    // change, min << median across the board is contention.
-    val mds = medians.map { case (k, v) => "\"" + k + f"""":$v%.4f""" }
-      .mkString("{", ",", "}")
-    val lqs = loadQ.map { case (k, v) => "\"" + k + f"""":$v%.2f""" }
-      .mkString("{", ",", "}")
-    val conditions =
-      f""","loadavg_before":$loadBefore%.2f,"loadavg_after":$loadAfter%.2f""" +
-        s""","iters":$iters,"spread":$sps,"median":$mds,"loadavg_q":$lqs"""
-    // SPARK_GRAFT_BENCH_OUT (r16 verdict "what's wrong" #2): the driver's
-    // own runs (e.g. the 8-core scaling pass) overwrite the committed
-    // artifact in the working tree; an env override lets side runs land
-    // elsewhere. The artifact now also records its own cpu count so a
-    // low-core run can never be misread as a 32-core regression.
-    val outFile = new java.io.File(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json"))
-      .getAbsoluteFile
+
+    override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+      planned(qe)
+    override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+      planned(qe)
+    private def planned(qe: QueryExecution): Unit = {
+      val ps = qe.tracker.phases.values
+      if (ps.nonEmpty)
+        plans.add((ps.map(_.startTimeMs).min, ps.map(_.durationMs).sum))
+    }
+
+    def close(): Unit = {
+      spark.sparkContext.removeSparkListener(this)
+      spark.listenerManager.unregister(this)
+    }
+  }
+
+  private def r4(x: Double): Double = math.rint(x * 1e4) / 1e4
+  private def spread(ws: Seq[Double]): Double =
+    if (ws.min > 0) ws.max / ws.min else 1.0
+  // true median: even lengths average the two middle runs
+  private def median(ws: Seq[Double]): Double = {
+    val s = ws.sorted
+    if (s.length % 2 == 1) s(s.length / 2)
+    else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
+  }
+
+  private def loadavg(): Double =
+    try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
+      .split(" ")(0).toDouble
+    catch { case NonFatal(_) => -1.0 }
+
+  /** DuckDB time per query from tools/bench_oracle.py, when present. */
+  private def readOracle(f: File): Map[String, Double] =
+    if (!f.isFile) Map.empty
+    else new ObjectMapper().readTree(f).get("oracle_s").properties().asScala
+      .collect { case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble() }
+      .toMap
+
+  private def violationsOf(mins: Seq[(String, Double)],
+      oracle: Map[String, Double]): Seq[String] =
+    mins.collect {
+      case (k, v) if v > RatioGateMinSparkS &&
+        oracle.get(k).exists(o => o > 0 && v / o > RatioGateMax) &&
+        !RatioExemptions.contains(k) => k
+    }
+
+  /** The durable record and the stdout line of a finished, drained run.
+    * The query map is the fastest run of each query (rechecks included);
+    * median and spread are over the first `iters` runs; `loadavg_q` is the
+    * host load at each query's end, so uniform spread under high load
+    * reads as noise and an isolated slowdown as a plan change. */
+  def report(env: Env, meter: Meter, oracle: Map[String, Double],
+      load: (Double, Double), loadQ: Map[String, Double]): (String, String) = {
+    val names = meter.timed
+    def perQuery[T](f: String => T): ListMap[String, T] =
+      ListMap.from(names.map(n => n -> f(n)))
+    val mins = names.map(n => n -> meter.walls(n).min)
+    val total = mins.map(_._2).sum
+    val head = ListMap[String, Any]("metric" -> "total", "value" -> r4(total),
+      "unit" -> "sec", "queries" -> ListMap.from(mins.map(kv => kv._1 -> r4(kv._2))),
+      "sf" -> env.sfDir, "cpus" -> env.cpus,
+      "file" -> env.outFile.fold("")(_.toString))
+    val violations = violationsOf(mins, oracle)
+    val tail = ListMap[String, Any]() ++
+      (if (oracle.isEmpty) Nil else Seq("ratio_violations" -> violations.size)) ++
+      (if (meter.failed.isEmpty) Nil else Seq("failed_n" -> meter.failed.size))
+    val rechecked = ListMap.from(names.flatMap(n =>
+      meter.walls(n).drop(env.iters).minOption.map(v => n -> r4(v))))
+    val oracleFields =
+      if (oracle.isEmpty) Nil
+      else Seq(
+        "oracle_s" -> ListMap.from(names.flatMap(n => oracle.get(n).map(n -> _))),
+        "ratio" -> ListMap.from(mins.flatMap { case (n, v) =>
+          oracle.get(n).filter(_ > 0).map(o => n -> r4(v / o)) }),
+        "ratio_violations" -> violations)
+    val artifact = head ++ ListMap[String, Any](
+      "loadavg_before" -> r4(load._1), "loadavg_after" -> r4(load._2),
+      "iters" -> env.iters,
+      "spread" -> perQuery(n => r4(spread(meter.walls(n).take(env.iters)))),
+      "median" -> perQuery(n => r4(median(meter.walls(n).take(env.iters)))),
+      "loadavg_q" -> perQuery(n => r4(loadQ.getOrElse(n, -1.0))),
+      "layers" -> perQuery(meter.layers),
+      "failed" -> meter.failed,
+      "rechecked" -> rechecked) ++ oracleFields
+    val json = new ObjectMapper().registerModule(DefaultScalaModule)
+    // print the whole line only while it fits the budget; past that, the
+    // same line without the per-query map (it lives in the artifact), so
+    // the captured tail always holds one complete JSON object
+    val full = json.writeValueAsString(head ++ tail)
     val line =
-      f"""{"metric":"total","value":$total%.4f,"unit":"sec","queries":$qs,"sf":"$sfDir","cpus":$cpus,"file":"$outFile""""
-    val stdoutTail =
-      if (oracle.isEmpty) "}" else s""","ratio_violations":${violations.size}}"""
-    if (nameFilter.isEmpty)
-      try java.nio.file.Files.writeString(
-        outFile.toPath, line + conditions + extra + "}\n")
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] could not write $outFile: ${e.getMessage}") }
-    // Driver stdout-capture contract (r16 verdict ask #2): the driver keeps
-    // only a 2000-char TAIL of stdout. At 229 queries the per-query map is
-    // ~7 kB, so the line's leading `{` has fallen outside the capture window
-    // since r12 and every PERF artifact since then parsed null. Print the
-    // full one-line JSON only while it fits the tail budget; past that,
-    // print the same line WITHOUT the per-query map — the map lives at full
-    // precision in BENCH_FULL.json (the "file" field) — so the captured tail
-    // always contains one complete, parseable JSON object.
-    val fullLine = line + stdoutTail
-    val budget =
-      sys.env.getOrElse("SPARK_GRAFT_STDOUT_BUDGET", "1800").toInt
-    if (fullLine.length <= budget) println(fullLine)
-    else println(
-      f"""{"metric":"total","value":$total%.4f,"unit":"sec","sf":"$sfDir","cpus":$cpus,"queries_n":${results.size},"file":"$outFile"""" +
-        stdoutTail)
+      if (full.length <= env.stdoutBudget) full
+      else json.writeValueAsString(
+        (head - "queries") + ("queries_n" -> names.size) ++ tail)
+    (json.writerWithDefaultPrettyPrinter().writeValueAsString(artifact), line)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val env = Env(sys.env)
+    val oracle = readOracle(env.oracleFile)
+    val picked = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter(kv => env.filter.forall(_.findFirstIn(kv._1).isDefined))
+    val spark = session(env.cpus)
+    val meter = new Meter(spark)
+    warm(spark, meter, env.sfDir, env.warmDir, picked)
+    // C2 tiers generated loops up only after real iteration counts, so each
+    // query runs `iters` times at the measured scale and the fastest counts
+    // (q55 measured 1.43 s single shot vs 0.73 s steady)
+    val loadBefore = loadavg()
+    val loadQ = picked.flatMap { case (name, fn) =>
+      meter.time(name, env.iters)(fn(spark, env.sfDir))
+      releaseBlocks(spark)
+      if (meter.failed.contains(name)) None else Some(name -> loadavg())
+    }.toMap
+    val loadAfter = loadavg()
+    // Second chance: a contention window can swallow all `iters` runs of
+    // adjacent queries. After a pause, ratio violators re-run until the gate
+    // clears (at most 4 more runs) and queries with spread > 2 until a run
+    // comes within 10% of their best (at most 2), so the artifact's
+    // `rechecked` map tells noise from a real slowdown.
+    val prelim = violationsOf(meter.timed.map(n => n -> meter.walls(n).min), oracle)
+    val noisy = meter.timed.filter(n => spread(meter.walls(n)) > 2.0)
+    val toRecheck = (prelim ++ noisy).distinct
+    if (toRecheck.nonEmpty && env.filter.isEmpty) {
+      Thread.sleep(15000)
+      val fnByName = picked.toMap
+      toRecheck.foreach { name =>
+        val o = oracle.getOrElse(name, Double.MaxValue)
+        val prior = meter.walls(name).min
+        val maxExtra = if (prelim.contains(name)) 4 else 2
+        def best = meter.walls(name).drop(env.iters).minOption
+          .getOrElse(Double.MaxValue)
+        var i = 0
+        while (i < maxExtra && !meter.failed.contains(name) &&
+            !(best <= RatioGateMinSparkS || best / o <= RatioGateMax ||
+              best <= prior * 1.1)) {
+          meter.time(name, 1)(fnByName(name)(spark, env.sfDir))
+          i += 1
+        }
+        releaseBlocks(spark)
+      }
+    }
+    meter.drain()
+    val (artifact, line) = report(env, meter, oracle, (loadBefore, loadAfter), loadQ)
+    env.outFile.foreach(f => java.nio.file.Files.writeString(f.toPath, artifact + "\n"))
+    if (env.filter.nonEmpty) meter.timed.foreach { n =>
+      val l = meter.layers(n)
+      println(f"$n%-28s wall_s=${meter.walls(n).min}%.4f " + l.productElementNames
+        .zip(l.productIterator).map { case (k, v) => s"$k=$v" }.mkString(" "))
+    }
+    println(line)
+    meter.close()
     spark.stop()
+    if (meter.failed.nonEmpty) sys.exit(1) // each failure was logged as it happened
   }
 
   /** The ratio gate (BENCH_FULL + OracleRatioSpec): a query fails when it

@@ -12,6 +12,8 @@ object Verify {
     def keep(name: String): Boolean =
       nameFilter.forall(_.findFirstIn(name).isDefined)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // own session, not Bench.session: correctness runs untuned, on
+    // Spark's defaults
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -685,6 +685,12 @@ final class KafkaRoutedWriter(bootstrapHost: String, bootstrapPort: Int,
   private def produceChunk(partition: Int,
       records: Seq[Record], baseTimestamp: Long): Long = {
     val batch = encodeBatch(records, baseTimestamp = baseTimestamp)
+    // sent counts the chunk once, in confirmed's unit (batch bytes), however
+    // many leader retries it takes
+    prom.foreach { p =>
+      p.emitMessagesSent(records.size.toLong)
+      p.emitBytesSent(batch.length.toLong)
+    }
     var attempt = 0
     while (true) {
       attempt += 1
@@ -730,21 +736,13 @@ final class KafkaRoutedWriter(bootstrapHost: String, bootstrapPort: Int,
     * partition order (librdkafka's per-partition queue shape). Returns
     * (partition → base offset). */
   def sendPartitioned(records: Seq[(Array[Byte], Array[Byte])],
-      baseTimestamp: Long = 0L): Map[Int, Long] = {
-    prom.foreach { p =>
-      p.emitMessagesSent(records.size.toLong)
-      p.emitBytesSent(records.iterator.map { case (k, v) =>
-        (if (k == null) 0 else k.length) +
-          (if (v == null) 0 else v.length)
-      }.sum.toLong)
-    }
+      baseTimestamp: Long = 0L): Map[Int, Long] =
     records.groupBy { case (k, _) =>
       if (k == null) 0 else partitionFor(k, meta.numPartitions)
     }.toSeq.sortBy(_._1).map { case (p, rs) =>
       p -> produceTo(p, rs.map { case (k, v) => Record(k, v) },
         baseTimestamp)
     }.toMap
-  }
 
   def close(): Unit = conns.values.foreach(_.close())
 }

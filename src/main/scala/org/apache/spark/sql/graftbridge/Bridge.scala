@@ -18,4 +18,10 @@ object Bridge {
       : org.apache.spark.sql.catalyst.analysis.FunctionRegistry =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
+
+  /** Blocks until the listener bus has delivered every queued event
+    * (`listenerBus` is private[spark]); counters read from a listener are
+    * complete only after this. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

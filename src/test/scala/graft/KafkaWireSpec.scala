@@ -287,4 +287,30 @@ class KafkaWireSpec extends AnyFunSuite {
       } finally w.close()
     } finally cluster.close()
   }
+
+  test("routed writer: sent equals confirmed across a leader reassignment " +
+      "(messages and batch bytes, one count per chunk despite retries)") {
+    val cluster = new MockKafkaCluster(numBrokers = 2, numPartitions = 2)
+    val prom = new graft.streaming.Prometheus()
+    def v(name: String): Long = prom.render().linesIterator
+      .find(_.startsWith(name + " ")).get.stripPrefix(name + " ").toLong
+    try {
+      val w = new KafkaRoutedWriter("127.0.0.1", cluster.brokers(0).port,
+        "acked", prom = Some(prom))
+      try {
+        def batch(tag: String) = (0 until 20).map(i =>
+          (s"key-$i".getBytes(UTF_8), s"$tag-$i".getBytes(UTF_8)))
+        w.sendPartitioned(batch("a"))
+        // both partitions change leader: the next send hits NOT_LEADER on
+        // each, refreshes metadata and retries on the new leader
+        cluster.reassignLeader(0, 1)
+        cluster.reassignLeader(1, 0)
+        w.sendPartitioned(batch("b"))
+        w.sendPartitioned(batch("c"))
+      } finally w.close()
+      assert(cluster.records.size == 60)
+      assert(v("messages_sent") == 60 && v("messages_confirmed") == 60)
+      assert(v("bytes_sent") > 0 && v("bytes_sent") == v("bytes_confirmed"))
+    } finally cluster.close()
+  }
 }

@@ -13,9 +13,10 @@ import org.apache.spark.sql.execution.ExplainMode
   * diff-able number instead of a slow bench three rounds later.
   *
   * Budgets are the CURRENT measured counts (static plan nodes, reused
-  * subtrees included; regenerate with `Test/runMain
-  * graft.tools.PrintShuffles`), not aspirations: tightening one is a win
-  * worth a commit; loosening one needs a written scale argument. Coverage
+  * subtrees included; `GRAFT_CONF=graft.spreadLocal=false sbt "runMain
+  * graft.Explain"` prints each in its query's header), not aspirations:
+  * tightening one is a win worth a commit; loosening one needs a written
+  * scale argument. Coverage
   * is TOTAL by construction - the completeness test fails on any
   * SparkEntry.queries key without a budget row (the r6 lesson: q133-q135
   * merged without one and a 6x replan shipped), and on any stale row.

@@ -18,6 +18,8 @@ object CompactSoak {
     val batchSize = args.lift(1).map(_.toInt).getOrElse(200)
     val buckets = args.lift(2).map(_.toInt).getOrElse(16)
     val wh = java.nio.file.Files.createTempDirectory("cps_wh").toString
+    // own session, not Bench.session: spark.sql.warehouse.dir (a fresh temp
+    // dir per run) is a static conf, fixed when the session is created
     val spark = SparkSession.builder()
       .master("local[8]")
       .config("spark.sql.shuffle.partitions", "16")

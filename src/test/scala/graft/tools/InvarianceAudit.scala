@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Determinism-under-partitioning audit: every SparkEntry query must
   * produce the SAME result set regardless of `spark.sql.shuffle.partitions`
@@ -38,13 +38,7 @@ object InvarianceAudit {
     // -> full audit; the filter is for iterating on one query locally)
     val nameFilter = args.lift(2).map(_.r)
     def keep(n: String) = nameFilter.forall(_.findFirstIn(n).isDefined)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", parts.head.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.session(8)
     spark.sparkContext.setLogLevel("ERROR")
     graft.queries.CdcOps.ensureDsv2Feed(spark, sf)
     var bad = 0

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off stage profiler for q143 (IVF increment): separates the index
@@ -10,13 +9,7 @@ import org.apache.spark.sql.functions._
 object IvfProbe {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.session()
     spark.sparkContext.setLogLevel("ERROR")
     val e = graft.core.Tables.load(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding"))

@@ -127,6 +127,8 @@ object NearDupSoak {
     val nBatches = args.lift(1).map(_.toInt).getOrElse(10)
     val mode = args.lift(2).getOrElse("state")
     val simTau = args.lift(3).map(_.toDouble).getOrElse(0.5)
+    // own session, not Bench.session: spark.sql.warehouse.dir (a fresh temp
+    // dir per run) is a static conf, fixed when the session is created
     implicit val spark: SparkSession = SparkSession.builder()
       .master("local[8]")
       .config("spark.sql.shuffle.partitions", "32")

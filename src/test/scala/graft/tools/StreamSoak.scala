@@ -24,14 +24,10 @@ object StreamSoak {
   def main(args: Array[String]): Unit = {
     val nTxns = args.headOption.map(_.toInt).getOrElse(250000)
     val nBatches = args.lift(1).map(_.toInt).getOrElse(10)
-    implicit val spark: SparkSession = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    implicit val spark: SparkSession = graft.Bench.session(8)
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     spark.sparkContext.setLogLevel("ERROR")

@@ -38,6 +38,8 @@ object VecDupSoak {
     val k = args.lift(5).map(_.toInt).getOrElse(8)
     val minSeed = args.lift(6).map(_.toLong).getOrElse(0L)
     val adcServe = args.lift(7).exists(_.toBoolean)
+    // own session, not Bench.session: spark.sql.warehouse.dir (a fresh temp
+    // dir per run) is a static conf, fixed when the session is created
     implicit val spark: SparkSession = SparkSession.builder()
       .master("local[8]")
       .config("spark.sql.shuffle.partitions", "32")

@@ -1,17 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Ad-hoc probe: weighted-LSH build vs match cost split at a given SF. */
 object WeightedProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = graft.core.Tables.tune(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
+    val spark = graft.Bench.session()
     spark.sparkContext.setLogLevel("ERROR")
     val docs = graft.core.Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
