@@ -110,8 +110,9 @@ object Bench {
     * dropped references; left alone, a checkpoint-heavy query squeezes
     * storage memory for every query after it (q186 once slowed q19-q48
     * 3-15x). `clearCache()` unpersists every CacheManager entry, so a
-    * cross-query memo must use localCheckpoint plus a driver reference, as
-    * the BPE vocab memo does, to survive this step. */
+    * cross-query frame survives this step only as a localCheckpointed
+    * session-scope `core.SessionMemo` entry, whose driver reference keeps
+    * its blocks. */
   def releaseBlocks(spark: SparkSession): Unit = {
     spark.sharedState.cacheManager.clearCache()
     System.gc()

@@ -14,28 +14,13 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Plan memo for [[load]]: spark.read.parquet resolves the schema
-    * EAGERLY — a driver-side file listing + footer read measured at
-    * ~55-70 ms per call (LoadProbe, r16) — and the bench makes 1000+
-    * load calls inside its timed loop (229 queries × iterations × 1-3
-    * tables each), so re-inferring per call charged tens of driver
-    * seconds to query time. Production at 100 TB never re-infers
-    * either: schemas come from a metastore/catalog; this memo is that
-    * catalog. It caches the ANALYZED PLAN ONLY — every action still
-    * scans the parquet inputs (no results, no data blocks are held),
-    * so bench/oracle invocations keep computing from disk. Keyed by
-    * session REFERENCE like TextOps.suffixCache, with stopped-session
-    * eviction; the testdata dirs are immutable by the driver contract,
-    * so a cached file listing cannot go stale. */
-  private val loadCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, String), DataFrame]()
-
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    loadCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    loadCache.computeIfAbsent((spark, dir, name),
-      _ => doLoad(spark, dir, name))
-  }
+  /** The table's DataFrame. `spark.read.parquet` resolves the schema
+    * eagerly (a driver-side file listing and footer read, tens of ms per
+    * call), so the analyzed plan is memoized per session, as a metastore
+    * would serve it: every action still scans the parquet inputs, and the
+    * testdata dirs are immutable, so a memoized listing cannot go stale. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    SessionMemo.session(spark, s"load $dir/$name")(doLoad(spark, dir, name))
 
   private def doLoad(spark: SparkSession, dir: String,
       name: String): DataFrame = {
@@ -146,6 +131,22 @@ object Tables {
       .format("parquet")
       .saveAsTable(table)
 
+  /** The bucket count of a table written by [[writeBucketed]]. It is the
+    * table's property, read from the catalog, so an append or a rewrite
+    * can never fork the spec; an unbucketed table is an error. */
+  def bucketsOf(spark: SparkSession, table: String): Int =
+    spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
+      .bucketSpec.map(_.numBuckets)
+      .getOrElse(throw new IllegalStateException(s"$table is not bucketed"))
+
+  /** The warehouse name of a persistent index built per corpus dir:
+    * `prefix` carries the index family and its logic version (bump it
+    * when the index semantics change, or a stale index from an older
+    * revision satisfies the build-if-missing check). */
+  def dirKeyed(prefix: String, dir: String): String =
+    prefix + dir.replaceAll("[^a-zA-Z0-9]", "_")
+
   /** Bucket-preserving compaction of a bucketed table: coalesce the
     * per-append file accumulation (each [[appendBucketed]] writes
     * `buckets` new files) down to one file per bucket and drop rows
@@ -163,10 +164,7 @@ object Tables {
   def compactBucketed(spark: SparkSession, table: String, key: String,
       dedupKeys: Seq[String],
       rewrite: DataFrame => DataFrame = identity): Unit = {
-    val buckets = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets)
-      .getOrElse(throw new IllegalStateException(s"$table is not bucketed"))
+    val buckets = bucketsOf(spark, table)
     val tmp = s"${table}__compact"
     dropTableFast(spark, tmp)
     writeBucketed(rewrite(spark.table(table).dropDuplicates(dedupKeys)),

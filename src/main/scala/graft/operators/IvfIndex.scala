@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{SessionMemo, Tables}
 
 /** Persistent IVF (inverted-file) ANN index — the INCREMENTAL path for a
   * growing embedding corpus, the vector-side twin of [[LshIndex]]. The
@@ -29,45 +29,15 @@ object IvfIndex {
 
   private val cosine = graft.functions.Expressions.cosineSim _
 
-  /** Per-warehouse cache of the packed 1-row centroid frame: the _cents
-    * table is a dimension artifact (k·d values) read by EVERY
-    * matchIncrement/append/cellOf composition — re-scanning it is a whole
-    * Spark job per call, pure fixed cost (q143's remaining floor was
-    * catalog-read + this scan). Keyed by warehouse dir + index name so
-    * session CLONES under foreachBatch share one entry; [[write]] is the
-    * only centroid mutation and replaces the entry, so staleness is
-    * impossible within the JVM ([[compact]] never touches centroids). */
-  private val centsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.Row]()
-
-  private def cacheKey(spark: SparkSession, name: String): String =
-    spark.conf.get("spark.sql.warehouse.dir") + "#" + name
-
-  /** The packed centroid ROW for `name` (cache read-through — see
-    * [[centsFrame]]). */
-  private def centsRow(spark: SparkSession,
-      name: String): org.apache.spark.sql.Row = {
-    val key = cacheKey(spark, name)
-    var row = centsCache.get(key)
-    if (row == null) {
-      row = spark.table(s"${name}_cents").collect().head
-      centsCache.put(key, row)
-    }
-    row
-  }
-
-  /** The packed 1-row centroid frame for `name`, served from the JVM
-    * cache when [[write]] ran in this process, else read-through from the
-    * persisted `<name>_cents` table. Composition surface for callers that
-    * need the broadcast cents row (the streaming ingest's in-batch
-    * pairing). */
-  private[graft] def centsFrame(spark: SparkSession, name: String): DataFrame = {
-    val row = centsRow(spark, name)
-    spark.createDataFrame(
-      java.util.Collections.singletonList(row),
-      row.asInstanceOf[org.apache.spark.sql.catalyst.expressions
-        .GenericRowWithSchema].schema)
-  }
+  /** The packed 1-row centroid frame for `name`: a warehouse-scope
+    * [[SessionMemo]] row (re-scanning the `_cents` table would be a whole
+    * Spark job per matchIncrement/append/cellOf composition, pure fixed
+    * cost), put by [[write]], read through from the table otherwise, and
+    * never served once the table is dropped. Composition surface for
+    * callers that need the broadcast cents row (the streaming ingest's
+    * in-batch pairing). */
+  private[graft] def centsFrame(spark: SparkSession, name: String): DataFrame =
+    SessionMemo.frame(spark, s"${name}_cents")
 
   /** The frozen coarse-centroid vec_ids, extracted from the cached packed
     * row (no extra job) — the PQ codebook's seed EXCLUSION set: a coarse
@@ -76,7 +46,7 @@ object IvfIndex {
     * every code to cluster 0 (the degenerate-seed trap pqAttach
     * documents; at k > 8 the old `vec_id >= 8` rule silently hit it). */
   private[graft] def centIds(spark: SparkSession, name: String): Seq[Long] =
-    centsRow(spark, name).getSeq[org.apache.spark.sql.Row](0)
+    SessionMemo.row(spark, s"${name}_cents").getSeq[org.apache.spark.sql.Row](0)
       .map(_.getLong(0))
 
   /** The k ≈ √N sizing rule: with k cells over N vectors, a probe scans
@@ -187,9 +157,7 @@ object IvfIndex {
     // (a dimension artifact) reach the driver
     var it = 0
     while (it < refineIters) {
-      val cur = spark.createDataFrame(
-        java.util.Collections.singletonList(
-          packRow(cents): org.apache.spark.sql.Row), centsSchema(embType))
+      val cur = SessionMemo.oneRow(spark, packRow(cents))
       val updated = vectors
         .crossJoin(broadcast(cur))
         .select(bestCell(col("embedding")).as("cell"),
@@ -214,10 +182,7 @@ object IvfIndex {
       it += 1
     }
     val packed = packRow(cents)
-    val centsLocal = spark.createDataFrame(
-      java.util.Collections.singletonList(packed: org.apache.spark.sql.Row),
-      packed.schema)
-    centsCache.put(cacheKey(spark, name), packed)
+    val centsLocal = SessionMemo.oneRow(spark, packed)
     // repartition on the BUCKET key: the bucket id is pmod(murmur3(cell),
     // buckets) — the same hash family repartition uses — so each write
     // task holds exactly one bucket's rows and emits exactly one file
@@ -239,6 +204,7 @@ object IvfIndex {
       centsLocal.write.saveAsTable(s"${name}_cents"))
     Tables.writeBucketed(assigned, s"${name}_cells", "cell", buckets)
     Await.result(centsWrite, Duration.Inf)
+    SessionMemo.put(spark, s"${name}_cents", packed)
   }
 
   /** Append an increment's vectors to an existing index — the streaming
@@ -255,13 +221,7 @@ object IvfIndex {
     * append can never leave the codes table silently incomplete. */
   def append(spark: SparkSession, vectors: DataFrame, name: String,
       keepPq: Boolean = false): Unit = {
-    // the bucket count is the TABLE's property — read it from the catalog
-    // so appends can never fork the spec (the LshIndex.append rule)
-    val buckets = spark.sessionState.catalog
-      .getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(s"${name}_cells"))
-      .bucketSpec.map(_.numBuckets)
-      .getOrElse(throw new IllegalStateException(s"${name}_cells is not bucketed"))
+    val buckets = Tables.bucketsOf(spark, s"${name}_cells")
     val assigned = vectors
       .crossJoin(broadcast(centsFrame(spark, name)))
       .select(bestCell(col("embedding")).as("cell"), col("vec_id"),
@@ -454,10 +414,7 @@ object IvfIndex {
       .dropDuplicates("vec_id")
       .write.mode("overwrite").parquet(tmp.getAbsolutePath)
     val data = spark.read.parquet(tmp.getAbsolutePath)
-    val buckets = spark.sessionState.catalog
-      .getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(s"${name}_cells"))
-      .bucketSpec.map(_.numBuckets).getOrElse(16)
+    val buckets = Tables.bucketsOf(spark, s"${name}_cells")
     val kk = if (k > 0) k else autoK(data.count())
     write(spark, data, name, kk, buckets, refineIters)
     def rm(f: java.io.File): Unit = {

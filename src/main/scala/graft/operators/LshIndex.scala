@@ -75,17 +75,10 @@ object LshIndex {
     * grows. Compaction (many small bucket files → few) is [[write]]'s
     * full refresh, run offline like any layout rewrite. */
   def append(spark: SparkSession, docs: DataFrame, name: String): Unit = {
-    // the bucket count is the TABLE's property, not the caller's choice —
-    // read it from the catalog so appends can never fork the spec
-    def bucketsOf(tbl: String): Int = spark.sessionState.catalog
-      .getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(tbl))
-      .bucketSpec.map(_.numBuckets)
-      .getOrElse(throw new IllegalStateException(s"$tbl is not bucketed"))
     val banded = TextOps.withBands(docs)
       .select("doc_id", "band0", "band1", "shingles").localCheckpoint()
-    val bandB = bucketsOf(s"${name}_bands")
-    val shB = bucketsOf(s"${name}_shingles")
+    val bandB = Tables.bucketsOf(spark, s"${name}_bands")
+    val shB = Tables.bucketsOf(spark, s"${name}_shingles")
     Tables.appendBucketed(
       banded.select(col("doc_id"),
         explode(array(col("band0"), col("band1"))).as("band"))
@@ -197,15 +190,10 @@ object LshIndex {
     * bucket counts from the catalog, reader-cache refresh after). */
   def appendWeighted(spark: SparkSession, docs: DataFrame,
       name: String): Unit = {
-    def bucketsOf(tbl: String): Int = spark.sessionState.catalog
-      .getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(tbl))
-      .bucketSpec.map(_.numBuckets)
-      .getOrElse(throw new IllegalStateException(s"$tbl is not bucketed"))
     val banded = TextOps.withWeightedBands(docs)
       .select("doc_id", "band0", "band1", "tfs", "n_tok").localCheckpoint()
-    val bandB = bucketsOf(s"${name}_bands")
-    val tfB = bucketsOf(s"${name}_tfs")
+    val bandB = Tables.bucketsOf(spark, s"${name}_bands")
+    val tfB = Tables.bucketsOf(spark, s"${name}_tfs")
     Tables.appendBucketed(
       banded.select(col("doc_id"),
         explode(array(col("band0"), col("band1"))).as("band"))

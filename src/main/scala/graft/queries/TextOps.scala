@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{SessionMemo, Tables}
 
 /** Text-analysis + deduplication pack over the `documents` table.
   *
@@ -71,42 +71,27 @@ object TextOps {
   private def spread(df: DataFrame): DataFrame =
     Tables.spread(df, col("doc_id"))
 
+  /** Dir-keyed warehouse name shared by q212 (build) and q191 (match):
+    * the index persists per corpus, so q191's build-if-missing never
+    * reads another SF's tables. Bump the version on any signature-
+    * semantics change. */
+  private def weightedIndexName(dir: String): String =
+    Tables.dirKeyed("wq191_v1_", dir)
+
+  private def suffixKey(dir: String): String = s"suffixRanks $dir"
+
   /** Shared corpus suffix-rank frame (q203 reports it, q204 reads
     * neighbor LCPs off it): Lee et al. 2022 build the suffix array ONCE
     * per corpus and every dedup consumer reads it, so rebuilding the
     * O(N log L) prefix-doubling rounds inside each query would charge an
-    * ingest-time cost to every read. Memoized per (session, dir) — the
-    * q123 BPE-learner discipline exactly: localCheckpointed result
-    * (survives Bench's clearCache hygiene by design), stopped-session
-    * eviction, session keyed by REFERENCE. Reuse costs one scan of the
-    * checkpointed 24-byte (doc_id, p, srank) triples. */
-  private val suffixCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), DataFrame]()
-
-  /** Dir-keyed warehouse name shared by q212 (build) and q191 (match):
-    * the index persists per corpus, so q191's build-if-missing never
-    * reads another SF's tables. Bump the version on any signature-
-    * semantics change — a stale index from an older logic revision
-    * would otherwise satisfy the existence check. */
-  private def weightedIndexName(dir: String): String =
-    "wq191_v1_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
-
-  private def suffixRanks(s: SparkSession, dir: String): DataFrame = {
-    suffixCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    suffixCache.computeIfAbsent((s, dir), _ =>
+    * ingest-time cost to every read. A session-scope memo entry per dir,
+    * localCheckpointed; reuse costs one scan of the checkpointed 24-byte
+    * (doc_id, p, srank) triples. */
+  private def suffixRanks(s: SparkSession, dir: String): DataFrame =
+    SessionMemo.session(s, suffixKey(dir))(
       graft.operators.SuffixArray.tokenSuffixRanks(
         spread(t(s, dir, "documents")), tokensCol, seedWidth = 32)
         .localCheckpoint(true))
-  }
-
-  /** Test hook (tools/InvarianceAudit, the r14 memo-blindness fix): evict
-    * every session-keyed memo so a re-run under a different
-    * shuffle-partition setting provably rebuilds from scratch instead of
-    * hashing the same cached frame twice — without this, the audit was
-    * vacuous for q203/q204 (denseRankInPlace's pid-offset arithmetic is
-    * exactly what it exists to cover). */
-  private[graft] def clearMemos(): Unit = suffixCache.clear()
 
   /** Skew guard (SCALE.md §dedup): a band bucket with more than this many
     * members is degenerate — near-identical boilerplate whose members are
@@ -1513,7 +1498,7 @@ object TextOps {
     // denseRankInPlace all hash-mismatch here even when the memo would
     // have masked them downstream.
     "q219_suffix_build" -> ((s, dir) => {
-      suffixCache.remove((s, dir))
+      SessionMemo.forget(s, suffixKey(dir))
       suffixRanks(s, dir).select(col("doc_id"), col("p"), col("srank"))
     }),
 
@@ -1552,8 +1537,8 @@ object TextOps {
       // srank order — the q26 bucketed-window primitive computes `reps`
       // ONCE and pairs in one exchange, where the former srank+1
       // self-join re-ran the groupBy+join+slice subtree on BOTH sides
-      // (measured r17: 7.8 task-s / 55 MB shuffled, the q204 JobProfile
-      // outlier) and shuffled+sorted each.
+      // (measured r17: 7.8 task-s / 55 MB shuffled, the q204 outlier in
+      // the Bench layers) and shuffled+sorted each.
       graft.operators.AdjacentPairs.pairs(reps, "srank")
         .select(col("srank_a").as("srank"),
           col("doc_id_a").as("d1"), col("p_a").as("p1"),

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.Tables
+import graft.core.{SessionMemo, Tables}
 import graft.functions.VecMoments
 
 /** Embedding similarity pack over the `embeddings` table (64-dim float vecs).
@@ -313,7 +313,7 @@ object VectorOps {
       val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val hist = e.filter(col("vec_id") % 10 =!= 9)
       val delta = e.filter(col("vec_id") % 10 === 9)
-      val name = "pqa224_v1_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val name = Tables.dirKeyed("pqa224_v1_", dir)
       if (!graft.operators.IvfIndex.exists(s, name) || !pqExists(s, name)) {
         graft.operators.IvfIndex.write(
           s, hist.filter(col("vec_id") % 10 =!= 8), name)
@@ -1135,7 +1135,7 @@ object VectorOps {
     * persists per corpus so q143's build-if-missing never reads another
     * SF's tables; bump the version on assignment-semantics changes. */
   private def ivfIndexName(dir: String): String =
-    "ivf143_v1_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+    Tables.dirKeyed("ivf143_v1_", dir)
 
   /** round(x·2^20) as BIGINT — integer-exact embedding quantization. */
   private def quant(e: Column): Column = quantAt(e, 1048576L)
@@ -1164,50 +1164,21 @@ object VectorOps {
     element_at(filter(col("cents"),
       ce => ce.getField("cent_id") === cell), 1).getField("cent_emb")
 
-  /** Per-warehouse cache of the packed 1-row PQ codebook (the
-    * IvfIndex.centsCache discipline): the book is a 32-row dimension
-    * artifact read by every serving query; [[pqAttach]] is the only
-    * mutation and replaces the entry. */
-  private val pqBookCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, org.apache.spark.sql.Row]()
-
-  private def pqCacheKey(s: SparkSession, name: String): String =
-    s.conf.get("spark.sql.warehouse.dir") + "#" + name
-
-  /** The cached book ROW, validated against the catalog first: any index
-    * mutation DROPS the `_pqbook` table (IvfIndex.dropPq), so a cached
-    * row whose table no longer exists is stale and must be evicted —
-    * serving correctness must not hang on every caller remembering to
-    * re-guard with [[pqExists]] (the r15 implicit-invariant finding). A
-    * dropped-then-unattached read then fails loudly instead of serving
-    * the dead book. */
-  private def pqBookRow(s: SparkSession,
-      name: String): org.apache.spark.sql.Row = {
-    val key = pqCacheKey(s, name)
-    if (!s.catalog.tableExists(s"${name}_pqbook")) pqBookCache.remove(key)
-    var row = pqBookCache.get(key)
-    if (row == null) {
-      row = s.table(s"${name}_pqbook").collect().head
-      pqBookCache.put(key, row)
-    }
-    row
-  }
-
-  private def pqBookFrame(s: SparkSession, name: String): DataFrame = {
-    val row = pqBookRow(s, name)
-    s.createDataFrame(
-      java.util.Collections.singletonList(row),
-      row.asInstanceOf[org.apache.spark.sql.catalyst.expressions
-        .GenericRowWithSchema].schema)
-  }
+  /** The packed 1-row PQ codebook: a warehouse-scope [[SessionMemo]] row
+    * (the IvfIndex.centsFrame rule). Any index mutation DROPS the
+    * `_pqbook` table (IvfIndex.dropPq), and the memo never serves a row
+    * whose table is gone, so serving correctness does not hang on every
+    * caller re-guarding with [[pqExists]] (the r15 implicit-invariant
+    * finding): a dropped-then-unattached read fails loudly. */
+  private def pqBookFrame(s: SparkSession, name: String): DataFrame =
+    SessionMemo.frame(s, s"${name}_pqbook")
 
   /** The encoding the stored codes were trained with ("residual" |
     * "raw") — recorded IN the book artifact at attach time, so serving
     * derives the query-side transform from the index state instead of a
     * caller-supplied flag that could disagree with the codes. */
   private def pqEncodingOf(s: SparkSession, name: String): String = {
-    val row = pqBookRow(s, name)
+    val row = SessionMemo.row(s, s"${name}_pqbook")
     row.getString(row.fieldIndex("enc"))
   }
 
@@ -1276,20 +1247,14 @@ object VectorOps {
           .orderBy("vec_id").limit(8))
       .withColumn("enc", lit(if (residual) "residual" else "raw"))
     val bookRow = book.collect().head
-    pqBookCache.put(pqCacheKey(s, name), bookRow)
-    val bookLocal = s.createDataFrame(
-      java.util.Collections.singletonList(bookRow),
-      bookRow.asInstanceOf[org.apache.spark.sql.catalyst.expressions
-        .GenericRowWithSchema].schema)
-    val buckets = s.sessionState.catalog
-      .getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(s"${name}_cells"))
-      .bucketSpec.map(_.numBuckets).getOrElse(16)
+    val bookLocal = SessionMemo.oneRow(s, bookRow)
+    val buckets = Tables.bucketsOf(s, s"${name}_cells")
     // book first, codes second, sequentially: the codes write dominates
     // wall time anyway, and a crash between the two reads as absent via
     // pqExists (requires BOTH tables) — the r15 Future/Await overlap
     // bought nothing and added a concurrent-catalog-write race surface
     bookLocal.write.saveAsTable(s"${name}_pqbook")
+    SessionMemo.put(s, s"${name}_pqbook", bookRow)
     graft.core.Tables.writeBucketed(
       res.crossJoin(broadcast(bookLocal.select(col("cents"))))
         .select(col("cell"), col("vec_id"),
@@ -1324,10 +1289,7 @@ object VectorOps {
     * [[pqHeal]]. */
   private def appendCodes(s: SparkSession, name: String,
       vecs: DataFrame): Unit = {
-    val buckets = s.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(
-        s"${name}_pqcodes"))
-      .bucketSpec.map(_.numBuckets).getOrElse(16)
+    val buckets = Tables.bucketsOf(s, s"${name}_pqcodes")
     val assigned = vecs
       .crossJoin(broadcast(graft.operators.IvfIndex.centsFrame(s, name)))
       .select(col("vec_id"), col("cents"),
@@ -1381,29 +1343,9 @@ object VectorOps {
     s.catalog.tableExists(s"${name}_sqcodes") &&
       s.catalog.tableExists(s"${name}_sqbook")
 
-  /** The cached SQ book row — the pqBookRow read-through (shared cache
-    * map, "#sq"-suffixed key) with the same catalog-validated eviction:
-    * every index mutation drops `_sqbook`, so a cached row whose table
-    * is gone is stale. */
-  private def sqBookRow(s: SparkSession,
-      name: String): org.apache.spark.sql.Row = {
-    val key = pqCacheKey(s, name) + "#sq"
-    if (!s.catalog.tableExists(s"${name}_sqbook")) pqBookCache.remove(key)
-    var row = pqBookCache.get(key)
-    if (row == null) {
-      row = s.table(s"${name}_sqbook").collect().head
-      pqBookCache.put(key, row)
-    }
-    row
-  }
-
-  private def sqBookFrame(s: SparkSession, name: String): DataFrame = {
-    val row = sqBookRow(s, name)
-    s.createDataFrame(
-      java.util.Collections.singletonList(row),
-      row.asInstanceOf[org.apache.spark.sql.catalyst.expressions
-        .GenericRowWithSchema].schema)
-  }
+  /** The packed 1-row SQ book (the [[pqBookFrame]] rule). */
+  private def sqBookFrame(s: SparkSession, name: String): DataFrame =
+    SessionMemo.frame(s, s"${name}_sqbook")
 
   /** Attach SQ8 scalar-quantization serving artifacts to an existing
     * IVF index — the OTHER FAISS-standard code layout next to PQ
@@ -1447,16 +1389,10 @@ object VectorOps {
         x => struct(x.getField("mn").as("mn"), x.getField("sc").as("sc")))
         .as("book"))
     val bookRow = book.collect().head
-    pqBookCache.put(pqCacheKey(s, name) + "#sq", bookRow)
-    val bookLocal = s.createDataFrame(
-      java.util.Collections.singletonList(bookRow),
-      bookRow.asInstanceOf[org.apache.spark.sql.catalyst.expressions
-        .GenericRowWithSchema].schema)
-    val buckets = s.sessionState.catalog
-      .getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(s"${name}_cells"))
-      .bucketSpec.map(_.numBuckets).getOrElse(16)
+    val bookLocal = SessionMemo.oneRow(s, bookRow)
+    val buckets = Tables.bucketsOf(s, s"${name}_cells")
     bookLocal.write.saveAsTable(s"${name}_sqbook")
+    SessionMemo.put(s, s"${name}_sqbook", bookRow)
     graft.core.Tables.writeBucketed(
       qrows.crossJoin(broadcast(bookLocal))
         .select(col("cell"), col("vec_id"),
@@ -1534,10 +1470,7 @@ object VectorOps {
   private[graft] def metaAttach(s: SparkSession, name: String,
       src: DataFrame): Unit = {
     graft.core.Tables.dropTableFast(s, s"${name}_meta")
-    val buckets = s.sessionState.catalog
-      .getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(s"${name}_cells"))
-      .bucketSpec.map(_.numBuckets).getOrElse(16)
+    val buckets = Tables.bucketsOf(s, s"${name}_cells")
     val assigned = src
       .crossJoin(broadcast(graft.operators.IvfIndex.centsFrame(s, name)))
       .select(graft.operators.IvfIndex.cellOf(col("embedding")).as("cell"),

@@ -58,17 +58,15 @@ class CollectDisciplineSpec extends AnyFunSuite {
         "construction at any corpus scale, unlike the q134 raw vocab) " +
         "+ q208 piece inventory (LIMIT-64 TakeOrdered, the BPE-codebook " +
         "class)"),
-    "queries/VectorOps.scala" -> (5,
+    "queries/VectorOps.scala" -> (3,
       "k-means packed-centroid codebook (k*d); the q205 moment pass is " +
         "now a 1-row head() over the native vec_moments aggregate (2,145 " +
         "Long cells — a fixed-size model artifact, reduced distributed); " +
-        "plus the PQ book pair (pqAttach's trained 32-row codebook — the " +
-        "production ship-the-codebook artifact — and pqBookFrame's " +
-        "read-through of the persisted 1-row _pqbook packed table, the " +
-        "IvfIndex.centsFrame class); plus the SQ8 book pair (sqAttach's " +
-        "1-row packed per-dim (min, span) book — d pairs, a dimension " +
-        "artifact reduced distributed — and sqBookRow's read-through of " +
-        "the persisted 1-row _sqbook table, the same class)"),
+        "plus pqAttach's trained 32-row codebook (the production " +
+        "ship-the-codebook artifact) and sqAttach's 1-row packed per-dim " +
+        "(min, span) book (d pairs, a dimension artifact reduced " +
+        "distributed); the persisted books are read back through " +
+        "core/SessionMemo.scala"),
     "streaming/VecHealth.scala" -> (2,
       "fit's 1-row projection bounds + the <=16-row bin histogram " +
         "(binCounts — the metrics-model class, never corpus-sized)"),
@@ -79,14 +77,15 @@ class CollectDisciplineSpec extends AnyFunSuite {
       "denseRankInPlace per-partition rank-class counts: <= " +
         "spark.sql.shuffle.partitions rows (the q151 distributed " +
         "prefix-sum offsets class, never corpus-sized)"),
-    "operators/IvfIndex.scala" -> (3,
+    "operators/IvfIndex.scala" -> (2,
       "IVF build seed fetch: k rows via TakeOrdered (k*d values — the " +
         "same packed-centroid class as the k-means codebook), reused for " +
-        "both the _cents write and the assignment broadcast; the Lloyd " +
+        "both the _cents write and the assignment broadcast; and the Lloyd " +
         "refinement round's updated-centroid fetch (k rows of k*d cells " +
-        "— the distributed agg reduces the corpus BEFORE the collect); " +
-        "and centsFrame's read-through of the persisted 1-row _cents " +
-        "packed table")
+        "— the distributed agg reduces the corpus BEFORE the collect)"),
+    "core/SessionMemo.scala" -> (1,
+      "the one read-through of a warehouse-scope one-row table (the " +
+        "packed _cents, _pqbook and _sqbook rows): one row by construction")
   )
 
   test("main-source .collect() sites stay on the bounded allowlist") {

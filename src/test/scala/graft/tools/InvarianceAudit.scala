@@ -48,16 +48,15 @@ object InvarianceAudit {
       try {
         val hashes = parts.map { p =>
           spark.conf.set("spark.sql.shuffle.partitions", p.toString)
-          // evict every session-keyed memo (suffix ranks, BPE vocab)
+          // drop every memo entry (suffix ranks, BPE vocab, index rows)
           // BEFORE each hash: without this the second partition setting
-          // hashes the SAME cached frame the first one built, and the
+          // hashes the SAME memoized frame the first one built, and the
           // audit is vacuous exactly for the memoized queries whose
           // rank/offset arithmetic it exists to cover (r14 finding #2).
           // Dir-keyed ON-DISK indexes (q143/q191/q216) intentionally
           // keep their build — their MATCH path is what re-audits, the
           // builds have their own unconditional gated queries.
-          graft.queries.TextOps.clearMemos()
-          graft.queries.TrainOps.clearMemos()
+          graft.core.SessionMemo.clear()
           canonicalHash(fn(spark, sf))
         }
         val ok = hashes.distinct.length == 1
