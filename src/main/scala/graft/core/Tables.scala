@@ -98,11 +98,13 @@ object Tables {
     }
     val loc = new java.io.File(new java.net.URI(
       spark.conf.get("spark.sql.warehouse.dir")).getPath, table)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete()
-    }
-    if (loc.exists()) rm(loc)
+    if (loc.exists()) rmTree(loc)
+  }
+
+  /** Recursive best-effort delete of a local file or directory tree. */
+  private[graft] def rmTree(f: java.io.File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmTree))
+    f.delete()
   }
 
   /** Bucketed materialization — the cluster-scale answer to repeated

@@ -3,8 +3,10 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.{SessionMemo, Tables}
+import graft.core.Tables
 import graft.functions.VecMoments
+import graft.operators.IvfIndex
+import graft.operators.IvfIndex.{qdist2, quant}
 
 /** Embedding similarity pack over the `embeddings` table (64-dim float vecs).
   *
@@ -224,7 +226,7 @@ object VectorOps {
     "q104_ann_pq" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
         .select(col("vec_id"), quant(col("embedding")).as("q"))
-      val c1p = pqTrainCodebook(s, e)
+      val c1p = IvfIndex.pqTrainCodebook(s, e)
       val enc = Tables.spread(e, col("vec_id")).crossJoin(broadcast(c1p))
         .select(col("vec_id").as("c_id"),
           graft.functions.PqNative.pqEncode(col("q"), col("cents"))
@@ -262,11 +264,8 @@ object VectorOps {
     // instead of shaving catalog milliseconds.
     "q143_ivf_increment" -> ((s, dir) => {
       val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val name = ivfIndexName(dir)
-      if (!graft.operators.IvfIndex.exists(s, name))
-        graft.operators.IvfIndex.write(
-          s, e.filter(col("vec_id") % 10 =!= 9), name)
-      graft.operators.IvfIndex.matchIncrement(
+      val name = dirIndex(s, dir, e.filter(col("vec_id") % 10 =!= 9))
+      IvfIndex.matchIncrement(
         s, e.filter(col("vec_id") % 10 === 9), name)
     }),
 
@@ -278,7 +277,7 @@ object VectorOps {
     "q214_ivf_index_build" -> ((s, dir) => {
       val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val name = ivfIndexName(dir)
-      graft.operators.IvfIndex.write(
+      IvfIndex.write(
         s, e.filter(col("vec_id") % 10 =!= 9), name)
       s.table(s"${name}_cells").select(col("vec_id"), col("cell"))
     }),
@@ -286,7 +285,7 @@ object VectorOps {
     // PQ serving growth under the oracle gate — the q213 lifecycle move
     // for the codes side: build the coarse index + PQ artifacts on the
     // 80% slice (codebook trained THERE and then FROZEN), append the
-    // %10==8 increment via pqAppend — new vectors assign against frozen
+    // %10==8 increment via IvfIndex.append — new vectors assign to frozen
     // centroids AND encode against the frozen codebook, the production
     // streaming-growth semantics (a per-batch retrain would re-scan
     // history every micro-batch) — then serve the delta over the grown
@@ -314,16 +313,17 @@ object VectorOps {
       val hist = e.filter(col("vec_id") % 10 =!= 9)
       val delta = e.filter(col("vec_id") % 10 === 9)
       val name = Tables.dirKeyed("pqa224_v1_", dir)
-      if (!graft.operators.IvfIndex.exists(s, name) || !pqExists(s, name)) {
-        graft.operators.IvfIndex.write(
+      if (!IvfIndex.exists(s, name) ||
+          !IvfIndex.attached(s, name, IvfIndex.Pq)) {
+        IvfIndex.write(
           s, hist.filter(col("vec_id") % 10 =!= 8), name)
-        pqAttach(s, name) // codebook trained on the 80%, then frozen
+        IvfIndex.pqAttach(s, name) // codebook trained on the 80%, then frozen
       }
       val inc = hist.filter(col("vec_id") % 10 === 8)
         .join(s.table(s"${name}_cells").select(col("vec_id")),
           Seq("vec_id"), "left_anti")
         .localCheckpoint()
-      if (!inc.isEmpty) pqAppend(s, name, inc)
+      if (!inc.isEmpty) IvfIndex.append(s, inc, name)
       adcTop1(s, name, delta)
     }),
 
@@ -343,11 +343,7 @@ object VectorOps {
       val raw = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val hist = raw.filter(col("vec_id") % 10 =!= 9)
       val delta = raw.filter(col("vec_id") % 10 === 9)
-      val name = ivfIndexName(dir)
-      if (!graft.operators.IvfIndex.exists(s, name))
-        graft.operators.IvfIndex.write(s, hist, name)
-      if (!pqExists(s, name)) pqAttach(s, name)
-      adcTop1(s, name, delta, nProbe = 2)
+      adcTop1(s, dirIndex(s, dir, hist, pq = true), delta, nProbe = 2)
     }),
 
     // IVF-PQ top-K retrieval (q228): the q216/q225 serving layout with a
@@ -364,13 +360,10 @@ object VectorOps {
       val raw = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val hist = raw.filter(col("vec_id") % 10 =!= 9)
       val delta = raw.filter(col("vec_id") % 10 === 9)
-      val name = ivfIndexName(dir)
-      if (!graft.operators.IvfIndex.exists(s, name))
-        graft.operators.IvfIndex.write(s, hist, name)
-      if (!pqExists(s, name)) pqAttach(s, name)
+      val name = dirIndex(s, dir, hist, pq = true)
       val w = Window.partitionBy("new_id")
         .orderBy(col("approx_d"), col("old_id"))
-      adcScores(s, name, delta, nProbe = 2)
+      IvfIndex.adcScores(s, name, delta, nProbe = 2)
         .withColumn("rank", row_number().over(w))
         .filter(col("rank") <= 3)
         .select("new_id", "old_id", "rank", "approx_d")
@@ -392,13 +385,10 @@ object VectorOps {
       val raw = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val hist = raw.filter(col("vec_id") % 10 =!= 9)
       val delta = raw.filter(col("vec_id") % 10 === 9)
-      val name = ivfIndexName(dir)
-      if (!graft.operators.IvfIndex.exists(s, name))
-        graft.operators.IvfIndex.write(s, hist, name)
-      if (!pqExists(s, name)) pqAttach(s, name)
+      val name = dirIndex(s, dir, hist, pq = true)
       val ws = Window.partitionBy("new_id")
         .orderBy(col("approx_d"), col("old_id"))
-      val short = adcScores(s, name, delta, nProbe = 2)
+      val short = IvfIndex.adcScores(s, name, delta, nProbe = 2)
         .withColumn("r", row_number().over(ws))
         .filter(col("r") <= 8)
         .select("new_id", "cell", "old_id")
@@ -420,7 +410,7 @@ object VectorOps {
     // among candidates whose label equals the query's — the tenant/
     // language filter every production vector store serves. The
     // candidate labels come from the cell-colocated _meta table
-    // (metaAttach), so the codes⋈meta join is bucket-local and the
+    // (IvfIndex.metaAttach), so the codes⋈meta join is bucket-local and the
     // index side still never shuffles; the equality applies BEFORE the
     // ADC arithmetic. The oracle restates the filter as label joins
     // over the multi-probe chain, so a lost meta row, a stale payload
@@ -431,18 +421,16 @@ object VectorOps {
         .select(col("vec_id"), col("embedding"), col("label"))
       val hist = raw.filter(col("vec_id") % 10 =!= 9)
       val delta = raw.filter(col("vec_id") % 10 === 9)
-      val name = ivfIndexName(dir)
-      if (!graft.operators.IvfIndex.exists(s, name))
-        graft.operators.IvfIndex.write(
-          s, hist.select("vec_id", "embedding"), name)
-      if (!pqExists(s, name)) pqAttach(s, name)
-      if (!metaExists(s, name)) metaAttach(s, name, hist)
-      filteredAdcTopK(s, name, delta, k = 3, nProbe = 2)
+      val name = dirIndex(s, dir, hist.select("vec_id", "embedding"),
+        pq = true)
+      if (!IvfIndex.attached(s, name, IvfIndex.Meta))
+        IvfIndex.metaAttach(s, name, hist)
+      IvfIndex.filteredAdcTopK(s, name, delta, k = 3, nProbe = 2)
     }),
 
     // SELECTIVITY-ADAPTIVE filtered serving (q231): a constant
     // predicate (label = 3 AND vec_id % 7 = 0, ~1-2% of the index at
-    // every SF) dispatches through filteredTopK's strategy switch to
+    // every SF) dispatches through IvfIndex.filteredTopK's strategy switch to
     // the PRE-FILTER branch — eligible ids resolved from the colocated
     // meta table (predicate pushed into its bucketed scan), their float
     // rows fetched by a bucket-local cells⋈meta join, exact integer-L2
@@ -456,13 +444,11 @@ object VectorOps {
         .select(col("vec_id"), col("embedding"), col("label"))
       val hist = raw.filter(col("vec_id") % 10 =!= 9)
       val delta = raw.filter(col("vec_id") % 10 === 9)
-      val name = ivfIndexName(dir)
-      if (!graft.operators.IvfIndex.exists(s, name))
-        graft.operators.IvfIndex.write(
-          s, hist.select("vec_id", "embedding"), name)
-      if (!pqExists(s, name)) pqAttach(s, name)
-      if (!metaExists(s, name)) metaAttach(s, name, hist)
-      filteredTopK(s, name, delta.select("vec_id", "embedding"),
+      val name = dirIndex(s, dir, hist.select("vec_id", "embedding"),
+        pq = true)
+      if (!IvfIndex.attached(s, name, IvfIndex.Meta))
+        IvfIndex.metaAttach(s, name, hist)
+      IvfIndex.filteredTopK(s, name, delta.select("vec_id", "embedding"),
         col("label") === 3 && col("vec_id") % 7 === 0, k = 3)
     }),
 
@@ -479,11 +465,9 @@ object VectorOps {
     "q232_sq8_attach" -> ((s, dir) => {
       val raw = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val hist = raw.filter(col("vec_id") % 10 =!= 9)
-      val name = ivfIndexName(dir)
-      if (!graft.operators.IvfIndex.exists(s, name))
-        graft.operators.IvfIndex.write(s, hist, name)
-      sqAttach(s, name)
-      s.table(s"${name}_sqcodes").select(col("vec_id"), col("cell"),
+      val name = dirIndex(s, dir, hist)
+      IvfIndex.sqAttach(s, name)
+      IvfIndex.rows(s, name, IvfIndex.Sq).select(col("vec_id"), col("cell"),
         md5(concat_ws(",", transform(
           graft.functions.SqNative.sqBytes(col("codes")),
           _.cast("string")))).as("code_md5"))
@@ -500,11 +484,9 @@ object VectorOps {
       val raw = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val hist = raw.filter(col("vec_id") % 10 =!= 9)
       val delta = raw.filter(col("vec_id") % 10 === 9)
-      val name = ivfIndexName(dir)
-      if (!graft.operators.IvfIndex.exists(s, name))
-        graft.operators.IvfIndex.write(s, hist, name)
-      if (!sqExists(s, name)) sqAttach(s, name)
-      sqTopK(s, name, delta, k = 3, nProbe = 2)
+      val name = dirIndex(s, dir, hist)
+      if (!IvfIndex.attached(s, name, IvfIndex.Sq)) IvfIndex.sqAttach(s, name)
+      IvfIndex.sqTopK(s, name, delta, k = 3, nProbe = 2)
     }),
 
     // The PRODUCTION-REGIME recall gate (the r15 "what's missing" #1):
@@ -526,8 +508,8 @@ object VectorOps {
         // seeds, assignment write, both recall chains)
       val hist = rv.filter(col("vec_id") % 10 =!= 9)
       val delta = rv.filter(col("vec_id") % 10 === 9)
-      graft.operators.IvfIndex.write(s, hist, "q226_idx", k = 64)
-      pqAttach(s, "q226_idx")
+      IvfIndex.write(s, hist, "q226_idx", k = 64)
+      IvfIndex.pqAttach(s, "q226_idx")
       recallDecomposed(s, "q226_idx", hist, delta)
     }),
 
@@ -543,8 +525,8 @@ object VectorOps {
         // seeds, assignment write, both recall chains)
       val hist = rv.filter(col("vec_id") % 10 =!= 9)
       val delta = rv.filter(col("vec_id") % 10 === 9)
-      graft.operators.IvfIndex.write(s, hist, "q227_idx", k = 64)
-      pqAttach(s, "q227_idx", residual = false)
+      IvfIndex.write(s, hist, "q227_idx", k = 64)
+      IvfIndex.pqAttach(s, "q227_idx", residual = false)
       recallDecomposed(s, "q227_idx", hist, delta)
     }),
 
@@ -563,11 +545,8 @@ object VectorOps {
     // per-query) top-1 all hash-mismatch.
     "q223_multiprobe_match" -> ((s, dir) => {
       val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val name = ivfIndexName(dir)
-      if (!graft.operators.IvfIndex.exists(s, name))
-        graft.operators.IvfIndex.write(
-          s, e.filter(col("vec_id") % 10 =!= 9), name)
-      graft.operators.IvfIndex.matchIncrement(
+      val name = dirIndex(s, dir, e.filter(col("vec_id") % 10 =!= 9))
+      IvfIndex.matchIncrement(
         s, e.filter(col("vec_id") % 10 === 9), name, topK = 1, nProbe = 2)
     }),
 
@@ -580,9 +559,9 @@ object VectorOps {
     // knob carries the semantics.
     "q189_vecdup_batch" -> ((s, dir) => {
       val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      graft.operators.IvfIndex.write(
+      IvfIndex.write(
         s, e.filter(col("vec_id") % 10 =!= 9), "q189_idx")
-      val dups = graft.operators.IvfIndex.matchIncrement(
+      val dups = IvfIndex.matchIncrement(
           s, e.filter(col("vec_id") % 10 === 9), "q189_idx", topK = 1)
         .filter(col("cos_sim") >= 0.3)
         .select(col("new_id").as("vec_id"), lit(1L).as("d"))
@@ -603,10 +582,10 @@ object VectorOps {
     // sums (corpus-size-free); everything else is q143's plan.
     "q193_ivf_refined" -> ((s, dir) => {
       val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      graft.operators.IvfIndex.write(
+      IvfIndex.write(
         s, e.filter(col("vec_id") % 10 =!= 9), "q193_idx",
         k = 8, refineIters = 1)
-      graft.operators.IvfIndex.matchIncrement(
+      IvfIndex.matchIncrement(
         s, e.filter(col("vec_id") % 10 === 9), "q193_idx", topK = 1)
     }),
 
@@ -620,18 +599,18 @@ object VectorOps {
     // the candidate side anti-filtered — if remove purged too much, too
     // little, or broke bucket reads, the match hashes differ. Centroids
     // stay frozen through removal (geometry, not storage — the
-    // [[graft.operators.IvfIndex.remove]] contract).
+    // [[IvfIndex.remove]] contract).
     "q213_rtbf_match" -> ((s, dir) => {
       val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val hist = e.filter(col("vec_id") % 10 =!= 9)
-      graft.operators.IvfIndex.write(
+      IvfIndex.write(
         s, hist.filter(col("vec_id") % 10 =!= 8), "q213_idx")
-      graft.operators.IvfIndex.append(
+      IvfIndex.append(
         s, hist.filter(col("vec_id") % 10 === 8), "q213_idx")
-      graft.operators.IvfIndex.remove(
+      IvfIndex.remove(
         s, "q213_idx", e.filter(col("vec_id") % 20 === 14).select("vec_id"))
-      graft.operators.IvfIndex.compact(s, "q213_idx")
-      graft.operators.IvfIndex.matchIncrement(
+      IvfIndex.compact(s, "q213_idx")
+      IvfIndex.matchIncrement(
         s, e.filter(col("vec_id") % 10 === 9), "q213_idx", topK = 1)
     }),
 
@@ -651,9 +630,9 @@ object VectorOps {
       // the k=8 build exists only as the index to rebuild FROM (q213
       // covers the append path); rebuild re-seeds at autoK from the
       // index's own stored vectors
-      graft.operators.IvfIndex.write(s, hist, "q215_idx", k = 8)
-      graft.operators.IvfIndex.rebuild(s, "q215_idx", k = 0)
-      graft.operators.IvfIndex.matchIncrement(
+      IvfIndex.write(s, hist, "q215_idx", k = 8)
+      IvfIndex.rebuild(s, "q215_idx", k = 0)
+      IvfIndex.matchIncrement(
         s, e.filter(col("vec_id") % 10 === 9), "q215_idx", topK = 1)
     }),
 
@@ -684,12 +663,9 @@ object VectorOps {
     "q220_pq_attach" -> ((s, dir) => {
       val raw = t(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
-      val name = ivfIndexName(dir)
-      if (!graft.operators.IvfIndex.exists(s, name))
-        graft.operators.IvfIndex.write(
-          s, raw.filter(col("vec_id") % 10 =!= 9), name)
-      pqAttach(s, name)
-      s.table(s"${name}_pqcodes").select(col("vec_id"), col("cell"),
+      val name = dirIndex(s, dir, raw.filter(col("vec_id") % 10 =!= 9))
+      IvfIndex.pqAttach(s, name)
+      IvfIndex.rows(s, name, IvfIndex.Pq).select(col("vec_id"), col("cell"),
         element_at(col("codes"), 1).as("c0"),
         element_at(col("codes"), 2).as("c1"),
         element_at(col("codes"), 3).as("c2"),
@@ -719,11 +695,7 @@ object VectorOps {
       val raw = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val hist = raw.filter(col("vec_id") % 10 =!= 9)
       val delta = raw.filter(col("vec_id") % 10 === 9)
-      val name = ivfIndexName(dir)
-      if (!graft.operators.IvfIndex.exists(s, name))
-        graft.operators.IvfIndex.write(s, hist, name)
-      if (!pqExists(s, name)) pqAttach(s, name)
-      recallDecomposed(s, name, hist, delta)
+      recallDecomposed(s, dirIndex(s, dir, hist, pq = true), hist, delta)
     }),
 
     // The q218 decomposition on a CLUSTERABLE fixture (r14 ask #6):
@@ -750,8 +722,8 @@ object VectorOps {
         // seeds, assignment write, both recall chains)
       val hist = cv.filter(col("vec_id") % 10 =!= 9)
       val delta = cv.filter(col("vec_id") % 10 === 9)
-      graft.operators.IvfIndex.write(s, hist, "q222_idx", k = 16)
-      pqAttach(s, "q222_idx")
+      IvfIndex.write(s, hist, "q222_idx", k = 16)
+      IvfIndex.pqAttach(s, "q222_idx")
       recallDecomposed(s, "q222_idx", hist, delta)
     }),
 
@@ -767,8 +739,8 @@ object VectorOps {
       val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val hist = e.filter(col("vec_id") % 10 =!= 9)
       val delta = e.filter(col("vec_id") % 10 === 9)
-      graft.operators.IvfIndex.write(s, hist, "q190_idx")
-      val ivf = graft.operators.IvfIndex
+      IvfIndex.write(s, hist, "q190_idx")
+      val ivf = IvfIndex
         .matchIncrement(s, delta, "q190_idx", topK = 1)
         .select(col("new_id").as("vec_id"), col("cos_sim").as("ivf_cos"))
       // brute top-1: max over (cos, -old_id) — ties keep the LOWEST old
@@ -1137,453 +1109,21 @@ object VectorOps {
   private def ivfIndexName(dir: String): String =
     Tables.dirKeyed("ivf143_v1_", dir)
 
-  /** round(x·2^20) as BIGINT — integer-exact embedding quantization. */
-  private def quant(e: Column): Column = quantAt(e, 1048576L)
+  /** The dir-keyed index over `hist`, built when absent — and with `pq`
+    * its PQ family attached when absent: the shared build-if-missing of
+    * every query that serves off q214's index. Returns the index name. */
+  private def dirIndex(s: SparkSession, dir: String, hist: DataFrame,
+      pq: Boolean = false): String = {
+    val name = ivfIndexName(dir)
+    if (!IvfIndex.exists(s, name)) IvfIndex.write(s, hist, name)
+    if (pq && !IvfIndex.attached(s, name, IvfIndex.Pq))
+      IvfIndex.pqAttach(s, name)
+    name
+  }
 
   /** round(x·sc) as BIGINT at a row-count-selected scale ([[pcaScale]]). */
   private def quantAt(e: Column, sc: Long): Column =
     transform(e, x => round(x.cast("double") * sc.toDouble).cast("long"))
-
-  /** Integer squared-L2 between two quantized vectors (BIGINT fold). */
-  private def qdist2(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0L), (s, d) => s + d)
-
-  /** (m, cluster, cent) codebook rows → ONE row holding the
-    * (m, cluster)-sorted array, so PQ encode is a 1-row broadcast and the
-    * per-subspace argmin stays inside the scanned row (q91's pack,
-    * extended with the subspace key). */
-  private def pqPack(cb: DataFrame): DataFrame =
-    cb.groupBy().agg(array_sort(collect_list(
-      struct(col("m"), col("cluster"), col("cent")))).as("cents"))
-
-  /** The cell's frozen centroid embedding, looked up in-row from the
-    * broadcast packed `cents` column (the cells are few; the filter+pick
-    * runs inside the scanned row, no join). */
-  private def centEmbOf(cell: Column): Column =
-    element_at(filter(col("cents"),
-      ce => ce.getField("cent_id") === cell), 1).getField("cent_emb")
-
-  /** The packed 1-row PQ codebook: a warehouse-scope [[SessionMemo]] row
-    * (the IvfIndex.centsFrame rule). Any index mutation DROPS the
-    * `_pqbook` table (IvfIndex.dropPq), and the memo never serves a row
-    * whose table is gone, so serving correctness does not hang on every
-    * caller re-guarding with [[pqExists]] (the r15 implicit-invariant
-    * finding): a dropped-then-unattached read fails loudly. */
-  private def pqBookFrame(s: SparkSession, name: String): DataFrame =
-    SessionMemo.frame(s, s"${name}_pqbook")
-
-  /** The encoding the stored codes were trained with ("residual" |
-    * "raw") — recorded IN the book artifact at attach time, so serving
-    * derives the query-side transform from the index state instead of a
-    * caller-supplied flag that could disagree with the codes. */
-  private def pqEncodingOf(s: SparkSession, name: String): String = {
-    val row = SessionMemo.row(s, s"${name}_pqbook")
-    row.getString(row.fieldIndex("enc"))
-  }
-
-  /** Both PQ artifacts present (the existsWeighted rule: pqAttach commits
-    * two tables; a crash between them must read as absent). */
-  private[graft] def pqExists(s: SparkSession, name: String): Boolean =
-    s.catalog.tableExists(s"${name}_pqcodes") &&
-      s.catalog.tableExists(s"${name}_pqbook")
-
-  /** The quantized RESIDUAL of each index row against its frozen cell
-    * centroid — integer differences at the same 2^20 quantization, so
-    * every downstream distance stays BIGINT-exact and hash-gateable. */
-  private def residualFrame(s: SparkSession, name: String): DataFrame =
-    s.table(s"${name}_cells")
-      .crossJoin(broadcast(graft.operators.IvfIndex.centsFrame(s, name)))
-      .select(col("cell"), col("vec_id"),
-        zip_with(quant(col("embedding")), quant(centEmbOf(col("cell"))),
-          (x, y) => x - y).as("q"))
-
-  /** Attach the PQ serving artifacts to an existing IVF index (FAISS
-    * IVFPQ, Jégou et al. 2011 — now with the standard RESIDUAL encoding,
-    * the r14 refinement): train the 4-subspace codebook on the index
-    * rows' residuals against their frozen coarse centroids, then commit
-    *
-    *   - `<name>_pqbook`  — the packed 1-row codebook (4·8 rows of
-    *     16 BIGINTs, a dimension artifact, exactly how production PQ
-    *     ships codebooks);
-    *   - `<name>_pqcodes` — (cell, vec_id, codes): 4 small ints per
-    *     vector, bucketed by cell like the cells table, so the serving
-    *     join reads it with ZERO index-side exchange and the payload
-    *     crossing the join is ~30× smaller than the float vectors.
-    *
-    * Residual encoding is the FAISS production standard because at
-    * real scale (k ≈ √N cells ≫ codebook entries, structured
-    * within-cell spread) a raw codebook wastes its entries re-encoding
-    * coarse structure the cell id already carries, while residuals hand
-    * PQ only the within-cell spread. Measured honestly in BOTH regimes:
-    * on near-random vectors any 4×8 code is a lottery (q218: 3/50 both
-    * encodings), and on the REGIME fixture the claim names — 64 cells
-    * ≫ the 8-entry codebook with codebook-learnable within-cell
-    * structure (regimeVecs) — residual wins 44/50 vs raw's 15/50
-    * (RegimeRecallSpec pins the A/B; q226/q227 hash-gate both chains).
-    * Codebook seeds are the 8 lowest index ids that are NOT coarse
-    * centroids — a centroid row's residual against itself is
-    * identically zero, so centroid seeds would coincide at the origin
-    * and collapse every code to cluster 0 (at k > 8 the old
-    * `vec_id ≥ 8` rule silently seeded exactly that degenerate book —
-    * the r15 q222 A/B ran it, which is why residual "lost" there).
-    * The exclusion applies to BOTH encodings so the A/B differs only
-    * in the representation.
-    *
-    * Trained once per index state: any IvfIndex mutation drops these
-    * tables (see IvfIndex.write/append/remove/compact) and the serving
-    * query's attach-if-missing guard retrains — codes are never
-    * recomputed per query (the r14 full-corpus-re-encode finding). */
-  private[graft] def pqAttach(s: SparkSession, name: String,
-      residual: Boolean = true): Unit = {
-    Seq(s"${name}_pqcodes", s"${name}_pqbook")
-      .foreach(graft.core.Tables.dropTableFast(s, _))
-    val res = if (residual) residualFrame(s, name)
-      else s.table(s"${name}_cells")
-        .select(col("cell"), col("vec_id"), quant(col("embedding")).as("q"))
-    val centIds = graft.operators.IvfIndex.centIds(s, name)
-    val book = pqTrainCodebook(s, res.select(col("vec_id"), col("q")),
-        seedSel = _.filter(!col("vec_id").isin(centIds: _*))
-          .orderBy("vec_id").limit(8))
-      .withColumn("enc", lit(if (residual) "residual" else "raw"))
-    val bookRow = book.collect().head
-    val bookLocal = SessionMemo.oneRow(s, bookRow)
-    val buckets = Tables.bucketsOf(s, s"${name}_cells")
-    // book first, codes second, sequentially: the codes write dominates
-    // wall time anyway, and a crash between the two reads as absent via
-    // pqExists (requires BOTH tables) — the r15 Future/Await overlap
-    // bought nothing and added a concurrent-catalog-write race surface
-    bookLocal.write.saveAsTable(s"${name}_pqbook")
-    SessionMemo.put(s, s"${name}_pqbook", bookRow)
-    graft.core.Tables.writeBucketed(
-      res.crossJoin(broadcast(bookLocal.select(col("cents"))))
-        .select(col("cell"), col("vec_id"),
-          graft.functions.PqNative.pqEncode(col("q"), col("cents"))
-            .as("codes"))
-        .repartition(buckets, col("cell")),
-      s"${name}_pqcodes", "cell", buckets)
-  }
-
-  /** Append an increment to BOTH the coarse index and its PQ serving
-    * artifacts — the streaming-growth path for a PQ-served index (q224):
-    * new vectors assign against the FROZEN centroids (IvfIndex.append)
-    * and encode against the FROZEN codebook — the same frozen-artifact
-    * discipline the coarse side already follows; codebook drift, like
-    * centroid drift, is a rebuild/attach decision, never an ingest side
-    * effect (at 100 TB a per-batch retrain would re-scan history every
-    * micro-batch). Cells append first, codes second: a crash between
-    * the two leaves the appended vectors CODELESS — a bounded recall
-    * loss (they vanish from ADC serving; never a wrong match), visible
-    * as a cells-vs-pqcodes count gap and healed by [[pqAttach]] — the
-    * LshIndex.remove retry-to-completion contract. */
-  private[graft] def pqAppend(s: SparkSession, name: String,
-      newVecs: DataFrame): Unit = {
-    require(pqExists(s, name), s"$name has no PQ artifacts to append to")
-    graft.operators.IvfIndex.append(s, newVecs, name, keepPq = true)
-    appendCodes(s, name, newVecs)
-  }
-
-  /** Encode `vecs` (vec_id, embedding) against `name`'s FROZEN centroids
-    * + FROZEN codebook (whichever encoding the book records) and append
-    * the codes bucket-aligned — the shared tail of [[pqAppend]] and
-    * [[pqHeal]]. */
-  private def appendCodes(s: SparkSession, name: String,
-      vecs: DataFrame): Unit = {
-    val buckets = Tables.bucketsOf(s, s"${name}_pqcodes")
-    val assigned = vecs
-      .crossJoin(broadcast(graft.operators.IvfIndex.centsFrame(s, name)))
-      .select(col("vec_id"), col("cents"),
-        graft.operators.IvfIndex.cellOf(col("embedding")).as("cell"),
-        quant(col("embedding")).as("q"))
-    val rq =
-      if (pqEncodingOf(s, name) == "residual")
-        assigned.select(col("cell"), col("vec_id"),
-          zip_with(col("q"), quant(centEmbOf(col("cell"))),
-            (x, y) => x - y).as("rq"))
-      else assigned.select(col("cell"), col("vec_id"), col("q").as("rq"))
-    val codes = rq
-      .crossJoin(broadcast(pqBookFrame(s, name).select(col("cents"))))
-      .select(col("cell"), col("vec_id"),
-        graft.functions.PqNative.pqEncode(col("rq"), col("cents"))
-          .as("codes"))
-      .repartition(buckets, col("cell"))
-    graft.core.Tables.appendBucketed(codes, s"${name}_pqcodes", "cell",
-      buckets)
-    s.catalog.refreshTable(s"${name}_pqcodes")
-  }
-
-  /** Heal the [[pqAppend]] crash window: cells append first, codes
-    * second, so a crash between the two leaves the appended vectors
-    * CODELESS — present in `<name>_cells` but absent from
-    * `<name>_pqcodes`, a silent recall loss at serving time (they
-    * vanish from ADC candidate sets; never a wrong match). This finds
-    * the gap by anti-join, re-encodes the missing vectors against the
-    * FROZEN book, and appends their codes — idempotent (zero rows when
-    * the artifacts agree), crash-replay-safe (a duplicate code row
-    * cannot change a min-struct top-1 over identical structs), and run
-    * by the streaming ingest's recovery pass on every (re)start
-    * ([[graft.streaming.VecDupIngest]] ADC mode). Returns the number of
-    * healed vectors. */
-  private[graft] def pqHeal(s: SparkSession, name: String): Long = {
-    require(pqExists(s, name), s"$name has no PQ artifacts to heal")
-    val missing = s.table(s"${name}_cells")
-      .select(col("vec_id"), col("embedding"))
-      .join(s.table(s"${name}_pqcodes").select(col("vec_id")),
-        Seq("vec_id"), "left_anti")
-      .dropDuplicates("vec_id")
-      .localCheckpoint()
-    val n = missing.count()
-    if (n > 0L) appendCodes(s, name, missing)
-    n
-  }
-
-  /** Both SQ8 artifacts present (the pqExists two-table rule: attach
-    * commits book then codes; a crash between must read as absent). */
-  private[graft] def sqExists(s: SparkSession, name: String): Boolean =
-    s.catalog.tableExists(s"${name}_sqcodes") &&
-      s.catalog.tableExists(s"${name}_sqbook")
-
-  /** The packed 1-row SQ book (the [[pqBookFrame]] rule). */
-  private def sqBookFrame(s: SparkSession, name: String): DataFrame =
-    SessionMemo.frame(s, s"${name}_sqbook")
-
-  /** Attach SQ8 scalar-quantization serving artifacts to an existing
-    * IVF index — the OTHER FAISS-standard code layout next to PQ
-    * (IndexScalarQuantizer QT_8bit): one byte per dimension against a
-    * frozen per-dim (min, span) book learned over the index rows'
-    * quantized values, committed as
-    *
-    *   - `<name>_sqbook`  — the packed 1-row book (d (mn, sc) pairs, a
-    *     dimension artifact like the PQ codebook);
-    *   - `<name>_sqcodes` — (cell, vec_id, codes BINARY): d bytes per
-    *     vector, bucketed by cell like the cells/codes tables, zero
-    *     index-side exchange at serve time.
-    *
-    * The layout point vs PQ: 16× the bits (64 B vs 4 B at d = 64) for
-    * fidelity that needs no codebook training — the memory/recall
-    * middle ground between PQ codes and float rows, and Sq8Spec
-    * measures exactly that on the regime fixture. Encoding is RAW
-    * (global book), not per-cell residual: 256 levels per dimension
-    * already out-resolve within-cell spread at this width, and a
-    * global book keeps serving reconstruction independent of the
-    * probed cell. Book first, codes second (the pqAttach sequential
-    * rule); [[sqExists]] requires both. Invalidated, like every
-    * derived artifact, by any index mutation; there is no sqAppend —
-    * the streaming growth path serves PQ codes ([[pqAppend]]), and a
-    * grown index re-attaches SQ on the next gated read. */
-  private[graft] def sqAttach(s: SparkSession, name: String): Unit = {
-    Seq(s"${name}_sqcodes", s"${name}_sqbook")
-      .foreach(graft.core.Tables.dropTableFast(s, _))
-    val qrows = s.table(s"${name}_cells")
-      .select(col("cell"), col("vec_id"), quant(col("embedding")).as("q"))
-    // per-dim min/span: one distributed pass, d partial cells per
-    // partition; the packed 1-row book is a dimension artifact (the
-    // cents/pqbook collect class)
-    val book = qrows
-      .select(posexplode(col("q")).as(Seq("pos", "v")))
-      .groupBy("pos")
-      .agg(min(col("v")).as("mn"), (max(col("v")) - min(col("v"))).as("sc"))
-      .groupBy()
-      .agg(transform(
-        array_sort(collect_list(struct(col("pos"), col("mn"), col("sc")))),
-        x => struct(x.getField("mn").as("mn"), x.getField("sc").as("sc")))
-        .as("book"))
-    val bookRow = book.collect().head
-    val bookLocal = SessionMemo.oneRow(s, bookRow)
-    val buckets = Tables.bucketsOf(s, s"${name}_cells")
-    bookLocal.write.saveAsTable(s"${name}_sqbook")
-    SessionMemo.put(s, s"${name}_sqbook", bookRow)
-    graft.core.Tables.writeBucketed(
-      qrows.crossJoin(broadcast(bookLocal))
-        .select(col("cell"), col("vec_id"),
-          graft.functions.SqNative.sqEncode(col("q"), col("book"))
-            .as("codes"))
-        .repartition(buckets, col("cell")),
-      s"${name}_sqcodes", "cell", buckets)
-  }
-
-  /** Top-k serve over the stored SQ8 codes — the q228 shape with the
-    * byte-per-dim representation: candidates cross the probe join as
-    * (cell, old_id, d bytes); the query side packs its quantized value
-    * with the broadcast book per dim (struct(qv, mn, sc)) in-row and
-    * broadcasts (batch-sized × nProbe by construction); distance is
-    * integer squared-L2 against the RECONSTRUCTED candidate
-    * ([[graft.functions.SqNative.sqDist]]). One exchange: the rank
-    * window. Unlike PQ's per-cell residual tables, the global book
-    * makes the distance independent of the probed cell — multi-probe
-    * only widens the candidate set. */
-  private[graft] def sqTopK(s: SparkSession, name: String, delta: DataFrame,
-      k: Int, nProbe: Int): DataFrame = {
-    val cand = s.table(s"${name}_sqcodes")
-      .select(col("cell"), col("vec_id").as("old_id"), col("codes"))
-    val withCents = delta
-      .crossJoin(broadcast(graft.operators.IvfIndex.centsFrame(s, name)))
-    val assigned =
-      if (nProbe <= 1)
-        withCents.select(col("vec_id").as("new_id"),
-          graft.operators.IvfIndex.cellOf(col("embedding")).as("cell"),
-          quant(col("embedding")).as("q"))
-      else
-        withCents.select(col("vec_id").as("new_id"),
-          explode(graft.operators.IvfIndex
-            .topCells(col("embedding"), nProbe)).as("cell"),
-          quant(col("embedding")).as("q"))
-    val qs = broadcast(assigned
-      .crossJoin(broadcast(sqBookFrame(s, name)))
-      .select(col("new_id"), col("cell"),
-        zip_with(col("q"), col("book"), (x, b) => struct(x.as("qv"),
-          b.getField("mn").as("mn"), b.getField("sc").as("sc")))
-          .as("qt")))
-    val w = Window.partitionBy("new_id")
-      .orderBy(col("approx_d"), col("old_id"))
-    cand.join(qs, "cell")
-      .withColumn("approx_d", graft.functions.SqNative
-        .sqDist(col("codes"), col("qt")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("new_id", "old_id", "rank", "approx_d")
-  }
-
-  /** The cell-colocated metadata (payload) table is present. Unlike the
-    * two-table PQ commit, _meta is a single atomic saveAsTable, so bare
-    * existence is the whole invariant. */
-  private[graft] def metaExists(s: SparkSession, name: String): Boolean =
-    s.catalog.tableExists(s"${name}_meta")
-
-  /** Attach a cell-colocated METADATA table to an existing IVF index —
-    * the payload-column layout every production vector store pairs with
-    * its inverted lists (FAISS id-maps, vector-DB payload storage):
-    * `<name>_meta` (cell, vec_id, label), bucketed by cell like the
-    * cells/codes tables, so a filtered serve reads candidate metadata
-    * with ZERO index-side exchange (the codes⋈meta join is bucket-local
-    * sort-merge). Without this copy, every metadata-filtered query would
-    * join the index side against the lake table on vec_id — a full
-    * index shuffle per query, the exact cost class the bucketed layout
-    * exists to avoid. Assignment is in-row from the SOURCE embeddings
-    * against the frozen packed-centroid broadcast (never a join against
-    * the cells table — attaching payload must not shuffle the index
-    * either); `src` must be the index's own population (vec_id,
-    * embedding, label). Invalidated, like the PQ artifacts, by every
-    * index mutation (IvfIndex.write/append/remove — append drops it
-    * even under keepPq: nothing appends payload, and a stale meta table
-    * would silently hide appended rows from every filtered serve). */
-  private[graft] def metaAttach(s: SparkSession, name: String,
-      src: DataFrame): Unit = {
-    graft.core.Tables.dropTableFast(s, s"${name}_meta")
-    val buckets = Tables.bucketsOf(s, s"${name}_cells")
-    val assigned = src
-      .crossJoin(broadcast(graft.operators.IvfIndex.centsFrame(s, name)))
-      .select(graft.operators.IvfIndex.cellOf(col("embedding")).as("cell"),
-        col("vec_id"), col("label"))
-      .repartition(buckets, col("cell"))
-    graft.core.Tables.writeBucketed(assigned, s"${name}_meta", "cell",
-      buckets)
-  }
-
-  /** PER-QUERY metadata-filtered ADC top-k (q230) — the vector-DB
-    * "tenant/language filter" serve: each query ranks only candidates
-    * whose label EQUALS its own. A per-query predicate can never
-    * pre-filter (the eligible set differs per query), so this is the
-    * post-filter strategy: candidates = stored codes ⋈ colocated meta
-    * (bucket-local, zero exchange), the label equality applies at the
-    * probe join BEFORE the ADC arithmetic (wrong-label candidates never
-    * reach the distance sum), and the rank window spans the probed
-    * cells. Semantics: exact filtered top-k WITHIN the probed cells —
-    * the filter costs no recall beyond coarse pruning because nothing
-    * is shortlisted before it applies (a widened nProbe is the recall
-    * dial, exactly as in the unfiltered serve). Only (new_id, cell,
-    * old_id, 4 ints, label) rows ever cross an exchange. */
-  private[graft] def filteredAdcTopK(s: SparkSession, name: String,
-      delta: DataFrame, k: Int, nProbe: Int): DataFrame = {
-    val cand = s.table(s"${name}_pqcodes")
-      .select(col("cell"), col("vec_id"), col("codes"))
-      .join(s.table(s"${name}_meta")
-        .select(col("cell"), col("vec_id"), col("label").as("old_label")),
-        Seq("cell", "vec_id"))
-      .select(col("cell"), col("vec_id").as("old_id"), col("codes"),
-        col("old_label"))
-    // the query side is batch-sized by construction (delta × nProbe
-    // rows) — broadcast it EXPLICITLY: the label join above it hides
-    // its size from the estimator, and a fallback SMJ would exchange
-    // the bucketed candidate read it exists to keep local
-    val qs = broadcast(adcQuerySide(s, name,
-        delta.select(col("vec_id"), col("embedding")), nProbe)
-      .join(broadcast(delta.select(col("vec_id").as("new_id"),
-        col("label").as("q_label"))), "new_id"))
-    val w = Window.partitionBy("new_id")
-      .orderBy(col("approx_d"), col("old_id"))
-    cand.join(qs, "cell")
-      .filter(col("old_label") === col("q_label"))
-      .withColumn("approx_d", graft.functions.PqNative
-        .adcSum(col("codes"), col("dtable")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("new_id", "old_id", "rank", "approx_d")
-  }
-
-  /** CONSTANT-predicate filtered top-k with the selectivity-adaptive
-    * strategy switch every production vector store implements (q231):
-    *
-    *   - predicate matches < `selThreshold` of the index → PRE-FILTER:
-    *     resolve the eligible id set from the colocated meta table (the
-    *     predicate pushes into its bucketed scan), fetch ONLY those
-    *     members' float rows by a bucket-local cells⋈meta join (zero
-    *     index-side exchange), and score them EXACTLY against the
-    *     broadcast queries — recall-lossless, cost ∝ selectivity × N;
-    *   - dense predicate → POST-FILTER through the ADC index: restrict
-    *     the stored codes by the same bucket-local meta join, then the
-    *     standard probed-cell ADC rank — cost ∝ probed-cell mass, the
-    *     filter only narrows it.
-    *
-    * The dispatch counts the predicate over the meta table itself (a
-    * 3-narrow-column bucketed scan — index-owned statistics, not a lake
-    * scan; a production deployment would cache these counts with the
-    * index and refresh on mutation). The threshold is a cost-tolerance
-    * dial, not an asymptotic crossover: below it the exact scan costs
-    * ≤ threshold × corpus float reads AND buys exactness, the
-    * pgvector/FAISS "brute-force small filters" rule. Both branches
-    * return (new_id, old_id, rank, dist) — dist is exact integer L2 on
-    * the pre-filter branch, the ADC approximation on the dense branch,
-    * the inherent semantics of the adaptive serve. */
-  private[graft] def filteredTopK(s: SparkSession, name: String,
-      delta: DataFrame, pred: Column, k: Int, nProbe: Int = 2,
-      selThreshold: Double = 0.05): DataFrame = {
-    val meta = s.table(s"${name}_meta")
-    // ONE statistics pass, not two count jobs: total and matching ride
-    // the same scan of the 3-narrow-column meta table
-    val cnt = meta.agg(count(lit(1)).as("n"),
-      count(when(pred, 1)).as("m")).head()
-    val (total, matching) = (cnt.getLong(0), cnt.getLong(1))
-    if (total == 0L || matching < selThreshold * total) {
-      val elig = meta.filter(pred).select(col("cell"), col("vec_id"))
-      val cand = s.table(s"${name}_cells")
-        .join(elig, Seq("cell", "vec_id"))
-        .select(col("vec_id").as("old_id"),
-          quant(col("embedding")).as("hq"))
-      val dq = delta.select(col("vec_id").as("new_id"),
-        quant(col("embedding")).as("q"))
-      val w = Window.partitionBy("new_id").orderBy(col("dist"), col("old_id"))
-      cand.crossJoin(broadcast(dq))
-        .select(col("new_id"), col("old_id"),
-          qdist2(col("q"), col("hq")).as("dist"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select("new_id", "old_id", "rank", "dist")
-    } else {
-      val cand = s.table(s"${name}_pqcodes")
-        .select(col("cell"), col("vec_id"), col("codes"))
-        .join(meta.filter(pred).select(col("cell"), col("vec_id")),
-          Seq("cell", "vec_id"))
-        .select(col("cell"), col("vec_id").as("old_id"), col("codes"))
-      val w = Window.partitionBy("new_id").orderBy(col("dist"), col("old_id"))
-      cand.join(adcQuerySide(s, name, delta, nProbe), "cell")
-        .withColumn("dist", graft.functions.PqNative
-          .adcSum(col("codes"), col("dtable")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select("new_id", "old_id", "rank", "dist")
-    }
-  }
 
   /** q216/q218 shared serving kernel: ADC top-1 per delta vector over
     * the dir-keyed coarse cells (built when absent) + the STORED
@@ -1603,11 +1143,7 @@ object VectorOps {
     // one coarse index, many consumers: serve off the SAME dir-keyed
     // cells q214 builds and q143 matches (identical hist split),
     // building only when absent
-    val name = ivfIndexName(dir)
-    if (!graft.operators.IvfIndex.exists(s, name))
-      graft.operators.IvfIndex.write(s, hist, name)
-    if (!pqExists(s, name)) pqAttach(s, name)
-    adcTop1(s, name, delta)
+    adcTop1(s, dirIndex(s, dir, hist, pq = true), delta)
   }
 
   /** The serving kernel proper (index + PQ artifacts must exist):
@@ -1626,70 +1162,11 @@ object VectorOps {
     * cells per new_id. */
   private def adcTop1(s: SparkSession, name: String,
       delta: DataFrame, nProbe: Int = 1): DataFrame =
-    adcScores(s, name, delta, nProbe)
+    IvfIndex.adcScores(s, name, delta, nProbe)
       .groupBy("new_id")
       .agg(min(struct(col("approx_d"), col("old_id"))).as("best"))
       .select(col("new_id"), col("best").getField("old_id").as("old_id"),
         col("best").getField("approx_d").as("approx_d"))
-
-  /** Per-candidate ADC scores — (new_id, cell, old_id, approx_d) for
-    * every stored code in the query's probed cell(s). The shared core
-    * of [[adcTop1]] and the streaming ingest's shortlist-then-verify
-    * serving ([[graft.streaming.VecDupIngest]] ADC mode, which needs
-    * the pre-aggregation rows for a top-R cut plus `excludeIds` — the
-    * crash-replay self-match guard, batch-sized broadcast anti like
-    * IvfIndex.matchIncrement's). */
-  private[graft] def adcScores(s: SparkSession, name: String,
-      delta: DataFrame, nProbe: Int = 1,
-      excludeIds: Option[DataFrame] = None): DataFrame = {
-    val cand0 = s.table(s"${name}_pqcodes")
-      .select(col("cell"), col("vec_id").as("old_id"), col("codes"))
-    val cand = excludeIds.fold(cand0)(ex => cand0.join(
-      broadcast(ex.select(col("vec_id").as("old_id"))), Seq("old_id"),
-      "left_anti"))
-    cand.join(adcQuerySide(s, name, delta, nProbe), "cell")
-      .withColumn("approx_d", graft.functions.PqNative
-        .adcSum(col("codes"), col("dtable")))
-      .select(col("new_id"), col("cell"), col("old_id"), col("approx_d"))
-  }
-
-  /** The ADC query side — (new_id, cell, dtable) per delta vector and
-    * probed cell: probed cell(s), the encoding's query transform
-    * (residual subtracts the probed cell's centroid), then the
-    * per-(query, cell) 4×8 ADC distance table — each step in-row vs a
-    * 1-row broadcast; nothing here touches the index side. nProbe = 1
-    * keeps the scalar argmax path (no Generate node in the gated
-    * q216/q224 plans). Shared by [[adcScores]] and the filtered serves
-    * ([[filteredAdcTopK]], [[filteredTopK]]'s dense branch). */
-  private def adcQuerySide(s: SparkSession, name: String,
-      delta: DataFrame, nProbe: Int): DataFrame = {
-    val withCents = delta
-      .crossJoin(broadcast(
-        graft.operators.IvfIndex.centsFrame(s, name)))
-    val assigned =
-      if (nProbe <= 1)
-        withCents.select(col("vec_id").as("new_id"), col("cents"),
-          graft.operators.IvfIndex.cellOf(col("embedding")).as("cell"),
-          quant(col("embedding")).as("q"))
-      else
-        withCents.select(col("vec_id").as("new_id"), col("cents"),
-          explode(graft.operators.IvfIndex
-            .topCells(col("embedding"), nProbe)).as("cell"),
-          quant(col("embedding")).as("q"))
-    val rq =
-      if (pqEncodingOf(s, name) == "residual")
-        assigned.select(col("new_id"), col("cell"),
-          zip_with(col("q"), quant(centEmbOf(col("cell"))),
-            (x, y) => x - y).as("rq"))
-      else assigned.select(col("new_id"), col("cell"), col("q").as("rq"))
-    rq.crossJoin(broadcast(pqBookFrame(s, name).select(col("cents"))))
-      .select(col("new_id"), col("cell"),
-        transform(col("cents"), cs => struct(
-          cs.getField("m").as("m"),
-          cs.getField("cluster").as("cluster"),
-          qdist2(slice(col("rq"), cs.getField("m") * 16 + 1, lit(16)),
-            cs.getField("cent")).as("d"))).as("dtable"))
-  }
 
   /** The q218/q222 shared decomposition: per delta vector, the ADC pick
     * (pq_old), the exact integer-L2 top-1 WITHIN the probed cell
@@ -1707,9 +1184,9 @@ object VectorOps {
     // integer L2 instead of ADC
     val qcell = delta
       .crossJoin(broadcast(
-        graft.operators.IvfIndex.centsFrame(s, name)))
+        IvfIndex.centsFrame(s, name)))
       .select(col("vec_id").as("q_id"),
-        graft.operators.IvfIndex.cellOf(col("embedding")).as("cell"),
+        IvfIndex.cellOf(col("embedding")).as("cell"),
         quant(col("embedding")).as("q"))
     val cellTrue = s.table(s"${name}_cells")
       .select(col("cell"), col("vec_id").as("old_id"),
@@ -1813,50 +1290,6 @@ object VectorOps {
           + element_at(element_at(typedLit(subs), sid + 1), j + 1)
           + ((col("vec_id") * 13 + j * 7 + col("vec_id") * j) % 3 - 1))
           .cast("float")).as("embedding"))
-  }
-
-  /** One-Lloyd-round PQ codebook trained on `e` (vec_id, q), returned as
-    * the packed 1-row broadcast frame (shared by q104's top-k and q216's
-    * IVF-PQ serving). Seeds = the 8 lowest-id vectors per subspace; one
-    * integer-exact floor-mean update (shuffles k·M·subdim cells —
-    * corpus-size-free); the trained book is a DIMENSION ARTIFACT
-    * (4·8 rows) collected once — exactly how production PQ ships
-    * codebooks — so every consumer's serving plan is scan + broadcasts
-    * instead of re-running the training subtree. */
-  private def pqTrainCodebook(s: SparkSession, e: DataFrame,
-      seedSel: DataFrame => DataFrame = _.filter(col("vec_id") < 8))
-      : DataFrame = {
-    val cents0 = seedSel(e)
-      .select(col("vec_id").cast("int").as("cluster"), col("q"))
-      .select(explode(sequence(lit(0), lit(3))).as("m"), col("cluster"),
-        col("q"))
-      .select(col("m"), col("cluster"),
-        slice(col("q"), col("m") * 16 + 1, lit(16)).as("cent"))
-    val a0 = Tables.spread(e, col("vec_id"))
-      .crossJoin(broadcast(pqPack(cents0)))
-      .select(col("vec_id"), col("q"),
-        graft.functions.PqNative.pqEncode(col("q"), col("cents"))
-          .as("codes0"))
-    // one Lloyd update per (subspace, code): floor(sum/n) in pure
-    // integer arithmetic; shuffles k·M·subdim cells, corpus-size-free
-    val cents1 = a0
-      .select(col("q"), posexplode(col("codes0")).as(Seq("m", "code")))
-      .select(col("m"), col("code"),
-        posexplode(slice(col("q"), col("m") * 16 + 1, lit(16)))
-          .as(Seq("pos", "v")))
-      .groupBy("m", "code", "pos")
-      .agg(expr("(sum(v) - pmod(sum(v), count(*))) div count(*)")
-        .cast("long").as("cd"))
-      .groupBy("m", "code")
-      .agg(transform(
-        array_sort(collect_list(struct(col("pos"), col("cd")))),
-        x => x.getField("cd")).as("cent"))
-      .select(col("m"), col("code").as("cluster"), col("cent"))
-    import s.implicits._
-    val cbLocal = cents1.collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2)))
-      .toSeq.toDF("m", "cluster", "cent")
-    pqPack(cbLocal)
   }
 
   /** In-row PQ encoder, Column-HOF REFERENCE formulation: for each
@@ -2242,7 +1675,7 @@ AS embedding FROM embeddings)"""
 
     // the q216 chain with the coarse seeds AND the codebook training
     // population narrowed to the pre-append 80% slice while codes and
-    // serving cover ALL history — ≙ attach-then-pqAppend
+    // serving cover ALL history — ≙ attach-then-append
     "q224_pq_append_match" ->
       s"""WITH ${sqlIvfPqChain(centWhere = " WHERE vec_id % 10 <> 8",
              trainWhere = " AND vec_id % 10 <> 8")}

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.core.Tables
 import graft.operators.{ConnectedComponents, IvfIndex}
 
 /** Streaming EMBEDDING near-duplicate ingest — the vector twin of
@@ -93,9 +94,9 @@ object VecDupIngest {
     * exact-verify against their float rows (two-stage serving; the dup
     * DECISION stays an exact cosine ≥ tau test, so precision is
     * unchanged and the only concession is shortlist recall, measured in
-    * the soak). The batch indexes via the frozen-book
-    * [[graft.queries.VectorOps.pqAppend]]; every (re)start heals the
-    * pqAppend crash window ([[graft.queries.VectorOps.pqHeal]] — the
+    * the soak). The batch indexes via [[IvfIndex.append]], which
+    * encodes it against the frozen book; every (re)start heals that
+    * append's crash window ([[IvfIndex.pqHeal]] — the
     * cells-appended-codes-missing gap) before serving, and a missing PQ
     * artifact (an RTBF remove dropped it — derived codes must not
     * outlive removed rows) re-attaches against the CURRENT corpus: code
@@ -140,21 +141,17 @@ object VecDupIngest {
       // staged batches are in the index now; drop the staging area (a
       // crash here is safe: the replay sees the index and never reads
       // _pending again)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      if (pendingDir.exists()) rm(pendingDir)
+      if (pendingDir.exists()) Tables.rmTree(pendingDir)
       bootstrap = true
     }
     if (adcServe) {
       // serving-artifact recovery, every (re)start: a fresh seed or an
       // RTBF-invalidated book re-attaches (retrain = a recovery/rebuild
-      // decision); an existing book heals the pqAppend crash window
+      // decision); an existing book heals the append crash window
       // (cells appended, codes missing) before any candidate read
-      if (!graft.queries.VectorOps.pqExists(spark, indexName))
-        graft.queries.VectorOps.pqAttach(spark, indexName)
-      else graft.queries.VectorOps.pqHeal(spark, indexName)
+      if (!IvfIndex.attached(spark, indexName, IvfIndex.Pq))
+        IvfIndex.pqAttach(spark, indexName)
+      else IvfIndex.pqHeal(spark, indexName)
     }
     // 1. drop anything cosine-similar to the seen corpus (self-rows
     //    excluded on the index side — the replay guard; on a bootstrap
@@ -193,10 +190,7 @@ object VecDupIngest {
     //    the same index returns the duplicated old_id at ranks 1 AND 2,
     //    displacing the genuine second-nearest — [[IvfIndex.compact]]
     //    drops the duplicates and repairs the ranks (spec-pinned).
-    if (!bootstrap) {
-      if (adcServe) graft.queries.VectorOps.pqAppend(spark, indexName, vecs)
-      else IvfIndex.append(spark, vecs, indexName)
-    }
+    if (!bootstrap) IvfIndex.append(spark, vecs, indexName)
     marker.mkdirs()
     // operational compaction cadence: every `compactEvery` committed
     // batches, coalesce the per-append file accumulation and drop any
@@ -204,10 +198,8 @@ object VecDupIngest {
     // semantics-free (results hash-identical, spec-pinned), so a crash
     // mid-compact just leaves it for the next trigger — it never
     // re-runs the batch.
-    // ADC mode compacts the codes table in lockstep (keepPq) — dropping
-    // it would force a full book retrain + corpus re-encode per cadence
     if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-      IvfIndex.compact(spark, indexName, keepPq = adcServe)
+      IvfIndex.compact(spark, indexName)
   }
 
   /** Right-to-be-forgotten for the vector tier (the [[NearDupIngest
@@ -236,10 +228,6 @@ object VecDupIngest {
     val pendingDir = new java.io.File(outDir, "_pending")
     if (pendingDir.isDirectory) {
       val del = ids.select(col("vec_id")).distinct().localCheckpoint(true)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
       // recover any swap a prior crash left half-done
       Option(pendingDir.listFiles()).foreach(_.filter(f =>
         f.isDirectory && f.getName.startsWith(TmpPrefix)).foreach { t =>
@@ -247,7 +235,7 @@ object VecDupIngest {
           t.getName.stripPrefix(TmpPrefix))
         if (!orig.exists() && new java.io.File(t, "_SUCCESS").exists())
           t.renameTo(orig)
-        else rm(t)
+        else Tables.rmTree(t)
       })
       Option(pendingDir.listFiles()).foreach(_.filter(f =>
         f.isDirectory && !f.getName.startsWith(TmpPrefix)).foreach { b =>
@@ -255,7 +243,7 @@ object VecDupIngest {
         spark.read.parquet(b.getAbsolutePath)
           .join(del, Seq("vec_id"), "left_anti")
           .write.mode("overwrite").parquet(tmp.getAbsolutePath)
-        rm(b)
+        Tables.rmTree(b)
         // a silent rename failure (locked dir, cross-device tmp) would
         // leave the batch absent until the next processDeletes recovers
         // the tmp — and an intervening processBatch would see a shrunken
@@ -287,7 +275,7 @@ object VecDupIngest {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("new_id")
       .orderBy(col("approx_d"), col("old_id"))
-    val shortlist = graft.queries.VectorOps
+    val shortlist = IvfIndex
       .adcScores(spark, indexName, vecs, nProbe = nProbe,
         excludeIds = Some(vecs.select("vec_id")))
       .withColumn("r", row_number().over(w))

@@ -34,8 +34,7 @@ object VecHealth {
 
   private def quantQ(vecs: DataFrame): DataFrame =
     vecs.select(col("vec_id"),
-      transform(col("embedding"),
-        x => round(x.cast("double") * 1048576.0).cast("long")).as("q"))
+      graft.operators.IvfIndex.quant(col("embedding")).as("q"))
 
   /** Fit the frozen reference model on a healthy corpus slice. A model
     * from zero reference vectors is meaningless — fail with a clear

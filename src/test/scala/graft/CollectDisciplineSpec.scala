@@ -58,15 +58,6 @@ class CollectDisciplineSpec extends AnyFunSuite {
         "construction at any corpus scale, unlike the q134 raw vocab) " +
         "+ q208 piece inventory (LIMIT-64 TakeOrdered, the BPE-codebook " +
         "class)"),
-    "queries/VectorOps.scala" -> (3,
-      "k-means packed-centroid codebook (k*d); the q205 moment pass is " +
-        "now a 1-row head() over the native vec_moments aggregate (2,145 " +
-        "Long cells — a fixed-size model artifact, reduced distributed); " +
-        "plus pqAttach's trained 32-row codebook (the production " +
-        "ship-the-codebook artifact) and sqAttach's 1-row packed per-dim " +
-        "(min, span) book (d pairs, a dimension artifact reduced " +
-        "distributed); the persisted books are read back through " +
-        "core/SessionMemo.scala"),
     "streaming/VecHealth.scala" -> (2,
       "fit's 1-row projection bounds + the <=16-row bin histogram " +
         "(binCounts — the metrics-model class, never corpus-sized)"),
@@ -77,12 +68,18 @@ class CollectDisciplineSpec extends AnyFunSuite {
       "denseRankInPlace per-partition rank-class counts: <= " +
         "spark.sql.shuffle.partitions rows (the q151 distributed " +
         "prefix-sum offsets class, never corpus-sized)"),
-    "operators/IvfIndex.scala" -> (2,
+    "operators/IvfIndex.scala" -> (5,
       "IVF build seed fetch: k rows via TakeOrdered (k*d values — the " +
         "same packed-centroid class as the k-means codebook), reused for " +
-        "both the _cents write and the assignment broadcast; and the Lloyd " +
+        "both the _cents write and the assignment broadcast; the Lloyd " +
         "refinement round's updated-centroid fetch (k rows of k*d cells " +
-        "— the distributed agg reduces the corpus BEFORE the collect)"),
+        "— the distributed agg reduces the corpus BEFORE the collect); " +
+        "pqTrainCodebook's trained 32-row codebook (the production " +
+        "ship-the-codebook artifact, shared with q104) and the 1-row " +
+        "packed PQ book pqAttach persists; and sqAttach's 1-row packed " +
+        "per-dim (min, span) book (d pairs, a dimension artifact reduced " +
+        "distributed); the persisted books are read back through " +
+        "core/SessionMemo.scala"),
     "core/SessionMemo.scala" -> (1,
       "the one read-through of a warehouse-scope one-row table (the " +
         "packed _cents, _pqbook and _sqbook rows): one row by construction")
@@ -142,11 +139,27 @@ class CollectDisciplineSpec extends AnyFunSuite {
   // hint anywhere fails the suite until its bound is written down here.
   private val broadcastAllowed: Map[String, (Int, String)] = Map(
     "cdc/Materialize.scala" -> (1, "dictionary dim (schema-sized)"),
-    "operators/IvfIndex.scala" -> (5,
+    "operators/IvfIndex.scala" -> (19,
       "IVF centroid codebook (k rows) at write/append/match sites, the " +
         "Lloyd-round assignment codebook (same k-row frame per " +
         "refinement pass), and the matchIncrement excludeIds anti side " +
-        "(ingest-batch-sized: the replaying batch's own ids)"),
+        "(ingest-batch-sized: the replaying batch's own ids); the PQ " +
+        "family: pqTrainCodebook's 1-row seed book, pqAttach's " +
+        "residual cents, the 1-row book over every codes encode (attach " +
+        "and the frozen-book append/heal), the probed-cell cents shared " +
+        "by that append and the ADC query side, the query side's 1-row " +
+        "book (codes are STORED, no candidate-side encode broadcast), " +
+        "and adcScores' excludeIds " +
+        "anti side (ingest-batch-sized — the replay-guard class); the " +
+        "SQ family: sqAttach's 1-row book over its encode scan and " +
+        "sqTopK's cents, book and query side (delta x nProbe rows); the " +
+        "meta family: metaAttach's packed cents (k*d); and the " +
+        "filtered serves (q230/q231): filteredAdcTopK's query side " +
+        "(delta x nProbe rows + its label frame — batch-sized by " +
+        "construction, broadcast EXPLICITLY because the label join " +
+        "hides the size from the estimator) and filteredTopK's " +
+        "pre-filter query set (the 10% delta, the q31 " +
+        "queries-broadcast discipline)"),
     "operators/LshIndex.scala" -> (2,
       "the excludeIds anti sides of matchIncrement/matchIncrementWeighted " +
         "(ingest-batch-sized: the replaying batch's own doc_ids)"),
@@ -178,7 +191,7 @@ class CollectDisciplineSpec extends AnyFunSuite {
         "rdd.aggregate — partition-count-sized driver traffic, no " +
         "broadcast frames left; note the discipline scan below does not " +
         "count rdd.aggregate as a driver materialization)"),
-    "queries/VectorOps.scala" -> (35,
+    "queries/VectorOps.scala" -> (19,
       "query sets (vec_id < 10), packed codebooks (k*d), PQ codebooks, " +
         "k-means seeds, q143 delta assignments, q167 anchors (<= AnchorCap " +
         "by construction: vec_id % 25 = 0 AND vec_id < 25*AnchorCap), " +
@@ -186,22 +199,10 @@ class CollectDisciplineSpec extends AnyFunSuite {
         "brute-force discipline: history scans, queries broadcast), " +
         "q209's 10-query fingerprint probe + its 30-row approx top-k " +
         "(both query-set-sized), q210's 1-row bounds + 1-row totals, " +
-        "the PQ attach/serve set (residualFrame's packed cents, " +
-        "pqAttach's 1-row book over the encode scan, ivfPqTop1's packed " +
-        "cents + 1-row book on the query side — codes are STORED now, " +
-        "no candidate-side encode broadcast), pqAppend's frozen cents + " +
-        "frozen book over the increment encode (both 1-row), q218 " +
-        "adding the in-cell-truth cents broadcast and the q31/q190 " +
-        "brute-truth discipline, adcScores' excludeIds anti side " +
-        "(ingest-batch-sized — the LshIndex/IvfIndex replay-guard " +
-        "class), q229's rerank query side (the 10% delta — the " +
-        "q31/q190 queries-broadcast discipline), and the filtered-ANN " +
-        "set (q230/q231): metaAttach's packed cents (k*d), " +
-        "filteredAdcTopK's query side (delta × nProbe rows + its label " +
-        "frame — batch-sized by construction, broadcast EXPLICITLY " +
-        "because the label join hides the size from the estimator), " +
-        "and filteredTopK's pre-filter query set (the 10% delta, the " +
-        "q31 queries-broadcast discipline)")
+        "q218 adding the in-cell-truth cents broadcast and the q31/q190 " +
+        "brute-truth discipline, and q229's rerank query side (the 10% " +
+        "delta — the q31/q190 queries-broadcast discipline); the PQ/SQ/" +
+        "meta attach and serve hints live in operators/IvfIndex.scala")
   )
 
   test("every broadcast() hint in main source is a reviewed bounded frame") {

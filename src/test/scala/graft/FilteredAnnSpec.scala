@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The metadata-filtered ANN serving surface (q230/q231): the
-  * cell-colocated payload table (VectorOps.metaAttach), the per-query
+  * cell-colocated payload table (IvfIndex.metaAttach), the per-query
   * label-equality serve (filteredAdcTopK), and the selectivity-adaptive
   * strategy switch (filteredTopK). The oracle gates pin the answers
   * bit-for-bit; this spec pins the parts a hash can't see —
@@ -21,8 +21,9 @@ import org.apache.spark.sql.functions._
   *     contiguous prefix, full k wherever enough same-label candidates
   *     exist in the probed cells),
   *   - and the _meta invalidation contract on every index mutation
-  *     (append drops it even under keepPq — nothing appends payload;
-  *     dedup-only compaction keeps it — membership is unchanged).
+  *     (append drops it even when it grows the PQ codes — nothing
+  *     appends payload; dedup-only compaction keeps it — membership is
+  *     unchanged).
   */
 class FilteredAnnSpec extends AnyFunSuite {
 
@@ -49,11 +50,14 @@ class FilteredAnnSpec extends AnyFunSuite {
     if (!graft.operators.IvfIndex.exists(spark, name)) {
       graft.operators.IvfIndex.write(
         spark, hist.select("vec_id", "embedding"), name)
-      graft.queries.VectorOps.pqAttach(spark, name)
+      graft.operators.IvfIndex.pqAttach(spark, name)
     }
-    if (!graft.queries.VectorOps.metaExists(spark, name))
-      graft.queries.VectorOps.metaAttach(spark, name, hist)
+    if (!metaAttached(name))
+      graft.operators.IvfIndex.metaAttach(spark, name, hist)
   }
+
+  private def metaAttached(n: String): Boolean =
+    graft.operators.IvfIndex.attached(spark, n, graft.operators.IvfIndex.Meta)
 
   private val selectivePred = col("label") === 3 && col("vec_id") % 7 === 0
   private val densePred = col("label") === 3
@@ -61,7 +65,7 @@ class FilteredAnnSpec extends AnyFunSuite {
   test("selective predicate takes the exact pre-filter branch: " +
       "no codes scan, label filter pushed into the meta scan") {
     ensureIndex()
-    val df = graft.queries.VectorOps.filteredTopK(
+    val df = graft.operators.IvfIndex.filteredTopK(
       spark, name, delta.select("vec_id", "embedding"), selectivePred, 3)
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("_pqcodes"),
@@ -73,7 +77,7 @@ class FilteredAnnSpec extends AnyFunSuite {
   test("pre-filter branch is exact: equals brute force over the " +
       "predicate slice") {
     ensureIndex()
-    val got = graft.queries.VectorOps.filteredTopK(
+    val got = graft.operators.IvfIndex.filteredTopK(
         spark, name, delta.select("vec_id", "embedding"), selectivePred, 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
       .toSet
@@ -100,7 +104,7 @@ class FilteredAnnSpec extends AnyFunSuite {
   test("dense predicate takes the ADC branch, and every result row " +
       "satisfies the predicate") {
     ensureIndex()
-    val df = graft.queries.VectorOps.filteredTopK(
+    val df = graft.operators.IvfIndex.filteredTopK(
       spark, name, delta.select("vec_id", "embedding"), densePred, 3)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("_pqcodes"),
@@ -115,7 +119,7 @@ class FilteredAnnSpec extends AnyFunSuite {
   test("per-query label filter: labels equal, ranks a contiguous " +
       "prefix, full k where enough same-label candidates exist") {
     ensureIndex()
-    val res = graft.queries.VectorOps
+    val res = graft.operators.IvfIndex
       .filteredAdcTopK(spark, name, delta, k = 3, nProbe = 2)
     val lab = corpus.select(col("vec_id"), col("label"))
     val mismatched = res
@@ -133,7 +137,7 @@ class FilteredAnnSpec extends AnyFunSuite {
     assert(ranks == 0L)
     // same-label candidate mass in the probed cells vs rows returned:
     // wherever >= 3 same-label candidates were scoreable, exactly 3 rows
-    val avail = graft.queries.VectorOps
+    val avail = graft.operators.IvfIndex
       .adcScores(spark, name, delta.select("vec_id", "embedding"),
         nProbe = 2)
       .join(lab.select(col("vec_id").as("new_id"),
@@ -149,30 +153,29 @@ class FilteredAnnSpec extends AnyFunSuite {
     assert(short == 0L)
   }
 
-  test("_meta invalidation: dropped on append (even keepPq) and " +
-      "remove, kept by dedup-only compaction") {
+  test("_meta invalidation: dropped on append and remove, kept by " +
+      "compaction") {
     val n2 = "fann_spec_idx2"
     val vecs = hist.select("vec_id", "embedding").limit(40)
       .localCheckpoint()
     graft.operators.IvfIndex.write(spark, vecs, n2)
-    graft.queries.VectorOps.metaAttach(spark, n2,
+    graft.operators.IvfIndex.metaAttach(spark, n2,
       hist.limit(40).localCheckpoint())
-    assert(graft.queries.VectorOps.metaExists(spark, n2))
+    assert(metaAttached(n2))
     // dedup-only compaction: membership unchanged -> meta survives
-    graft.operators.IvfIndex.compact(spark, n2, keepPq = true)
-    assert(graft.queries.VectorOps.metaExists(spark, n2),
+    graft.operators.IvfIndex.compact(spark, n2)
+    assert(metaAttached(n2),
       "compaction never changes membership; meta must survive")
-    // append: no payload append path exists -> must invalidate, even
-    // when the caller keeps its PQ codes
+    // append: no payload append path exists -> must invalidate
     graft.operators.IvfIndex.append(spark,
-      delta.select("vec_id", "embedding").limit(1), n2, keepPq = true)
-    assert(!graft.queries.VectorOps.metaExists(spark, n2),
+      delta.select("vec_id", "embedding").limit(1), n2)
+    assert(!metaAttached(n2),
       "append must drop meta: a stale copy hides appended rows from " +
         "every filtered serve")
-    graft.queries.VectorOps.metaAttach(spark, n2, corpus.limit(41))
+    graft.operators.IvfIndex.metaAttach(spark, n2, corpus.limit(41))
     graft.operators.IvfIndex.remove(spark, n2,
       vecs.select("vec_id").limit(1))
-    assert(!graft.queries.VectorOps.metaExists(spark, n2),
+    assert(!metaAttached(n2),
       "remove must drop meta: a lingering row resurrects the removed " +
         "vector in filtered serves")
   }

@@ -45,7 +45,7 @@ class MultiProbeAdcSpec extends AnyFunSuite {
     val delta = corpus.filter(col("vec_id") % 10 === 9)
     if (!graft.operators.IvfIndex.exists(spark, name)) {
       graft.operators.IvfIndex.write(spark, hist, name, k = k)
-      graft.queries.VectorOps.pqAttach(spark, name)
+      graft.operators.IvfIndex.pqAttach(spark, name)
     }
     // brute integer-L2 truth (the q218 discipline: min-struct, ties to
     // the lowest old_id)
@@ -63,7 +63,7 @@ class MultiProbeAdcSpec extends AnyFunSuite {
       .agg(min(struct(col("d2"), col("old_id"))).getField("old_id")
         .as("true_old"))
     // probed candidate set + ADC pick, both off the stored codes
-    val scores = graft.queries.VectorOps
+    val scores = graft.operators.IvfIndex
       .adcScores(spark, name, delta, nProbe = p)
     val contained = scores
       .join(brute, scores("new_id") === brute("q_id") &&

@@ -136,7 +136,7 @@ class PlanBudgetSpec extends AnyFunSuite {
     "q226_regime_recall"         -> 3, // q222's shape over the 64-cell regime fixture (residual arm)
     "q227_regime_raw"            -> 3, // identical, raw codes (the A/B control arm)
     "q223_multiprobe_match"      -> 1, // nProbe=2: the delta explodes x2 in-row BEFORE its one cell exchange; bucketed index read stays exchange-free; cross-cell top-1 partial-aggregates on new_id
-    "q224_pq_append_match"       -> 1, // build+attach + replay-deduped pqAppend at construction (anti-join vs indexed ids, materialized, then frozen-book encode + bucketed appends); serving = q216's one-exchange plan over the grown codes table
+    "q224_pq_append_match"       -> 1, // build+attach + replay-deduped IvfIndex.append at construction (anti-join vs indexed ids, materialized, then frozen-book encode + bucketed appends); serving = q216's one-exchange plan over the grown codes table
     "q144_hybrid_rrf"            -> 5, // q31 (1) + q109 (1) + fuse join/window over ≤80-row sides
     "q145_domain_split"          -> 1, // ONE domain-key exchange, map-side combined
     "q146_label_propagation"     -> 1, // vec_id exchange serves knn window + vote agg + argmax

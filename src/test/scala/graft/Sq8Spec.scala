@@ -18,8 +18,9 @@ import org.apache.spark.sql.functions._
   *     change ever flips this, the 64-byte layout has lost its
   *     justification and should be dropped,
   *   - invalidation on every index mutation (append drops SQ even
-  *     under keepPq — nothing appends SQ codes) and lockstep
-  *     compaction survival (membership unchanged ⇒ codes + book stay).
+  *     when it grows the PQ codes — nothing appends SQ codes) and
+  *     lockstep compaction survival (membership unchanged ⇒ codes +
+  *     book stay).
   */
 class Sq8Spec extends AnyFunSuite {
 
@@ -95,8 +96,8 @@ class Sq8Spec extends AnyFunSuite {
     val hist = rv.filter(col("vec_id") % 10 =!= 9)
     val delta = rv.filter(col("vec_id") % 10 === 9)
     graft.operators.IvfIndex.write(spark, hist, name, k = 64)
-    graft.queries.VectorOps.pqAttach(spark, name) // residual (shipped)
-    graft.queries.VectorOps.sqAttach(spark, name)
+    graft.operators.IvfIndex.pqAttach(spark, name) // residual (shipped)
+    graft.operators.IvfIndex.sqAttach(spark, name)
     // brute integer-L2 truth (min-struct, ties to the lowest old_id)
     def quant(c: org.apache.spark.sql.Column) =
       transform(c, x => round(x.cast("double") * 1048576.0).cast("long"))
@@ -111,12 +112,12 @@ class Sq8Spec extends AnyFunSuite {
       .groupBy("new_id")
       .agg(min(struct(col("d"), col("old_id"))).getField("old_id")
         .as("true_old"))
-    val pqPick = graft.queries.VectorOps
+    val pqPick = graft.operators.IvfIndex
       .adcScores(spark, name, delta.select("vec_id", "embedding"))
       .groupBy("new_id")
       .agg(min(struct(col("approx_d"), col("old_id"))).getField("old_id")
         .as("pick"))
-    val sqPick = graft.queries.VectorOps
+    val sqPick = graft.operators.IvfIndex
       .sqTopK(spark, name, delta.select("vec_id", "embedding"),
         k = 1, nProbe = 1)
       .select(col("new_id"), col("old_id").as("pick"))
@@ -133,6 +134,9 @@ class Sq8Spec extends AnyFunSuite {
       "SQ8 at 8 bits/dim should be near-exact on the regime fixture")
   }
 
+  private def sqAttached(n: String): Boolean =
+    graft.operators.IvfIndex.attached(spark, n, graft.operators.IvfIndex.Sq)
+
   test("lifecycle: mutations drop SQ artifacts; dedup-only compaction " +
       "keeps them aligned") {
     val name = "sq8_spec_idx2"
@@ -140,26 +144,25 @@ class Sq8Spec extends AnyFunSuite {
       .select(col("vec_id"), col("embedding"))
     val vecs = emb.filter(col("vec_id") < 40).localCheckpoint()
     graft.operators.IvfIndex.write(spark, vecs, name)
-    graft.queries.VectorOps.sqAttach(spark, name)
-    assert(graft.queries.VectorOps.sqExists(spark, name))
+    graft.operators.IvfIndex.sqAttach(spark, name)
+    assert(sqAttached(name))
     // dedup-only compaction: codes compact in lockstep, book survives
-    graft.operators.IvfIndex.compact(spark, name, keepPq = true)
-    assert(graft.queries.VectorOps.sqExists(spark, name),
+    graft.operators.IvfIndex.compact(spark, name)
+    assert(sqAttached(name),
       "compaction never changes membership; SQ artifacts must survive")
     val cells = spark.table(s"${name}_cells").count()
     val codes = spark.table(s"${name}_sqcodes").count()
     assert(cells == codes, s"codes ($codes) out of step with cells ($cells)")
-    // append: nothing appends SQ codes -> must invalidate, even when
-    // the caller keeps its PQ codes
+    // append: nothing appends SQ codes -> must invalidate
     graft.operators.IvfIndex.append(spark,
-      emb.filter(col("vec_id") === 40), name, keepPq = true)
-    assert(!graft.queries.VectorOps.sqExists(spark, name),
+      emb.filter(col("vec_id") === 40), name)
+    assert(!sqAttached(name),
       "append must drop SQ: a stale codes table hides appended rows " +
         "from every SQ serve")
-    graft.queries.VectorOps.sqAttach(spark, name)
+    graft.operators.IvfIndex.sqAttach(spark, name)
     graft.operators.IvfIndex.remove(spark, name,
       vecs.select("vec_id").limit(1))
-    assert(!graft.queries.VectorOps.sqExists(spark, name),
+    assert(!sqAttached(name),
       "remove must drop SQ: lingering codes resurrect removed vectors")
   }
 }

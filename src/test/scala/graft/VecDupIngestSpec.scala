@@ -330,7 +330,7 @@ class VecDupIngestSpec extends AnyFunSuite {
     // minimum — it always survives the shortlist into exact verify)
     assert(!keptIds(outA, 1L).exists(_ >= 40000L))
     // ADC mode maintained the serving artifacts: one code row per cell
-    // row after the pqAppend path
+    // row after the PQ-growing append path
     assert(spark.table("vdi6a_pqcodes").count() ==
       spark.table("vdi6a_cells").count())
   }
@@ -344,12 +344,12 @@ class VecDupIngestSpec extends AnyFunSuite {
     VecDupIngest.processBatch(spark, b1, 1L, "vdi7", out, adcServe = true)
     val kept1 = keptIds(out, 1L)
     // crash window: batch 1's cells append landed, codes + marker lost —
-    // exactly what a crash inside pqAppend leaves behind
+    // exactly what a crash inside IvfIndex.append leaves behind
     new java.io.File(out, "_committed/1").delete()
     import org.apache.spark.sql.functions.{col => c}
     // simulate by re-appending cells only (the replayed batch will ALSO
     // re-append; both dup classes must come out harmless)
-    IvfIndex.append(spark, b1, "vdi7", keepPq = true)
+    IvfIndex.appendCells(spark, b1, "vdi7")
     VecDupIngest.processBatch(spark, b1, 1L, "vdi7", out, adcServe = true)
     assert(keptIds(out, 1L) == kept1,
       "ADC replay with the batch self-indexed must reproduce the kept set")
@@ -374,8 +374,8 @@ class VecDupIngestSpec extends AnyFunSuite {
     }
     // decisions unchanged by the mid-stream compact: the copies dropped
     assert(!keptIds(out, 2L).exists(_ >= 70000L))
-    // artifacts stayed attached and aligned (no dropPq -> no retrain gap)
-    assert(graft.queries.VectorOps.pqExists(spark, "vdi9"))
+    // artifacts stayed attached and aligned (no drop -> no retrain gap)
+    assert(IvfIndex.attached(spark, "vdi9", IvfIndex.Pq))
     assert(spark.table("vdi9_pqcodes").count() ==
       spark.table("vdi9_cells").count())
     // replay the crash window ACROSS a compaction boundary: batch 2
@@ -384,8 +384,8 @@ class VecDupIngestSpec extends AnyFunSuite {
     new java.io.File(out, "_committed/2").delete()
     VecDupIngest.processBatch(spark, batches(2), 2L, "vdi9", out,
       compactEvery = 2, adcServe = true)
-    graft.operators.IvfIndex.compact(spark, "vdi9", keepPq = true)
-    assert(graft.queries.VectorOps.pqExists(spark, "vdi9"),
+    IvfIndex.compact(spark, "vdi9")
+    assert(IvfIndex.attached(spark, "vdi9", IvfIndex.Pq),
       "lockstep compact must not drop the PQ artifacts")
     val cellsN = spark.table("vdi9_cells").count()
     val codesN = spark.table("vdi9_pqcodes").count()
@@ -404,11 +404,11 @@ class VecDupIngestSpec extends AnyFunSuite {
     // drops the PQ artifacts (derived codes must not outlive the row)
     VecDupIngest.processDeletes(spark,
       vecs.filter(col("vec_id") === 0L).select("vec_id"), 0L, "vdi8", out)
-    assert(!graft.queries.VectorOps.pqExists(spark, "vdi8"))
+    assert(!IvfIndex.attached(spark, "vdi8", IvfIndex.Pq))
     // next batch re-attaches and a re-crawl of the purged vector SURVIVES
     val b1 = copies(60000L, 1) // exact copy of vec 0
     VecDupIngest.processBatch(spark, b1, 1L, "vdi8", out, adcServe = true)
     assert(keptIds(out, 1L) == Set(60000L))
-    assert(graft.queries.VectorOps.pqExists(spark, "vdi8"))
+    assert(IvfIndex.attached(spark, "vdi8", IvfIndex.Pq))
   }
 }
