@@ -72,6 +72,23 @@ object TextNative {
     new GenericArrayData(out.toArray)
   }
 
+  /** Number of non-empty space-delimited tokens — `size(tokens(text))`
+    * without building the array: counts the runs of non-0x20 bytes (0x20
+    * never occurs inside a multi-byte UTF-8 sequence, so the runs are the
+    * tokens [[tokens]] returns). */
+  def tokenCount(text: UTF8String): Int = {
+    val len = text.numBytes()
+    var n = 0
+    var inTok = false
+    var i = 0
+    while (i < len) {
+      if (text.getByte(i) == ' ') inTok = false
+      else if (!inTok) { inTok = true; n += 1 }
+      i += 1
+    }
+    n
+  }
+
   private val hexChars = "0123456789abcdef".toCharArray
 
   private def toHex(b: Array[Byte]): UTF8String = {
@@ -498,6 +515,25 @@ case class Tokens(child: Expression) extends UnaryExpression {
     defineCodeGen(ctx, ev, t =>
       s"graft.functions.TextNative.tokens($t)")
   override protected def withNewChildInternal(newChild: Expression): Tokens =
+    copy(child = newChild)
+}
+
+/** text → its token count, equal to `size(graft_tokens(text))` (for the
+  * projections that use the token array only for its size). */
+case class TokenCount(child: Expression) extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case StringType => TypeCheckResult.TypeCheckSuccess
+    case dt => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires string input, got ${dt.sql}")
+  }
+  override def dataType: DataType = IntegerType
+  override def prettyName: String = "graft_token_count"
+  override def nullSafeEval(t: Any): Any =
+    TextNative.tokenCount(t.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, t =>
+      s"graft.functions.TextNative.tokenCount($t)")
+  override protected def withNewChildInternal(newChild: Expression): TokenCount =
     copy(child = newChild)
 }
 

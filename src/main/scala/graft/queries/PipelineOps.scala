@@ -74,7 +74,7 @@ object PipelineOps {
     // build starts from. One short-key shuffle (|sources| rows out).
     "q83_domain_stats" -> ((s, dir) => {
       t(s, dir, "documents")
-        .withColumn("n_toks", size(TextOps.tokensCol).cast("long"))
+        .withColumn("n_toks", TextOps.tokenCountCol.cast("long"))
         .groupBy("source")
         .agg(
           count(lit(1)).as("n_docs"),
@@ -419,7 +419,7 @@ object PipelineOps {
       // pinned once — the DSIR stage scans its input twice (bucket
       // counts, then scoring)
       val quality = deduped
-        .withColumn("n_tokens", size(TextOps.tokensCol))
+        .withColumn("n_tokens", TextOps.tokenCountCol)
         .filter(col("n_tokens").between(5, 100000) &&
           (col("n_chars") + 1).cast("double") /
             col("n_tokens").cast("double") < 40.0)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.Tables
+import graft.functions.DsirExpressions
 
 /** Training-data pipeline pack #4: data SELECTION for LM training —
   * retrieval-style chunking, n-gram-LM perplexity filtering (the
@@ -46,10 +47,8 @@ object SelectionOps {
   // distribution = the 'src0' slice of the corpus. Per-doc score
   // Σ_tok ln[(T_b+1)/(T+256)] − ln[(C_b+1)/(C+256)] — positive means the
   // doc looks more like the target than like the corpus average.
-  private val DsirBuckets = 256
-  private val DsirTarget = "src0"
-  private def bucketCol(tok: Column): Column =
-    conv(substring(md5(tok), 1, 4), 16, 10).cast("long") % DsirBuckets
+  private[graft] val DsirNBuckets = 256
+  private[graft] val DsirTarget = "src0"
 
   // ---- q125: Gumbel top-k importance resampling ------------------------
   // The RESAMPLE half of DSIR: draw a weighted-without-replacement sample
@@ -238,8 +237,8 @@ object SelectionOps {
     * the rank window runs AFTER the limit, over k rows only. */
   private[graft] def gumbelTopKOf(w: DataFrame): DataFrame = {
     val g = -log(-log(
-      (conv(substring(md5(concat(lit("g|"), col("doc_id").cast("string"))),
-        1, 8), 16, 10).cast("long").cast("double") + 0.5) / 4294967296.0))
+      (DsirExpressions.md5U32(concat(lit("g|"), col("doc_id").cast("string")))
+        .cast("double") + 0.5) / 4294967296.0))
     w.withColumn("samp_key", col("dsir_lr") / ResampleTau + g)
       .orderBy(col("samp_key").desc, col("doc_id")).limit(ResampleK)
       .withColumn("rank",
@@ -253,38 +252,43 @@ object SelectionOps {
     dsirWeightsOf(spread(t(s, dir, "documents")))
 
   /** DSIR importance weights over any (doc_id, source, text) frame — the
-    * q120 operator parametrized by its input stage. */
+    * q120 operator parametrized by its input stage.
+    *
+    * Two passes over `base`. The bucket-count pass is the operator's one
+    * eager job: it explodes each document's native token buckets
+    * ([[graft.functions.DsirBuckets]]) into one skinny (bucket, count)
+    * exchange and a 256-row collect. The driver turns the counts into the
+    * 256 log-ratios ln[(T_b+1)(C+256) / ((C_b+1)(T+256))] — integer
+    * products in Long, `StrictMath.log` as Spark's `log` evaluates it —
+    * and the scoring pass is one [[graft.functions.DsirScore]] call per
+    * row, which folds that table over the document's tokens in sorted
+    * order (NULL for a bucket with no count, as a map lookup gives). The
+    * empty-document filter counts tokens without building the array. */
   private[graft] def dsirWeightsOf(base: DataFrame): DataFrame = {
-      val docs = base
-        .select(col("doc_id"), col("source"), TextOps.tokensCol.as("t"))
-        .filter(size(col("t")) > 0)
-      // dimension artifact: per-bucket (corpus, target) instance counts —
-      // one skinny exchange, 256-row collect
-      val counts = docs
-        .select(col("source"), explode(col("t")).as("tok"))
-        .groupBy(bucketCol(col("tok")).as("b"))
-        .agg(count(lit(1)).as("cb"),
-          sum(when(col("source") === DsirTarget, 1L).otherwise(0L)).as("tb"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      val cTot = counts.map(_._2).sum + DsirBuckets
-      val tTot = counts.map(_._3).sum + DsirBuckets
-      val mC = typedLit(counts.map(c => c._1 -> c._2).toMap)
-      val mT = typedLit(counts.map(c => c._1 -> c._3).toMap)
-      // ln[(T_b+1)(C+256) / ((C_b+1)(T+256))]: all factors are exact
-      // integer-valued doubles (< 2^53 at any plausible SF of this corpus;
-      // a 100 TB run precomputes the 256 log-ratios driver-side instead)
-      val lr = (tok: Column) => {
-        val b = bucketCol(tok)
-        log(((element_at(mT, b) + 1L) * cTot).cast("double") /
-          ((element_at(mC, b) + 1L) * tTot).cast("double"))
-      }
-      docs
-        .select(col("doc_id"), col("source"), size(col("t")).as("n_tokens"),
-          aggregate(transform(array_sort(col("t")), lr), lit(0.0),
-            (acc, x) => acc + x).as("s"))
-        .select(col("doc_id"), col("source"), col("n_tokens"),
-          round(col("s"), 6).as("dsir_lr"))
-    }
+    val docs = base.filter(TextOps.tokenCountCol > 0)
+      .select(col("doc_id"), col("source"), TextOps.tokensCol.as("t"))
+    val counts = docs
+      .select(col("source"), explode(DsirExpressions.buckets(col("t"))).as("b"))
+      .groupBy(col("b"))
+      .agg(count(lit(1)).as("cb"),
+        sum(when(col("source") === DsirTarget, 1L).otherwise(0L)).as("tb"))
+      .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+    docs
+      .select(col("doc_id"), col("source"), size(col("t")).as("n_tokens"),
+        round(DsirExpressions.score(col("t"), typedLit(dsirLogRatios(counts))),
+          6).as("dsir_lr"))
+  }
+
+  /** The per-bucket log-ratio table of bucket → (C_b, T_b) counts; None
+    * for a bucket with no count. */
+  private[graft] def dsirLogRatios(
+      counts: Map[Int, (Long, Long)]): Seq[Option[Double]] = {
+    val cTot = counts.values.map(_._1).sum + DsirNBuckets
+    val tTot = counts.values.map(_._2).sum + DsirNBuckets
+    (0 until DsirNBuckets).map(b => counts.get(b).map { case (cb, tb) =>
+      StrictMath.log(((tb + 1) * cTot).toDouble / ((cb + 1) * tTot).toDouble)
+    })
+  }
 
   private val sqlTokens = "list_filter(string_split(text, ' '), x -> x <> '')"
   private val hexDigits = "0123456789abcdef"
@@ -301,13 +305,13 @@ object SelectionOps {
        |  FROM $from WHERE len($sqlTokens) > 0),
        |e AS (SELECT doc_id, source, unnest(t) AS tok FROM toks),
        |bk AS (SELECT doc_id, source, tok,
-       |    ${sqlHex4("md5(tok)")} % $DsirBuckets AS b FROM e),
+       |    ${sqlHex4("md5(tok)")} % $DsirNBuckets AS b FROM e),
        |c AS (SELECT b, CAST(count(*) AS BIGINT) AS cb,
        |    CAST(count(*) FILTER (WHERE source = '$DsirTarget') AS BIGINT)
        |      AS tb
        |  FROM bk GROUP BY 1),
-       |tot AS (SELECT CAST(sum(cb) + $DsirBuckets AS BIGINT) AS ct,
-       |    CAST(sum(tb) + $DsirBuckets AS BIGINT) AS tt FROM c),
+       |tot AS (SELECT CAST(sum(cb) + $DsirNBuckets AS BIGINT) AS ct,
+       |    CAST(sum(tb) + $DsirNBuckets AS BIGINT) AS tt FROM c),
        |lr AS (SELECT bk.doc_id, bk.tok,
        |    ln(CAST((c.tb + 1) * tot.ct AS DOUBLE) /
        |       CAST((c.cb + 1) * tot.tt AS DOUBLE)) AS l

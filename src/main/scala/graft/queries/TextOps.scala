@@ -37,6 +37,13 @@ object TextOps {
       graft.functions.Tokens(
         org.apache.spark.sql.graftbridge.Bridge.expression(c)))
 
+  /** `size(tokensCol)` without the array: for projections that use the
+    * tokens only for their count. */
+  private[graft] def tokenCountCol: Column =
+    org.apache.spark.sql.graftbridge.Bridge.column(
+      graft.functions.TokenCount(
+        org.apache.spark.sql.graftbridge.Bridge.expression(col("text"))))
+
   /** Distinct 3-gram (token-trigram) shingles.
     *
     * Built from three shifted `slice`s zipped elementwise rather than
@@ -258,7 +265,10 @@ object TextOps {
     // jobs race a LAZY checkpoint and each re-runs the shingle+minhash
     // kernel pass before it materializes (r6 listener profile).
     val banded0 = withBands(docs).localCheckpoint()
-    val bandedAll = banded0.select(col("doc_id"),
+    // BoundedMinLongs skips NULLs, so the cap verdict below counts only
+    // rows with an id; the filter makes that the stated input
+    val bandedAll = banded0.filter(col("doc_id").isNotNull)
+      .select(col("doc_id"),
         explode(array(col("band0"), col("band1"))).as("band"))
     // Candidate pairs per band bucket WITHOUT a self-join and in ONE
     // exchange (r17, guide §2.4): the bounded bottom-(cap+1) multiset
@@ -420,8 +430,9 @@ object TextOps {
   private[graft] def weightedVerifiedPairs(docs: DataFrame,
       bandCap: Int = DefaultBandCap, tau: Double = 0.5): DataFrame = {
     val banded0 = withWeightedBands(docs).localCheckpoint()
-    val bandedAll = banded0.select(col("doc_id"),
-      explode(array(col("band0"), col("band1"))).as("band"))
+    val bandedAll = banded0.filter(col("doc_id").isNotNull)
+      .select(col("doc_id"),
+        explode(array(col("band0"), col("band1"))).as("band"))
     // one-exchange capped candidate aggregation — see lshVerifiedPairs
     val cand = bandedAll.groupBy(col("band"))
       .agg(graft.functions.BoundedMinLongs(col("doc_id"), bandCap + 1)
@@ -457,7 +468,7 @@ object TextOps {
       t(s, dir, "documents").select(
         col("doc_id"),
         col("n_chars"),
-        size(tokensCol).as("n_tokens"),
+        tokenCountCol.as("n_tokens"),
         md5(col("text")).as("fingerprint"))
     }),
 
@@ -1132,7 +1143,7 @@ object TextOps {
       // partial counts df for that token; a (doc, token) row appears once
       // per querying q_id, so the count is df either way).
       val metaRow = docs0
-        .agg(count(lit(1)), sum(size(tokensCol))).collect().head
+        .agg(count(lit(1)), sum(tokenCountCol)).collect().head
       val nDocs = metaRow.getLong(0)
       val avgdl = metaRow.getLong(1).toDouble / nDocs.toDouble
       val qterms = docs0.filter(col("doc_id") < 10)
@@ -1157,7 +1168,7 @@ object TextOps {
       // keeps exactly the oracle's pair set (≥1 matched term ⇔ score > 0:
       // idf and tf terms are strictly positive).
       val docsTf = spread(docs0)
-        .select(col("doc_id"), size(tokensCol).as("dl"),
+        .select(col("doc_id"), tokenCountCol.as("dl"),
           array_sort(tfPairs).as("dtf"))
       val w = org.apache.spark.sql.expressions.Window.partitionBy("q_id")
         .orderBy(col("score").desc, col("doc_id"))
@@ -1186,7 +1197,7 @@ object TextOps {
       val tfPairs = graft.functions.TextExpressions.tokenTf(col("text"))
       val n = col("n_tokens").cast("double")
       spread(t(s, dir, "documents"))
-        .select(col("doc_id"), size(tokensCol).as("n_tokens"),
+        .select(col("doc_id"), tokenCountCol.as("n_tokens"),
           array_sort(tfPairs).as("ps"))
         .filter(col("n_tokens") > 0)
         .withColumn("entropy", round(-aggregate(col("ps"), lit(0.0),
@@ -1376,7 +1387,7 @@ object TextOps {
       val w = Window.partitionBy("source").orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       t(s, dir, "documents")
-        .withColumn("n_tok", size(tokensCol))
+        .withColumn("n_tok", tokenCountCol)
         .withColumn("cum", sum(col("n_tok")).over(w))
         .select(col("doc_id"), col("source"), col("n_tok"),
           ((col("cum") - col("n_tok")) / 2048).cast("long").as("pack_id"))

@@ -461,7 +461,7 @@ object TrainOps {
         .rowsBetween(Window.unboundedPreceding, -1)
       spread(t(s, dir, "documents"))
         .select(col("doc_id"), h.as("h"),
-          size(TextOps.tokensCol).cast("long").as("n_tok"))
+          TextOps.tokenCountCol.cast("long").as("n_tok"))
         .withColumn("shard",
           (conv(substring(col("h"), 1, 4), 16, 10).cast("long")
             % NShards).cast("int"))
@@ -546,7 +546,7 @@ object TrainOps {
         md5(concat(lit(SplitSalt), col("source"))), 1, 4), 16, 10)
         .cast("long") % 10
       spread(t(s, dir, "documents"))
-        .select(col("source"), size(TextOps.tokensCol).cast("long").as("n_tok"))
+        .select(col("source"), TextOps.tokenCountCol.cast("long").as("n_tok"))
         .withColumn("split",
           when(b < 8, "train").when(b === 8, "val").otherwise("test"))
         .groupBy("source", "split")

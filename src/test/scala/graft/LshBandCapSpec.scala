@@ -95,4 +95,23 @@ class LshBandCapSpec extends AnyFunSuite {
       .select("doc_id_a", "doc_id_b").collect().toSet
     assert(a == b && a.nonEmpty)
   }
+
+  test("a NULL doc_id in a band bucket does not count toward the cap") {
+    import spark.implicits._
+    val text = "the quick brown fox jumps over the lazy dog"
+    // every row shares both band buckets; cap = 2 non-null ids keeps the
+    // bucket, 3 drops it, and the NULL row never counts or pairs
+    def pairs(ids: Seq[Option[Long]],
+        f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) =
+      f(ids.map(i => (i, text)).toDF("doc_id", "text"))
+        .select("doc_id_a", "doc_id_b").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val fs = Seq[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame](
+      TextOps.lshVerifiedPairs(_, bandCap = 2),
+      TextOps.weightedVerifiedPairs(_, bandCap = 2))
+    fs.foreach { f =>
+      assert(pairs(Seq(Some(1L), Some(2L), None), f) == Set((1L, 2L)))
+      assert(pairs(Seq(Some(1L), Some(2L), Some(3L), None), f).isEmpty)
+    }
+  }
 }

@@ -1,8 +1,10 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+import org.apache.spark.sql.execution.{ExplainMode, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
 /** Shuffle-budget regression net: pins the number of shuffle Exchanges in
   * the CLUSTER-shaped physical plan (graft.spreadLocal=false, so the
@@ -30,7 +32,7 @@ import org.apache.spark.sql.execution.ExplainMode
   * during construction too, so its static count covers the consuming
   * plan - the per-round exchanges are pinned by ConnectedComponentsSpec.
   */
-class PlanBudgetSpec extends AnyFunSuite {
+class PlanBudgetSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -274,12 +276,135 @@ class PlanBudgetSpec extends AnyFunSuite {
     "q99_quality_filter"         -> 0
   )
 
-  private def shuffleCount(name: String): Int = {
-    val df = SparkEntry.queries(name)(spark, sf)
+  // Interpreted-lambda budget: higher-order functions (transform,
+  // aggregate, zip_with, filter, array_sort, ...) are CodegenFallback, so
+  // each one evaluates a Catalyst lambda per array element outside
+  // whole-stage codegen. (query, (max HigherOrderFunction expressions in
+  // the physical plan, counting pushed-down filter copies, and what they
+  // are)); every query not listed must have none, and an allowance may
+  // only fall. q120/q125 went to 0 with the native DSIR kernels.
+  private val quant = "fixed-point embeddings transform(round(x*2^20))"
+  private val argmax = "nearest-centroid argmax aggregate over the " +
+    "broadcast cents array (Project + the nested-loop join condition)"
+  private val topP = "top-P cell probe array_sort(transform(cents))"
+  private val adc = "PQ ADC table transform(cents) + aggregate(zip_with) " +
+    "and the residual cent lookup filter(cents)"
+  private val rerank = "exact rerank dot aggregate(zip_with(q, hq))"
+  private val packs = "k-means centroid packs array_sort(collect_list) " +
+    "and transform(array_sort) position packs"
+  private val dots = "float dot/norm folds aggregate(zip_with), in the " +
+    "oracle's sequential order"
+  private val bandPairs = "in-bucket pair expansion flatten(transform(ms, " +
+    "transform(slice))) over <= cap ids"
+  private val bigrams = "bigram zip_with(slice, slice) over the tokens"
+  private val sortedGroup = "in-group order transform(array_sort(" +
+    "collect_list)) over one group's rows"
+  private val lambdas: Map[String, (Int, String)] = Map(
+    "q104_ann_pq"             -> (7, s"$quant; $packs (codebook); $adc"),
+    "q105_bigram_novelty"     -> (6, s"$bigrams (Project, Filter, pushed scan filter)"),
+    "q106_distinct_sketch"    -> (1, bigrams),
+    "q107_zorder_key"         -> (1, "bit-interleave fold aggregate over literal bit positions"),
+    "q109_bm25_topk"          -> (1, "array_sort(token_tf) for the Bm25Score merge"),
+    "q110_balanced_sample"    -> (11, s"$quant; $packs"),
+    "q111_token_entropy"      -> (2, "array_sort(token_tf) + the fixed-order entropy fold"),
+    "q115_paragraph_dedup"    -> (2, "paragraph split transform(sequence) + frequent-set filter"),
+    "q116_quality_classifier" -> (1, "hashed-weight fold aggregate(t) with md5/conv per token (the DSIR shape)"),
+    "q118_chunk_overlap"      -> (1, "chunk generator transform(sequence)"),
+    "q119_lm_perplexity"      -> (3, s"map-literal LM fold aggregate(transform(bigs)) + $bigrams; next native candidate"),
+    "q122_ann_recall"         -> (6, s"$argmax; $packs (cents)"),
+    "q124_threshold_sweep"    -> (1, "q116's hashed-weight fold"),
+    "q127_blocklist_filter"   -> (2, "suffix generator transform(sequence) (Filter + pushed scan filter)"),
+    "q128_neardup_rate"       -> (2, bandPairs),
+    "q129_snapshot_drift"     -> (4, "trigram zip_with chains over both snapshots"),
+    "q130_dedup_sensitivity"  -> (2, bandPairs),
+    "q133_inverted_index"     -> (1, "postings decode transform over <= 16 kmv_minima"),
+    "q136_curation_e2e"       -> (2, "manifest transform(array_sort(collect_list)) over the <= 100 sampled rows"),
+    "q138_containment"        -> (2, bandPairs),
+    "q139_clob_charset"       -> (2, s"LOB chunk order: $sortedGroup"),
+    "q143_ivf_increment"      -> (2, argmax),
+    "q147_funnel"             -> (1, "per-user funnel fold aggregate(sort_array(collect_list))"),
+    "q161_equidepth_bins"     -> (1, "bin lookup filter over <= 10 boundaries"),
+    "q180_substring_cut"      -> (1, "span-cut aggregate (TextOps: the documented trade vs a second text exchange)"),
+    "q182_kn_perplexity"      -> (3, s"map-literal Kneser-Ney fold aggregate(transform(bigs)) + $bigrams; next native candidate"),
+    "q184_weighted_minhash"   -> (6, "tf-weighted instance expansion transform(token_tf, transform(sequence)) (Project, Filter, pushed scan filter)"),
+    "q185_weighted_pairs"     -> (2, bandPairs),
+    "q189_vecdup_batch"       -> (2, argmax),
+    "q190_vecdup_recall"      -> (2, argmax),
+    "q192_mm_mp4_meta"        -> (16, "big-endian atom field decodes aggregate over literal byte offsets"),
+    "q193_ivf_refined"        -> (2, argmax),
+    "q194_langid_trigram"     -> (2, "character trigram generator transform(sequence)"),
+    "q204_suffix_lcp"         -> (3, "LCP zip_with over adjacent suffix slices (Project + Filter)"),
+    "q205_pca_power"          -> (3, s"$quant; $dots (loading vector)"),
+    "q206_srp_fingerprint"    -> (8, s"$quant; $dots (plane matrix); bit packing aggregate(zip_with(bits, powers))"),
+    "q208_wordpiece_encode"   -> (1, "greedy longest-match fold over the piece vocabulary"),
+    "q209_srp_recall"         -> (16, "q206's folds on both sides"),
+    "q210_embedding_drift"    -> (6, s"$quant; $dots"),
+    "q213_rtbf_match"         -> (2, argmax),
+    "q215_ivf_rebuild"        -> (2, argmax),
+    "q216_ivfpq_match"        -> (9, s"$adc; $quant; $argmax"),
+    "q218_ivfpq_recall"       -> (19, s"$adc; $quant; $argmax; $rerank"),
+    "q222_clustered_recall"   -> (19, "q218's shape"),
+    "q223_multiprobe_match"   -> (3, topP),
+    "q224_pq_append_match"    -> (9, "q216's shape"),
+    "q225_multiprobe_adc"     -> (10, s"$adc; $quant; $topP"),
+    "q226_regime_recall"      -> (19, "q218's shape"),
+    "q227_regime_raw"         -> (16, "q218's shape, raw codes (no residual cent lookup)"),
+    "q228_ivfpq_topk"         -> (10, "q225's shape"),
+    "q229_ivfpq_rerank"       -> (14, s"q225's shape; $rerank"),
+    "q230_filtered_topk"      -> (10, "q225's shape"),
+    "q231_filtered_prefilter" -> (4, s"$quant; $rerank"),
+    "q232_sq8_attach"         -> (1, "SQ code bytes to ints transform(sq_bytes)"),
+    "q233_sq8_topk"           -> (5, s"SQ8 book zip_with; $quant; $topP"),
+    "q23_quality_score"       -> (1, "stopword filter(tokens)"),
+    "q24_lang_guess"          -> (1, "stopword filter(tokens)"),
+    "q27_simhash"             -> (16, "one md5-nibble vote filter(toks) per signature bit"),
+    "q29_minhash_pairs"       -> (2, bandPairs),
+    "q30_cosine_pairs"        -> (6, dots),
+    "q34_embed_neardup"       -> (12, s"$dots (Project + Filter)"),
+    "q35_lob_assembly"        -> (2, s"LOB chunk order: $sortedGroup"),
+    "q42_rolling_hash"        -> (1, "polynomial rolling-hash fold over the characters"),
+    "q43_ann_ivf"             -> (6, s"$argmax; $packs (cents)"),
+    "q54_lob_resolve"         -> (23, "LOB reference resolution: filter/transform over image values and transform_values (with pushed filter copies)"),
+    "q71_txn_message_full"    -> (1, s"message order: $sortedGroup"),
+    "q82_repetition"          -> (5, s"max-run folds over array_sort(tokens/bigrams) + $bigrams"),
+    "q87_vec_quantize"        -> (6, "quantize transforms + checksum fold (Project, Filter, pushed scan filter)"),
+    "q91_kmeans"              -> (11, s"$quant; $packs"),
+    "q92_semantic_dedup"      -> (17, s"$quant; $packs; $dots"),
+    "q97_collapse_repeats"    -> (3, "adjacent-repeat collapse zip_with/filter/transform"),
+    "q99_quality_filter"      -> (2, "stopword filter + mean token length fold")
+  )
+
+  private def shuffleCount(df: DataFrame): Int = {
     val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
     // tree-section shuffle nodes; "(n) Exchange" detail lines don't match,
     // BroadcastExchange is counted separately (broadcasts are the GOAL)
     "[+:]- Exchange \\(".r.findAllIn(plan).length
+  }
+
+  private def shuffleCount(name: String): Int =
+    shuffleCount(SparkEntry.queries(name)(spark, sf))
+
+  /** Higher-order-function expressions (lambdas, evaluated interpreted:
+    * they are CodegenFallback) in the physical plan, subqueries included. */
+  private def lambdaCount(plan: SparkPlan): Int = {
+    var n = 0
+    foreach(plan) { p =>
+      p.expressions.foreach(_.foreach(e =>
+        if (e.isInstanceOf[HigherOrderFunction]) n += 1))
+      p.subqueries.foreach(q => n += lambdaCount(q))
+    }
+    n
+  }
+
+  /** (shuffle Exchanges, lambdas) of every budgeted query's cluster-shaped
+    * plan, each query built once. */
+  private lazy val measured: Map[String, (Int, Int)] = {
+    spark.conf.set("graft.spreadLocal", "false")
+    try budgets.keys.toSeq.sorted.map { name =>
+      val df = SparkEntry.queries(name)(spark, sf)
+      name -> (shuffleCount(df), lambdaCount(df.queryExecution.executedPlan))
+    }.toMap
+    finally spark.conf.set("graft.spreadLocal", "true")
   }
 
   test("every SparkEntry query has a budget row (and none are stale)") {
@@ -292,15 +417,26 @@ class PlanBudgetSpec extends AnyFunSuite {
   }
 
   test("cluster-shaped plans stay inside their shuffle budgets") {
-    spark.conf.set("graft.spreadLocal", "false")
-    try {
-      val over = budgets.toSeq.sortBy(_._1).flatMap { case (name, budget) =>
-        val got = shuffleCount(name)
-        if (got > budget) Some(s"$name: $got shuffles > budget $budget")
-        else None
-      }
-      assert(over.isEmpty, over.mkString("; "))
-    } finally spark.conf.set("graft.spreadLocal", "true")
+    val over = budgets.toSeq.sortBy(_._1).flatMap { case (name, budget) =>
+      val got = measured(name)._1
+      if (got > budget) Some(s"$name: $got shuffles > budget $budget")
+      else None
+    }
+    assert(over.isEmpty, over.mkString("; "))
+  }
+
+  test("physical plans hold no interpreted lambdas beyond their allowance") {
+    val over = measured.toSeq.sortBy(_._1).flatMap { case (name, (_, got)) =>
+      val allowed = lambdas.get(name).fold(0)(_._1)
+      if (got > allowed) Some(s"$name: $got lambdas > allowance $allowed")
+      else None
+    }
+    assert(over.isEmpty, over.mkString("; ") + "\nall nonzero: " +
+      measured.toSeq.sortBy(_._1).collect {
+        case (n, (_, c)) if c > 0 => s"$n -> $c" }.mkString(", "))
+    val stale = lambdas.keySet.filter(n => measured.get(n).forall(_._2 == 0))
+    assert(stale.isEmpty,
+      s"lambda allowances for queries that measure 0 (drop the row): $stale")
   }
 
   test("q166/q169 self-join duplicates dedupe to reused stages at runtime") {

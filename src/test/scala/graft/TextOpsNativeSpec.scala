@@ -44,6 +44,18 @@ class TextOpsNativeSpec extends AnyFunSuite {
     assert(both.filter(size(col("n")) > 0).count() > 50)
   }
 
+  test("tokenCount == size(graft_tokens(text))") {
+    import spark.implicits._
+    val edge = Seq(" ", "  lead", "trail  ", "é 中文  😀x", "\t tab\tsplit",
+      "a\u00a0b c").zipWithIndex.map { case (t, i) => (i.toLong + 500, t) }
+      .toDF("doc_id", "text")
+    val both = docs.union(edge).select(col("doc_id"),
+      TextOps.tokenCountCol.as("native"), size(TextOps.tokensCol).as("reference"))
+    val bad = both.filter(not(col("native") <=> col("reference"))).collect()
+    assert(bad.isEmpty, bad.mkString("; "))
+    assert(both.filter(col("native") > 5).count() > 50) // non-trivial corpus
+  }
+
   test("minhashSig == 8x array_min(transform(md5)) formulation") {
     val base = docs.select(col("doc_id"),
       TextOps.shinglesCol(TextOps.tokensCol).as("sh"))
