@@ -124,8 +124,9 @@ object Bench {
     *  - `build_s`: `fn(spark, dir)`, i.e. plan construction plus eager side
     *    jobs (index builds, collected artifacts, localCheckpoints);
     *  - `plan_s`: Catalyst analysis, optimization and physical planning of
-    *    the measured `count()`, from its `qe.tracker`;
-    *  - `exec_s`: the rest of the `count()`;
+    *    the measured action (`count()` unless the caller passes another),
+    *    from its `qe.tracker`;
+    *  - `exec_s`: the rest of the action;
     *  - the scheduler and executor counters of every job the run started,
     *    build included: `task_s` is summed executor run time,
     *    `shuffle_mb` shuffle bytes written, `spill_mb` bytes spilled to
@@ -162,9 +163,10 @@ object Bench {
     spark.sparkContext.addSparkListener(this)
     spark.listenerManager.register(this)
 
-    /** Runs `query` (build, then `count()`) `n` more times under `name`;
+    /** Runs `query` (build, then `action`) `n` more times under `name`;
       * the first run that throws moves `name` to [[failed]]. */
-    def time(name: String, n: Int)(query: => DataFrame): Unit = {
+    def time(name: String, n: Int, action: DataFrame => Any = _.count())(
+        query: => DataFrame): Unit = {
       val sc = spark.sparkContext
       var i = 0
       while (i < n && !failed.contains(name)) {
@@ -176,7 +178,7 @@ object Bench {
           val df = query
           val t1 = System.nanoTime()
           val fromMs = System.currentTimeMillis()
-          df.count()
+          action(df)
           val toMs = System.currentTimeMillis()
           runs(name) = prior :+ Run(key, (System.nanoTime() - t0) / 1e9,
             (t1 - t0) / 1e9, fromMs, toMs)

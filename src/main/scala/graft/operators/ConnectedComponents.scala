@@ -55,14 +55,66 @@ object ConnectedComponents {
       .distinct()
   }
 
-  /** Min-label propagation with per-round pointer-jumping: each round is
-    * one neighbor-min join plus one label-of-label join, so a component of
-    * depth D converges in O(log D) rounds instead of O(D). FASTER than the
-    * star algorithm when components are shallow — which LSH near-dup
-    * graphs are (hub-and-spokes around boilerplate docs; measured 2×
-    * faster at sf0.1) — and the jump keeps moderately deep graphs (q186's
-    * weighted near-dup graph: 13 plain rounds → 4 jumped rounds) off the
-    * escalation path entirely. Same contract as [[run]].
+  /** Edges per partition of the propagation rounds: one partition per
+    * this many edges, capped at the session's shuffle parallelism. A
+    * graph with fewer edges is labelled by one union-find instead. */
+  private[graft] val EdgesPerPartition = 1000000L
+
+  /** Union-find over an edge list: (node, min node id of its component)
+    * for every endpoint, self-loop endpoints included. Primitive arrays
+    * throughout: the endpoints sort into one distinct id array, a node's
+    * index is its binary-search position, and since indices follow id
+    * order the union of two roots keeps the smaller index — so every
+    * root is its component's min id. */
+  private def unionFind(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val src = Array.newBuilder[Long]
+    val dst = Array.newBuilder[Long]
+    edges.foreach { case (a, b) => src += a; dst += b }
+    val (us, vs) = (src.result(), dst.result())
+    val all = us ++ vs
+    java.util.Arrays.sort(all)
+    var n = 0
+    var j = 0
+    while (j < all.length) { // dedup in place
+      if (n == 0 || all(n - 1) != all(j)) { all(n) = all(j); n += 1 }
+      j += 1
+    }
+    val ids = java.util.Arrays.copyOf(all, n)
+    val parent = Array.tabulate(n)(identity)
+    def find(i0: Int): Int = {
+      var i = i0
+      while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+      i
+    }
+    var k = 0
+    while (k < us.length) {
+      val ra = find(java.util.Arrays.binarySearch(ids, us(k)))
+      val rb = find(java.util.Arrays.binarySearch(ids, vs(k)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      k += 1
+    }
+    Iterator.tabulate(n)(i => (ids(i), ids(find(i))))
+  }
+
+  /** Connected components of a small graph by one union-find, of a large
+    * one by min-label propagation with per-round pointer-jumping. Same
+    * contract as [[run]].
+    *
+    * The edge list is pinned once and counted. A graph under
+    * [[EdgesPerPartition]] edges (1M) is labelled by one union-find task
+    * over all of its edges, whose roots are the fixpoint: two jobs in
+    * all (the edge pin and the union-find) and no round. The task holds
+    * its edges in primitive arrays that cannot spill (~40 bytes per
+    * edge), which the 1M bound caps. Larger graphs run the rounds below
+    * from identity labels, one partition per 1M edges.
+    *
+    * Each round is one neighbor-min join plus one label-of-label join,
+    * so a component of depth D converges in O(log D) rounds instead of
+    * O(D). FASTER than the star algorithm when components are shallow —
+    * which LSH near-dup graphs are (hub-and-spokes around boilerplate
+    * docs; measured 2× faster at sf0.1) — and the jump keeps moderately
+    * deep graphs (q186's weighted near-dup graph: 13 plain rounds → 4
+    * jumped rounds) off the escalation path entirely.
     *
     * Trip wire for adversarial depth: after `escalateAfter` unconverged
     * rounds the graph is CONTRACTED by the current labels (every node
@@ -78,6 +130,11 @@ object ConnectedComponents {
     * has no edge out) is already final. */
   def runPropagation(edges: DataFrame, maxRounds: Int = 200,
       escalateAfter: Int = 20)(
+      implicit spark: SparkSession): DataFrame =
+    runPropagation(edges, maxRounds, escalateAfter, EdgesPerPartition)
+
+  private[graft] def runPropagation(edges: DataFrame, maxRounds: Int,
+      escalateAfter: Int, edgesPerPart: Long)(
       implicit spark: SparkSession): DataFrame = {
     // a zero bound would skip every round and hand back labels that were
     // never materialized (their edge RDD is released on the way out)
@@ -110,18 +167,28 @@ object ConnectedComponents {
     // pair-detection plan before the blocks exist (measured: 76 task-s
     // on q186, the same recompute class the DF version hit)
     val nEdges = e0.count()
+    if (nEdges < edgesPerPart) {
+      // the whole graph in one task: its union-find roots ARE the
+      // fixpoint; the labels cover every endpoint, self-loop-only ones
+      // included (same contract as run)
+      val labels = e0.coalesce(1).mapPartitions(unionFind)
+      labels.localCheckpoint()
+      labels.count()
+      e0.unpersist(blocking = false)
+      return labels.toDF("node", "component")
+    }
     // Scale-ADAPTIVE round parallelism (guide §2: derive partitioning
     // from input size, don't inherit a constant): the pair graph is
     // metadata-sized (16-byte rows), and RDD stages have no AQE to
     // coalesce them — running every round at spark.sql.shuffle.partitions
     // turned each tiny round into an M×R block-fetch storm (measured
     // 2–6 task-s PER ROUND on q186's 20k-edge graph at 32 partitions;
-    // the whole graph is 0.6 MB). One partition per ~1M edges, capped at
-    // the session's shuffle parallelism so a 10^9-edge production graph
-    // still uses the full configured width.
+    // the whole graph is 0.6 MB). One partition per `edgesPerPart`
+    // edges, capped at the session's shuffle parallelism so a 10^9-edge
+    // production graph still uses the full configured width.
     val numParts = math.max(1L, math.min(
       spark.sessionState.conf.numShufflePartitions.toLong,
-      nEdges / 1000000L + 1L)).toInt
+      nEdges / edgesPerPart + 1L)).toInt
     val part = new org.apache.spark.HashPartitioner(numParts)
     val sym = e0.flatMap { case (a, b) =>
         if (a == b) Iterator.empty else Iterator((a, b), (b, a)) }

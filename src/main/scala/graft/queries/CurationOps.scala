@@ -162,8 +162,8 @@ object CurationOps {
       val paras = Tables.spread(
           t(s, dir, "documents").selectExpr("doc_id", s"($paraSynth) AS text"),
           col("doc_id"))
+        .filter(TextOps.tokenCountCol > 0)
         .select(col("doc_id"), TextOps.tokensCol.as("t"))
-        .filter(size(col("t")) > 0)
         .withColumn("np", ceil(size(col("t")) / lit(16.0)).cast("int"))
         .select(col("doc_id"),
           transform(sequence(lit(0), col("np") - 1),
@@ -173,7 +173,7 @@ object CurationOps {
       // map-side combine; the surviving set is KB-sized by construction
       val hs = paras
         .select(explode(col("paras")).as("para"))
-        .filter(size(graft.queries.TextOps.tokensOf(col("para"))) === 16)
+        .filter(TextOps.tokenCountOf(col("para")) === 16)
         .groupBy(md5(col("para")).as("h")).agg(count(lit(1)).as("n"))
         .filter(col("n") >= ParaFreqThreshold)
         .select("h").collect().map(_.getString(0)).sorted.toSeq
@@ -189,8 +189,8 @@ object CurationOps {
       // w(tok) folds inside the row: conv(md5-prefix) % 2001 - 1000, BIGINT
       // throughout so the sum is exact and order-free. Zero exchange.
       t(s, dir, "documents")
+        .filter(TextOps.tokenCountCol > 0)
         .select(col("doc_id"), TextOps.tokensCol.as("t"))
-        .filter(size(col("t")) > 0)
         .select(col("doc_id"), size(col("t")).as("n_tokens"),
           aggregate(col("t"), lit(0L), (acc, tok) =>
             acc + (conv(substring(md5(tok), 1, 4), 16, 10).cast("long")

@@ -432,9 +432,10 @@ object PipelineOps {
       TrainOps.trainOrderOf(sampled)
         .groupBy("shard")
         .agg(count(lit(1)).as("n_docs"),
-          array_join(transform(
-            array_sort(collect_list(struct(col("pos"), col("doc_id")))),
-            p => p.getField("doc_id").cast("string")), ",").as("doc_order"))
+          array_join(
+            sort_array(collect_list(struct(col("pos"), col("doc_id"))))
+              .getField("doc_id").cast("array<string>"), ",")
+            .as("doc_order"))
     })
   )
 

@@ -104,8 +104,8 @@ object SelectionOps {
 
     "q118_chunk_overlap" -> ((s, dir) => {
       spread(t(s, dir, "documents"))
+        .filter(TextOps.tokenCountCol > 0)
         .select(col("doc_id"), TextOps.tokensCol.as("t"))
-        .filter(size(col("t")) > 0)
         .withColumn("n", size(col("t")))
         .withColumn("nch",
           when(col("n") <= ChunkW, lit(1L))
@@ -233,8 +233,14 @@ object SelectionOps {
     *
     * u in (0,1) from the top 8 md5 nibbles; Gumbel = -ln(-ln(u)).
     * Scale shape: scoring is in-row on top of the weights plan; the top-k
-    * is a TakeOrderedAndProject (per-partition heaps, no global sort);
-    * the rank window runs AFTER the limit, over k rows only. */
+    * plans as a TakeOrderedAndProject (per-partition heaps, no global
+    * sort) as long as at most ONE Project sits between the limit and the
+    * sort once the consumer's projections are pushed through the limit —
+    * two stacked ones fall back to a sampled range-partitioned sort, which
+    * scores every row a second time (q136's consumer,
+    * [[TrainOps.trainOrderOf]], projects once; SelectionOpsSpec pins both
+    * q125 and q136). The rank window runs AFTER the limit, over k rows
+    * only, and a consumer that does not read `rank` prunes it. */
   private[graft] def gumbelTopKOf(w: DataFrame): DataFrame = {
     val g = -log(-log(
       (DsirExpressions.md5U32(concat(lit("g|"), col("doc_id").cast("string")))

@@ -38,11 +38,16 @@ object TextOps {
         org.apache.spark.sql.graftbridge.Bridge.expression(c)))
 
   /** `size(tokensCol)` without the array: for projections that use the
-    * tokens only for their count. */
-  private[graft] def tokenCountCol: Column =
+    * tokens only for their count, and for filters on the count ahead of
+    * a tokens projection (a filter on `size` of the projected array is
+    * pushed below the projection with the tokenizer inlined, so every
+    * row would tokenize twice). */
+  private[graft] def tokenCountCol: Column = tokenCountOf(col("text"))
+
+  private[graft] def tokenCountOf(c: Column): Column =
     org.apache.spark.sql.graftbridge.Bridge.column(
       graft.functions.TokenCount(
-        org.apache.spark.sql.graftbridge.Bridge.expression(col("text"))))
+        org.apache.spark.sql.graftbridge.Bridge.expression(c)))
 
   /** Distinct 3-gram (token-trigram) shingles.
     *
@@ -1169,7 +1174,7 @@ object TextOps {
       // idf and tf terms are strictly positive).
       val docsTf = spread(docs0)
         .select(col("doc_id"), tokenCountCol.as("dl"),
-          array_sort(tfPairs).as("dtf"))
+          sort_array(tfPairs).as("dtf"))
       val w = org.apache.spark.sql.expressions.Window.partitionBy("q_id")
         .orderBy(col("score").desc, col("doc_id"))
       docsTf.crossJoin(broadcast(qdata))
@@ -1198,7 +1203,7 @@ object TextOps {
       val n = col("n_tokens").cast("double")
       spread(t(s, dir, "documents"))
         .select(col("doc_id"), tokenCountCol.as("n_tokens"),
-          array_sort(tfPairs).as("ps"))
+          sort_array(tfPairs).as("ps"))
         .filter(col("n_tokens") > 0)
         .withColumn("entropy", round(-aggregate(col("ps"), lit(0.0),
           (acc, p) => {
@@ -1267,10 +1272,14 @@ object TextOps {
         slice(col("t"), lit(2), size(col("t")) - 1),
         (a, b) => concat(a, lit(" "), b)))
       val docs = spread(t(s, dir, "documents"))
+        .filter(tokenCountCol >= 2)
         .select(col("doc_id"), toks.as("t"))
-        .filter(size(col("t")) >= 2)
         .select(col("doc_id"), bigs.as("bigs"))
-      val dfq = docs.select(explode(col("bigs")).as("bg"))
+      // explode_outer: a plain explode makes Catalyst infer a
+      // size(bigs) > 0 filter and push it below the projections with the
+      // tokenizer inlined four times; every doc here has >= 1 bigram, so
+      // the outer form emits exactly the same rows
+      val dfq = docs.select(explode_outer(col("bigs")).as("bg"))
         .groupBy("bg").agg(count(lit(1)).as("c"))
       val freq = dfq.filter(col("c") >= 2)
         .orderBy(col("c").desc, col("bg").asc).limit(1024)

@@ -158,13 +158,19 @@ object TrainOps {
     * reproducible corpus-wide "random" training order with ONE hash
     * exchange and per-shard local sorts, never a global range sort.
     * Factored so pipeline compositions (q136) provably run the gated
-    * rule (salt, hash width, tie-break) rather than a copy of it. */
+    * rule (salt, hash width, tie-break) rather than a copy of it.
+    *
+    * `h` and `shard` come from ONE projection (whole-stage codegen's
+    * subexpression elimination keeps md5 at one call per row): two
+    * stacked projections would not collapse, since `h` is referenced
+    * twice, and over q136's Gumbel top-k they would leave
+    * Limit(Project(Project(Sort))), which misses the TakeOrderedAndProject
+    * pattern and plans a sampled global range sort instead. */
   private[graft] def trainOrderOf(df: DataFrame): DataFrame = {
     val h = md5(concat(lit(OrderSalt), col("doc_id").cast("string")))
-    df.select(col("doc_id"), h.as("h"))
-      .withColumn("shard",
-        (conv(substring(col("h"), 1, 4), 16, 10).cast("long")
-          % NShards).cast("int"))
+    df.select(col("doc_id"), h.as("h"),
+        (conv(substring(h, 1, 4), 16, 10).cast("long") % NShards)
+          .cast("int").as("shard"))
       .withColumn("pos",
         (row_number().over(Window.partitionBy("shard").orderBy("h")) - 1)
           .cast("long"))

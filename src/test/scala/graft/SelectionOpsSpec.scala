@@ -2,6 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import graft.queries.SelectionOps
 
@@ -10,7 +14,7 @@ import graft.queries.SelectionOps
   * probability-mass sanity, and DSIR's directionality (target-slice docs
   * must score above the corpus at large).
   */
-class SelectionOpsSpec extends AnyFunSuite {
+class SelectionOpsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -87,6 +91,23 @@ class SelectionOpsSpec extends AnyFunSuite {
     assert(rows.map(_.getLong(1)).distinct.length == 100)
     rows.sliding(2).foreach { case Array(hi, lo) =>
       assert(hi.getDouble(3) >= lo.getDouble(3) - 1e-9)
+    }
+  }
+
+  test("q125/q136: the Gumbel top-k runs as TakeOrderedAndProject, " +
+      "never a sampled range-partitioned sort") {
+    Seq("q125_importance_resample", "q136_curation_e2e").foreach { q =>
+      val df = SparkEntry.queries(q)(spark, sf)
+      assert(df.collect().nonEmpty, q)
+      val plan = df.queryExecution.executedPlan
+      val topK = collectWithSubqueries(plan) {
+        case t: TakeOrderedAndProjectExec => t }
+      val ranged = collectWithSubqueries(plan) {
+        case e: ShuffleExchangeExec
+          if e.outputPartitioning.isInstanceOf[RangePartitioning] => e }
+      assert(topK.size == 1 && ranged.isEmpty,
+        s"$q: ${topK.size} TakeOrderedAndProject, ${ranged.size} range " +
+          s"exchanges:\n$plan")
     }
   }
 

@@ -2,8 +2,11 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  QueryStageExec}
 import org.apache.spark.sql.functions._
-import graft.functions.TextExpressions
+import graft.functions.{TextExpressions, Tokens}
 import graft.queries.TextOps
 
 /** The native one-pass shingle/minhash kernels must produce EXACTLY the
@@ -54,6 +57,33 @@ class TextOpsNativeSpec extends AnyFunSuite {
     val bad = both.filter(not(col("native") <=> col("reference"))).collect()
     assert(bad.isEmpty, bad.mkString("; "))
     assert(both.filter(col("native") > 5).count() > 50) // non-trivial corpus
+  }
+
+  /** The most `graft_tokens` calls one row meets on its way up the plan:
+    * the calls in a node's expressions plus the most on any input path,
+    * through adaptive query stages. */
+  private def tokenizeDepth(p: SparkPlan): Int = {
+    val own = p.expressions.map(_.collect { case t: Tokens => t }.size).sum
+    val kids = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case _ => p.children
+    }
+    own + (kids.map(tokenizeDepth) :+ 0).max
+  }
+
+  test("q105/q115/q116/q118 tokenize each row once: the non-empty " +
+      "filter counts tokens instead of re-running graft_tokens") {
+    val bad = Seq("q105_bigram_novelty", "q115_paragraph_dedup",
+        "q116_quality_classifier", "q118_chunk_overlap").flatMap { q =>
+      val df = SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
+      assert(df.collect().nonEmpty, q)
+      val plan = df.queryExecution.executedPlan
+      val depth = tokenizeDepth(plan)
+      if (depth == 1) None
+      else Some(s"$q: a row meets graft_tokens $depth times:\n$plan")
+    }
+    assert(bad.isEmpty, bad.mkString("\n"))
   }
 
   test("minhashSig == 8x array_min(transform(md5)) formulation") {
