@@ -400,7 +400,7 @@ object PipelineOps {
       // 1. exact dedup: first-seen (min doc_id) per content hash — the
       // q25 rule VERBATIM (md5 over lower(text)), so stage 1 really is
       // the gated operator, not a near-copy of it.
-      // localCheckpoint (the lshVerifiedPairs discipline): every later
+      // localCheckpoint (the LshIndex.pairs discipline): every later
       // stage — band build, anti-join left side, quality, both DSIR
       // passes — consumes `exact`; without the pin each would re-run the
       // scan + hash-agg + join chain.
@@ -409,7 +409,8 @@ object PipelineOps {
           .agg(min(col("doc_id")).as("doc_id")).select("doc_id"),
         "doc_id").localCheckpoint()
       // 2. near-dup apply: verified pairs → components → drop members
-      val pairs = TextOps.lshVerifiedPairs(exact)
+      val pairs = graft.operators.LshIndex.pairs(exact,
+        graft.operators.LshIndex.SetMinHash)
         .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
       val drops = graft.operators.ConnectedComponents.runPropagation(pairs)
         .filter(col("node") =!= col("component"))

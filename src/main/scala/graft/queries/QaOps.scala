@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.operators.LshIndex
 
 /** Training-data pipeline pack #7: curation QA / diagnostics — the
   * reports a data team reads BEFORE signing off a corpus build: where the
@@ -45,7 +46,7 @@ object QaOps {
 
     "q128_neardup_rate" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val pairs = TextOps.lshVerifiedPairs(docs)
+      val pairs = LshIndex.pairs(docs, LshIndex.SetMinHash)
       // docs touched by ANY verified pair; the joins ship ids + source
       val involved = pairs
         .select(explode(array(col("doc_id_a"), col("doc_id_b")))
@@ -83,7 +84,7 @@ object QaOps {
     }),
 
     "q130_dedup_sensitivity" -> ((s, dir) => {
-      TextOps.lshVerifiedPairs(t(s, dir, "documents"))
+      LshIndex.pairs(t(s, dir, "documents"), LshIndex.SetMinHash)
         .select(col("jaccard"),
           explode(typedLit(JaccardGrid)).as("threshold"))
         .groupBy("threshold")

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{SessionMemo, Tables}
+import graft.operators.LshIndex
 
 /** Text-analysis + deduplication pack over the `documents` table.
   *
@@ -104,15 +105,6 @@ object TextOps {
       graft.operators.SuffixArray.tokenSuffixRanks(
         spread(t(s, dir, "documents")), tokensCol, seedWidth = 32)
         .localCheckpoint(true))
-
-  /** Skew guard (SCALE.md §dedup): a band bucket with more than this many
-    * members is degenerate — near-identical boilerplate whose members are
-    * exact-dup clusters (q25's path) — and would otherwise explode the
-    * candidate expansion quadratically (10⁶ members → 10¹² pairs on one
-    * executor). The cap bounds any bucket's pair work at cap²/2 and its
-    * collected member list at cap ids, enforced on the same aggregation
-    * that forms the buckets. */
-  private[graft] val DefaultBandCap = 64
 
   /** Repeated-substring spans — the ExactSubstr dedup of Lee et al. 2022
     * ("Deduplicating Training Data Makes Language Models Better",
@@ -257,73 +249,24 @@ object TextOps {
           .as("removed_chars"))
   }
 
-  /** Verified near-dup pairs: LSH band-bucket join → candidates → exact
-    * Jaccard ≥ 0.5 (shared by q29 and the q46 clustering on top of it). */
-  private[graft] def lshVerifiedPairs(docs: DataFrame,
-      bandCap: Int = DefaultBandCap): DataFrame = {
-    // localCheckpoint, not cache(): a cache() here is keyed in the
-    // session CacheManager and outlives the query (q29+q46 in one session
-    // pinned two copies of the shingle arrays); checkpoint blocks are
-    // dropped by the ContextCleaner once the plan is unreferenced. Trade:
-    // lost blocks fail the job instead of recomputing — fine for a
-    // within-query scratch dataset. EAGER: concurrent broadcast-build
-    // jobs race a LAZY checkpoint and each re-runs the shingle+minhash
-    // kernel pass before it materializes (r6 listener profile).
-    val banded0 = withBands(docs).localCheckpoint()
-    // BoundedMinLongs skips NULLs, so the cap verdict below counts only
-    // rows with an id; the filter makes that the stated input
-    val bandedAll = banded0.filter(col("doc_id").isNotNull)
-      .select(col("doc_id"),
-        explode(array(col("band0"), col("band1"))).as("band"))
-    // Candidate pairs per band bucket WITHOUT a self-join and in ONE
-    // exchange (r17, guide §2.4): the bounded bottom-(cap+1) multiset
-    // aggregate ([[graft.functions.BoundedMinLongs]]) keeps ≤ cap+1
-    // member ids per band at every stage — map-side combined, O(cap)
-    // state — so a result of size cap+1 IS the over-cap verdict (row
-    // count > cap, the degenerate-boilerplate skew guard) and a smaller
-    // result is exactly collect_list's multiset, sorted. This replaces
-    // the r16 two-phase plan (map-combined count → broadcast anti-join →
-    // collect_list): same candidate set — the pair expansion is
-    // order-insensitive after least/greatest — with one exchange of the
-    // banded rows instead of two, and the no-reducer-materializes-a-
-    // degenerate-bucket guarantee now holds structurally in the
-    // aggregation buffer itself.
-    val cand = bandedAll.groupBy(col("band"))
-      .agg(graft.functions.BoundedMinLongs(col("doc_id"), bandCap + 1)
-        .as("ms"))
-      .filter(size(col("ms")).between(2, bandCap))
-      .select(explode(expr(
-        """flatten(transform(ms, (a, i) ->
-          |  transform(slice(ms, i + 2, size(ms) - i - 1), b ->
-          |    struct(least(a, b) AS doc_id_a, greatest(a, b) AS doc_id_b))))"""
-          .stripMargin)).as("p"))
-      .select(col("p.doc_id_a"), col("p.doc_id_b"))
-      .distinct()
-    val sh = banded0.select(col("doc_id"), col("shingles"))
-    cand
-      .join(sh.select(col("doc_id").as("doc_id_a"), col("shingles").as("sh_a")), "doc_id_a")
-      .join(sh.select(col("doc_id").as("doc_id_b"), col("shingles").as("sh_b")), "doc_id_b")
-      .withColumn("n_inter", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("n_union",
-        size(col("sh_a")) + size(col("sh_b")) - col("n_inter"))
-      .withColumn("jaccard",
-        col("n_inter").cast("double") / col("n_union").cast("double"))
-      .filter(col("jaccard") >= 0.5)
-      .select("doc_id_a", "doc_id_b", "jaccard")
-  }
+  /** Verified near-dup pairs of the set family (q29's plan, see
+    * [[LshIndex.pairs]]). Kept as a delegate because the `curation`
+    * benchmark's traced q136 recomposition compiles against this name. */
+  private[graft] def lshVerifiedPairs(docs: DataFrame): DataFrame =
+    LshIndex.pairs(docs, LshIndex.SetMinHash)
 
   /** SimHash hamming-≤3 pairs (q59): 64-bit signature, four 16-bit bands —
     * an exact hamming-3 ball (3 flipped bits invalidate at most 3 of the 4
     * bands, so one must collide: no recall loss). 16-bit bands keep the
     * join's key space at 4·2^16, so a bucket is ~n/65536 and the in-bucket
     * self-join stays linear-ish at corpus scale; the same count-prefiltered
-    * skew cap as the MinHash path (DefaultBandCap rationale) makes a
+    * skew cap as the MinHash path (LshIndex.DefaultBandCap rationale) makes a
     * degenerate bucket (boilerplate with identical sigs — q25's exact-dup
     * territory) contribute no pairs and no join work, enforced BEFORE the
     * join on a map-side-combined count. The sig is ONE native pass (one md5
     * per shingle — SimHashBits); shuffles carry only (bno, band, id, sig). */
   private[graft] def simhashPairs(docs: DataFrame,
-      bandCap: Int = DefaultBandCap): DataFrame = {
+      bandCap: Int = LshIndex.DefaultBandCap): DataFrame = {
     // EAGER localCheckpoint: sigs is 16 bytes/doc, and the hot-band count,
     // the anti-join probe, and both self-join sides all fan out from it —
     // without the checkpoint each branch re-runs the scan + shingle +
@@ -357,24 +300,6 @@ object TextOps {
       .distinct()
   }
 
-  /** documents → (doc_id, shingles, band0, band1) — shared LSH front end.
-    * Shingling + all 8 minhash minima run as ONE native one-pass kernel per
-    * row (graft.functions.TextNative): the Column formulation re-reads the
-    * shingle array per seed and evaluates every HOF lambda interpreted —
-    * same output, ~2× the time (TextOpsNativeSpec pins the equality). */
-  private[graft] def withBands(docs: DataFrame): DataFrame = {
-    val base = spread(docs)
-      .select(col("doc_id"),
-        graft.functions.TextExpressions.shingles3(col("text")).as("shingles"))
-      .filter(size(col("shingles")) > 0)
-      .withColumn("sig",
-        graft.functions.TextExpressions.minhashSig(col("shingles"), nSig))
-    val mhs = (0 until nSig).map(i => element_at(col("sig"), i + 1).as(s"mh$i"))
-    base.select((col("doc_id") +: col("shingles") +: mhs): _*)
-      .withColumn("band0", md5(concat_ws("", col("mh0"), col("mh1"), col("mh2"), col("mh3"))))
-      .withColumn("band1", md5(concat_ws("", col("mh4"), col("mh5"), col("mh6"), col("mh7"))))
-  }
-
   /** Column REFERENCE formulation of the densified one-permutation-hashing
     * signature — the definition [[graft.functions.TextNative.ophSig]] is
     * pinned against (TextOpsNativeSpec): one md5 per shingle, the leading
@@ -388,81 +313,6 @@ object TextOps {
       conv(substring(h, 1, 1), 16, 10).cast("int") % n === b)))
     array((0 until n).map(b =>
       coalesce((0 until n).map(k => mins((b + k) % n)): _*)): _*)
-  }
-
-  /** Weighted MinHash via the classic multiset-expansion reduction: a
-    * token with term frequency k expands to instances "tok#1".."tok#k",
-    * and PLAIN MinHash over the expanded set estimates the WEIGHTED
-    * Jaccard J_w = Σ_t min(tf_a,tf_b) / Σ_t max(tf_a,tf_b) — because
-    * |A∩B| over instances = Σ min and |A∪B| = Σ max. tf-weighted
-    * near-dup detection (boilerplate at different lengths that
-    * set-Jaccard misses) WITHOUT ICWS's real-valued sampling: every
-    * statistic stays an integer (the float-determinism discipline), the
-    * existing native kernels do all the work (TokenTf in-row, MinHashSig
-    * over the expanded array), and the per-doc expansion cost is exactly
-    * the doc's token count. */
-  private[graft] def expandedInstances(text: Column): Column =
-    flatten(transform(graft.functions.TextExpressions.tokenTf(text),
-      s => transform(sequence(lit(1), s.getField("tf")),
-        k => concat(s.getField("token"), lit("#"), k.cast("string")))))
-
-  /** (doc_id, tfs, n_tok, wmh0..wmh7, band0, band1) — the weighted-LSH
-    * front end mirroring [[withBands]]. `n_tok` = Σ tf (the instance
-    * count) rides along so the verify's union denominator is a
-    * pre-computed scalar per DOC, not a per-PAIR array fold. */
-  private[graft] def withWeightedBands(docs: DataFrame): DataFrame = {
-    val base = spread(docs)
-      .select(col("doc_id"),
-        graft.functions.TextExpressions.tokenTf(col("text")).as("tfs"),
-        expandedInstances(col("text")).as("inst"))
-      .filter(size(col("inst")) > 0)
-      .withColumn("sig",
-        graft.functions.TextExpressions.minhashSig(col("inst"), nSig))
-    val mhs = (0 until nSig).map(i => element_at(col("sig"), i + 1).as(s"wmh$i"))
-    base.select((col("doc_id") +: col("tfs") +:
-        size(col("inst")).cast("long").as("n_tok") +: mhs): _*)
-      .withColumn("band0", md5(concat_ws("", col("wmh0"), col("wmh1"), col("wmh2"), col("wmh3"))))
-      .withColumn("band1", md5(concat_ws("", col("wmh4"), col("wmh5"), col("wmh6"), col("wmh7"))))
-  }
-
-  /** Weighted near-dup pairs: q29's candidate discipline (single band
-    * aggregation, in-group expansion, count-prefiltered skew cap) with
-    * the EXACT integer weighted-Jaccard verify — Σ min(tf) via the native
-    * [[graft.functions.TextNative.tfIntersect]] kernel (the interpreted
-    * map_from_entries + aggregate HOF chain it replaced cost 3.4s of the
-    * query's 4.6s at sf0.1) and the token totals pre-computed per doc;
-    * the one division is the only float. */
-  private[graft] def weightedVerifiedPairs(docs: DataFrame,
-      bandCap: Int = DefaultBandCap, tau: Double = 0.5): DataFrame = {
-    val banded0 = withWeightedBands(docs).localCheckpoint()
-    val bandedAll = banded0.filter(col("doc_id").isNotNull)
-      .select(col("doc_id"),
-        explode(array(col("band0"), col("band1"))).as("band"))
-    // one-exchange capped candidate aggregation — see lshVerifiedPairs
-    val cand = bandedAll.groupBy(col("band"))
-      .agg(graft.functions.BoundedMinLongs(col("doc_id"), bandCap + 1)
-        .as("ms"))
-      .filter(size(col("ms")).between(2, bandCap))
-      .select(explode(expr(
-        """flatten(transform(ms, (a, i) ->
-          |  transform(slice(ms, i + 2, size(ms) - i - 1), b ->
-          |    struct(least(a, b) AS doc_id_a, greatest(a, b) AS doc_id_b))))"""
-          .stripMargin)).as("p"))
-      .select(col("p.doc_id_a"), col("p.doc_id_b"))
-      .distinct()
-    val tf = banded0.select(col("doc_id"), col("tfs"), col("n_tok"))
-    cand
-      .join(tf.select(col("doc_id").as("doc_id_a"), col("tfs").as("tf_a"),
-        col("n_tok").as("n_a")), "doc_id_a")
-      .join(tf.select(col("doc_id").as("doc_id_b"), col("tfs").as("tf_b"),
-        col("n_tok").as("n_b")), "doc_id_b")
-      .withColumn("inter",
-        graft.functions.TextExpressions.tfIntersect(col("tf_a"), col("tf_b")))
-      .withColumn("n_union", col("n_a") + col("n_b") - col("inter"))
-      .withColumn("wjaccard",
-        col("inter").cast("double") / col("n_union").cast("double"))
-      .filter(col("wjaccard") >= tau)
-      .select("doc_id_a", "doc_id_b", "wjaccard")
   }
 
   private val stopwords = Seq("the", "a")
@@ -693,7 +543,7 @@ object TextOps {
 
     // MinHash signatures + LSH band hashes.
     "q28_minhash_sig" -> ((s, dir) => {
-      withBands(t(s, dir, "documents"))
+      LshIndex.bands(t(s, dir, "documents"), LshIndex.SetMinHash)
         .select("doc_id", "mh0", "mh7", "band0", "band1")
     }),
 
@@ -701,19 +551,20 @@ object TextOps {
     // exact-Jaccard verification ≥ 0.5. The canonical scale-out dedup plan:
     // shuffle on band hash only, candidates ≪ n².
     "q29_minhash_pairs" -> ((s, dir) =>
-      lshVerifiedPairs(t(s, dir, "documents"))),
+      LshIndex.pairs(t(s, dir, "documents"), LshIndex.SetMinHash)),
 
     // Weighted MinHash signatures: tf-weighted Jaccard via the multiset
-    // expansion (see [[expandedInstances]]) — q28's shape over instances.
+    // expansion (see [[LshIndex.expandedInstances]]) — q28's shape over
+    // instances.
     "q184_weighted_minhash" -> ((s, dir) => {
-      withWeightedBands(t(s, dir, "documents"))
+      LshIndex.bands(t(s, dir, "documents"), LshIndex.WeightedMinHash)
         .select("doc_id", "wmh0", "wmh7", "band0", "band1")
     }),
 
     // Weighted near-dup pairs: band-bucket candidates + EXACT integer
-    // weighted-Jaccard verify (see [[weightedVerifiedPairs]]).
+    // weighted-Jaccard verify (see [[LshIndex.WeightedMinHash]]).
     "q185_weighted_pairs" -> ((s, dir) =>
-      weightedVerifiedPairs(t(s, dir, "documents"))),
+      LshIndex.pairs(t(s, dir, "documents"), LshIndex.WeightedMinHash)),
 
     // tf-weighted dedup END-TO-END (the q80 shape over the q185
     // detector): weighted verified pairs → connected components → each
@@ -723,7 +574,7 @@ object TextOps {
     "q186_weighted_dedup_apply" -> ((s, dir) => {
       implicit val spark: SparkSession = s
       val docs = t(s, dir, "documents")
-      val pairs = weightedVerifiedPairs(docs)
+      val pairs = LshIndex.pairs(docs, LshIndex.WeightedMinHash)
         .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
       val drops = graft.operators.ConnectedComponents.runPropagation(pairs)
         .filter(col("node") =!= col("component"))
@@ -749,14 +600,10 @@ object TextOps {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val isNew = col("doc_id") % 10 === 7
       val name = weightedIndexName(dir)
-      // existsWeighted requires BOTH _bands and _tfs: writeWeighted
-      // commits them concurrently, so a crash between the two commits
-      // must read as "absent" (rebuild), not as a half-index that
-      // satisfies a bands-only check forever (the IvfIndex.exists rule)
-      if (!graft.operators.LshIndex.existsWeighted(s, name))
-        graft.operators.LshIndex.writeWeighted(s, docs.filter(!isNew), name)
-      graft.operators.LshIndex.matchIncrementWeighted(
-        s, docs.filter(isNew), name)
+      val w = LshIndex.WeightedMinHash
+      if (!LshIndex.exists(s, name, w))
+        LshIndex.write(s, docs.filter(!isNew), name, w)
+      LshIndex.matchIncrement(s, docs.filter(isNew), name, w)
     }),
 
     // The weighted index BUILD, gated on its own (the q143 fixed-cost
@@ -771,8 +618,8 @@ object TextOps {
     "q212_weighted_index_build" -> ((s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val name = weightedIndexName(dir)
-      graft.operators.LshIndex.writeWeighted(
-        s, docs.filter(col("doc_id") % 10 =!= 7), name)
+      LshIndex.write(s, docs.filter(col("doc_id") % 10 =!= 7), name,
+        LshIndex.WeightedMinHash)
       s.table(s"${name}_bands").select(col("doc_id"), col("band"))
     }),
 
@@ -807,7 +654,7 @@ object TextOps {
     // the closure as a recursive CTE.
     "q46_dedup_clusters" -> ((s, dir) => {
       implicit val spark: SparkSession = s
-      val pairs = lshVerifiedPairs(t(s, dir, "documents"))
+      val pairs = LshIndex.pairs(t(s, dir, "documents"), LshIndex.SetMinHash)
         .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
       graft.operators.ConnectedComponents.runPropagation(pairs)
         .select(col("node").as("doc_id"), col("component").as("cluster_id"))
@@ -830,7 +677,7 @@ object TextOps {
     "q188_leakage_split" -> ((s, dir) => {
       implicit val spark: SparkSession = s
       val docs = t(s, dir, "documents")
-      val pairs = lshVerifiedPairs(docs)
+      val pairs = LshIndex.pairs(docs, LshIndex.SetMinHash)
         .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
       val clusters = graft.operators.ConnectedComponents.runPropagation(pairs)
         .select(col("node").as("doc_id"), col("component").as("cid"))
@@ -1246,10 +1093,10 @@ object TextOps {
     // verify; LshIndexSpec pins the zero-exchange plan property.
     "q108_incremental_neardup" -> ((s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      graft.operators.LshIndex.write(
-        s, docs.filter(col("doc_id") % 5 =!= 0), "q108_idx", 8)
-      graft.operators.LshIndex.matchIncrement(
-        s, docs.filter(col("doc_id") % 5 === 0), "q108_idx")
+      LshIndex.write(s, docs.filter(col("doc_id") % 5 =!= 0), "q108_idx",
+        LshIndex.SetMinHash, 8)
+      LshIndex.matchIncrement(s, docs.filter(col("doc_id") % 5 === 0),
+        "q108_idx", LshIndex.SetMinHash)
     }),
 
     // Bigram novelty score — the cheap LM-ish fluency/novelty signal: how
@@ -1411,7 +1258,7 @@ object TextOps {
     "q80_dedup_apply" -> ((s, dir) => {
       implicit val spark: SparkSession = s
       val docs = t(s, dir, "documents")
-      val pairs = lshVerifiedPairs(docs)
+      val pairs = LshIndex.pairs(docs, LshIndex.SetMinHash)
         .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
       val drops = graft.operators.ConnectedComponents.runPropagation(pairs)
         .filter(col("node") =!= col("component"))
@@ -1583,7 +1430,7 @@ object TextOps {
     "q211_priority_dedup" -> ((s, dir) => {
       implicit val spark: SparkSession = s
       val docs = t(s, dir, "documents")
-      val pairs = lshVerifiedPairs(docs)
+      val pairs = LshIndex.pairs(docs, LshIndex.SetMinHash)
         .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
       val comp = graft.operators.ConnectedComponents.runPropagation(pairs)
         .select(col("node").as("doc_id"), col("component"))
@@ -1679,7 +1526,7 @@ object TextOps {
     s"list_min(list_transform($sh, s -> md5('$i|' || s)))"
 
   // weighted-minhash building blocks (multiset expansion — see
-  // [[expandedInstances]]; instance format "tok#k" matches the Spark side)
+  // [[LshIndex.expandedInstances]]; instance format "tok#k" matches the Spark side)
   private val sqlTf =
     s"""SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS c
        |  FROM (SELECT doc_id, unnest($sqlTokens) AS tok FROM documents)
@@ -1699,7 +1546,7 @@ object TextOps {
   /** The weighted-LSH → exact-weighted-Jaccard CTE chain (tf…sc) shared
     * by q185 (pair list) and q186 (dedup-apply closure); `sc` exposes
     * (doc_id_a, doc_id_b, wjaccard) for ALL candidates — consumers apply
-    * the ≥ 0.5 threshold. ≙ [[weightedVerifiedPairs]] on the Spark side,
+    * the ≥ 0.5 threshold. ≙ [[LshIndex.pairs]] (weighted) on the Spark side,
     * same deliberate band-cap omission as [[sqlLshClusterChain]]. */
   private def sqlWeightedPairChain: String =
     s"""tf AS ($sqlTf),
@@ -1739,10 +1586,10 @@ object TextOps {
     * (sig…clus), parametrized by the input relation so pipeline
     * compositions (q136) can run it on a derived stage. Must be embedded
     * under a `WITH RECURSIVE` header (walk is the recursive member);
-    * `clus` exposes (doc_id, cluster_id). ≙ [[lshVerifiedPairs]] +
+    * `clus` exposes (doc_id, cluster_id). ≙ [[LshIndex.pairs]] +
     * ConnectedComponents.runPropagation on the Spark side — EXCEPT the
     * band cap: the SQL expands every bucket while the Spark side drops
-    * over-cap (>DefaultBandCap) degenerate buckets. The gate corpora
+    * over-cap (>LshIndex.DefaultBandCap) degenerate buckets. The gate corpora
     * have no over-cap bucket so the oracles agree (same deliberate
     * omission as q29/q80, pinned separately by LshBandCapSpec); a corpus
     * with a degenerate bucket would diverge here by design — the cap is
@@ -1915,7 +1762,7 @@ object TextOps {
          |  SELECT doc_id, hi, lo, 3, lo & 65535 FROM sigs),
          |hot AS (
          |  SELECT bno, band FROM banded GROUP BY 1, 2
-         |  HAVING count(*) > $DefaultBandCap),
+         |  HAVING count(*) > ${LshIndex.DefaultBandCap}),
          |cold AS (
          |  SELECT b.* FROM banded b ANTI JOIN hot h USING (bno, band))
          |SELECT DISTINCT x.doc_id AS doc_id_a, y.doc_id AS doc_id_b,

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import graft.operators.{ConnectedComponents, LshIndex}
-import graft.queries.TextOps
 
 /** Streaming NEAR-duplicate ingest — the online companion to
   * [[CorpusIngest]] (exact first-seen) and the streaming driver for the
@@ -13,14 +12,14 @@ import graft.queries.TextOps
   *
   * Contract (greedy first-seen, the standard crawl-dedup semantics):
   *   - a doc is DROPPED if it is LSH-verified similar (band collision AND
-  *     exact Jaccard ≥ tau) to ANY doc from an earlier batch — kept or
-  *     dropped: a near-dup of a dropped doc is transitively redundant
+  *     exact Jaccard ≥ [[LshIndex.Tau]]) to ANY doc from an earlier batch
+  *     — kept or dropped: a near-dup of a dropped doc is transitively redundant
   *     with that doc's keeper, exactly like the batch q80 cluster rule;
   *   - within a batch, survivors near-dup-cluster (verified pairs →
   *     connected components) and each cluster keeps its min doc_id —
   *     identical to the batch apply (q80), so a one-batch stream equals
   *     the batch pipeline (spec-pinned);
-  *   - ALL batch docs (kept and dropped) index their bands + shingles,
+  *   - ALL batch docs (kept and dropped) index their bands + payload,
   *     so later arrivals match the full seen corpus.
   *
   * Scale shape: the per-batch work is [[LshIndex.matchIncrement]] — only
@@ -39,22 +38,19 @@ import graft.queries.TextOps
   * batch's own rows already indexed, which the history match neutralizes
   * by anti-joining old_id against the batch's ids; re-appended index rows
   * are absorbed by distinct() in candidate generation and by the
-  * per-doc_id distinct band-cap count, and removed by the next offline
-  * compaction ([[LshIndex.write]] refresh).
+  * per-doc_id distinct band-cap count, and removed by the next
+  * [[LshIndex.compact]] (the `compactEvery` cadence).
   */
 object NearDupIngest {
 
-  /** Create empty index tables if absent (batch-0 bootstrap). `weighted`
-    * selects the tf-weighted detector's table layout. */
+  /** Create empty index tables of `family` if absent (batch-0
+    * bootstrap). */
   def ensureIndex(spark: SparkSession, indexName: String,
-      buckets: Int = 32, weighted: Boolean = false): Unit = {
+      buckets: Int = 32, family: LshIndex.Family = LshIndex.SetMinHash): Unit = {
     import spark.implicits._
-    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    if (weighted) {
-      if (!LshIndex.existsWeighted(spark, indexName))
-        LshIndex.writeWeighted(spark, empty, indexName, buckets)
-    } else if (!LshIndex.exists(spark, indexName))
-      LshIndex.write(spark, empty, indexName, buckets)
+    if (!LshIndex.exists(spark, indexName, family))
+      LshIndex.write(spark, Seq.empty[(Long, String)].toDF("doc_id", "text"),
+        indexName, family, buckets)
   }
 
   /** Process one micro-batch of (doc_id, text): returns the kept docs
@@ -62,16 +58,16 @@ object NearDupIngest {
     * the index. Skips (returning empty) if the batch is already
     * committed.
     *
-    * `weighted = true` runs the TF-WEIGHTED tier (q184–q186 made
-    * streaming): weighted-MinHash bands for candidates, the exact integer
-    * Σmin/Σmax TfIntersect verify against `tau`, and the in-batch step is
-    * q186's weighted pair rule — so a one-batch stream reproduces the
-    * batch weighted-dedup apply exactly (spec-pinned). Same index
-    * architecture, same crash-replay guard, same scale shape. */
+    * `family` picks the signature family of both steps: with
+    * [[LshIndex.WeightedMinHash]] this is the TF-WEIGHTED tier (q184–q186
+    * made streaming), and a one-batch stream reproduces the batch
+    * weighted-dedup apply (q186) exactly, as the set family reproduces
+    * q80 (both spec-pinned). Both steps verify at [[LshIndex.Tau]]. */
   def processBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
       indexName: String, outDir: String,
-      bandCap: Int = TextOps.DefaultBandCap, tau: Double = 0.5,
-      weighted: Boolean = false, compactEvery: Int = 0): Unit = {
+      bandCap: Int = LshIndex.DefaultBandCap,
+      family: LshIndex.Family = LshIndex.SetMinHash,
+      compactEvery: Int = 0): Unit = {
     val marker = new java.io.File(outDir, s"_committed/$batchId")
     if (marker.exists()) return
     val docs = batch.select(col("doc_id"), col("text")).localCheckpoint()
@@ -90,30 +86,22 @@ object NearDupIngest {
     //    exclusion side is batch-sized (broadcast anti) — free at scale;
     //    in-batch pairs are handled (once, correctly) by step 2.
     val own = Some(docs.select(col("doc_id")))
-    val histDups =
-      (if (weighted)
-        LshIndex.matchIncrementWeighted(spark, docs, indexName, bandCap,
-          tau, excludeIds = own)
-      else
-        LshIndex.matchIncrement(spark, docs, indexName, bandCap, tau,
-          excludeIds = own))
-        .select(col("new_id").as("doc_id")).distinct()
+    val histDups = LshIndex.matchIncrement(spark, docs, indexName, family,
+        bandCap, excludeIds = own)
+      .select(col("new_id").as("doc_id")).distinct()
     val survivors = docs.join(histDups, Seq("doc_id"), "left_anti")
       .localCheckpoint()
     // 2. in-batch near-dup clusters keep min doc_id (the q80/q186 rule)
     implicit val s: SparkSession = spark
-    val pairs =
-      (if (weighted) TextOps.weightedVerifiedPairs(survivors, bandCap, tau)
-       else TextOps.lshVerifiedPairs(survivors, bandCap))
-        .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
+    val pairs = LshIndex.pairs(survivors, family, bandCap)
+      .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
     val drops = ConnectedComponents.runPropagation(pairs)
       .filter(col("node") =!= col("component"))
       .select(col("node").as("doc_id"))
     val kept = survivors.join(drops, Seq("doc_id"), "left_anti")
     kept.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
     // 3. index the WHOLE batch (kept + dropped) for later arrivals
-    if (weighted) LshIndex.appendWeighted(spark, docs, indexName)
-    else LshIndex.append(spark, docs, indexName)
+    LshIndex.append(spark, docs, indexName, family)
     marker.mkdirs()
     // operational compaction cadence (the VecDupIngest rule): after the
     // marker, semantics-free, crash-safe — a crash mid-compact leaves it
@@ -178,7 +166,7 @@ object NearDupIngest {
     * have no shingles and are out of the LSH contract, as in batch). */
   def withSignatures(docs: DataFrame): Dataset[BandHit] = {
     import docs.sparkSession.implicits._
-    val banded = TextOps.withBands(docs)
+    val banded = LshIndex.bands(docs, LshIndex.SetMinHash)
     val sig = array((0 until 8).map(i => col(s"mh$i")): _*)
     banded.select(col("doc_id").as("docId"),
       explode(array(col("band0"), col("band1"))).as("band"), sig.as("sig"))
@@ -230,11 +218,11 @@ object NearDupIngest {
 
   /** Wire a (doc_id, text) stream through [[processBatch]]. */
   def start(stream: DataFrame, indexName: String, outDir: String,
-      checkpoint: String, bandCap: Int = TextOps.DefaultBandCap,
-      tau: Double = 0.5, weighted: Boolean = false,
+      checkpoint: String, bandCap: Int = LshIndex.DefaultBandCap,
+      family: LshIndex.Family = LshIndex.SetMinHash,
       compactEvery: Int = 0): StreamingQuery = {
     val spark = stream.sparkSession
-    ensureIndex(spark, indexName, weighted = weighted)
+    ensureIndex(spark, indexName, family = family)
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (df: DataFrame, id: Long) =>
@@ -242,7 +230,7 @@ object NearDupIngest {
         // SharedState): catalog reads and the append invalidation then
         // agree on one relation cache
         processBatch(df.sparkSession, df, id, indexName, outDir, bandCap,
-          tau, weighted, compactEvery)
+          family, compactEvery)
       }
       .start()
   }

@@ -160,8 +160,8 @@ class CollectDisciplineSpec extends AnyFunSuite {
         "hides the size from the estimator) and filteredTopK's " +
         "pre-filter query set (the 10% delta, the q31 " +
         "queries-broadcast discipline)"),
-    "operators/LshIndex.scala" -> (2,
-      "the excludeIds anti sides of matchIncrement/matchIncrementWeighted " +
+    "operators/LshIndex.scala" -> (1,
+      "matchIncrement's excludeIds anti side, one for both families " +
         "(ingest-batch-sized: the replaying batch's own doc_ids)"),
     "streaming/VecDupIngest.scala" -> (4,
       "the frozen centroid codebook (k rows) for in-batch cell pairing + " +

@@ -31,33 +31,35 @@ class IndexRemoveSpec extends AnyFunSuite {
       .load(spark, "/root/testdata/sf0.001", "documents")
       .select(col("doc_id"), col("text"))
     val isNew = col("doc_id") % 5 === 0
-    LshIndex.write(spark, docs.filter(!isNew), "rm_idx", buckets = 4)
-    val before = LshIndex.matchIncrement(spark, docs.filter(isNew), "rm_idx")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(before.nonEmpty, "fixture must produce matches")
-    // forget every old doc that matched an increment doc ending in 0
-    val toForget = before.filter(_._1 % 10 == 0).map(_._2)
-    assert(toForget.nonEmpty)
     import spark.implicits._
-    LshIndex.remove(spark, "rm_idx", toForget.toSeq.toDF("doc_id"))
-    val after = LshIndex.matchIncrement(spark, docs.filter(isNew), "rm_idx")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(after == before.filterNot(p => toForget.contains(p._2)))
-    // storage-level purge: no trace of the ids in either table
-    Seq("rm_idx_bands", "rm_idx_shingles").foreach { tbl =>
-      assert(spark.table(tbl)
-        .filter(col("doc_id").isin(toForget.toSeq: _*)).count() == 0, tbl)
-    }
-    // bucket spec survives the rewrite
     import org.apache.spark.sql.catalyst.TableIdentifier
-    assert(spark.sessionState.catalog
-      .getTableMetadata(TableIdentifier("rm_idx_bands"))
-      .bucketSpec.exists(_.numBuckets == 4))
-    // idempotent: removing the same (now absent) ids changes nothing
-    LshIndex.remove(spark, "rm_idx", toForget.toSeq.toDF("doc_id"))
-    val again = LshIndex.matchIncrement(spark, docs.filter(isNew), "rm_idx")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(again == after)
+    LshIndex.Families.foreach { fam =>
+      val name = s"rm_${fam.score}_idx"
+      def matches() = LshIndex.matchIncrement(spark, docs.filter(isNew),
+          name, fam)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      LshIndex.write(spark, docs.filter(!isNew), name, fam, buckets = 4)
+      val before = matches()
+      assert(before.nonEmpty, s"${fam.score}: fixture must produce matches")
+      // forget every old doc that matched an increment doc ending in 0
+      val toForget = before.filter(_._1 % 10 == 0).map(_._2)
+      assert(toForget.nonEmpty, fam.score)
+      LshIndex.remove(spark, name, toForget.toSeq.toDF("doc_id"))
+      val after = matches()
+      assert(after == before.filterNot(p => toForget.contains(p._2)), fam.score)
+      // storage-level purge: no trace of the ids in either table
+      Seq(s"${name}_bands", name + fam.table).foreach { tbl =>
+        assert(spark.table(tbl)
+          .filter(col("doc_id").isin(toForget.toSeq: _*)).count() == 0, tbl)
+      }
+      // bucket spec survives the rewrite
+      assert(spark.sessionState.catalog
+        .getTableMetadata(TableIdentifier(s"${name}_bands"))
+        .bucketSpec.exists(_.numBuckets == 4), fam.score)
+      // idempotent: removing the same (now absent) ids changes nothing
+      LshIndex.remove(spark, name, toForget.toSeq.toDF("doc_id"))
+      assert(matches() == after, fam.score)
+    }
   }
 
   test("streaming: a takedown between batches un-suppresses future " +
@@ -99,7 +101,7 @@ class IndexRemoveSpec extends AnyFunSuite {
   /** The batch q80 keep rule (the NearDupIngestSpec reference). */
   private def batchKeptIds(d: org.apache.spark.sql.DataFrame): Set[Long] = {
     implicit val s: SparkSession = spark
-    val pairs = graft.queries.TextOps.lshVerifiedPairs(d)
+    val pairs = LshIndex.pairs(d, LshIndex.SetMinHash)
       .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
     val drops = graft.operators.ConnectedComponents.runPropagation(pairs)
       .filter(col("node") =!= col("component"))

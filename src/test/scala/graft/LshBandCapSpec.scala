@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.operators.LshIndex
 import graft.queries.TextOps
 
 /** The LSH band-frequency cap (SCALE.md dedup mitigation): a degenerate
@@ -31,13 +32,14 @@ class LshBandCapSpec extends AnyFunSuite {
   }
 
   test("degenerate band dropped; healthy pairs survive") {
-    val capped = TextOps.lshVerifiedPairs(skewedCorpus)
+    val capped = LshIndex.pairs(skewedCorpus, LshIndex.SetMinHash)
       .select("doc_id_a", "doc_id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(capped == Set((1L, 2L), (3L, 4L)))
 
     // without the cap the boilerplate cluster floods the join: C(100,2)
-    val uncapped = TextOps.lshVerifiedPairs(skewedCorpus, bandCap = 1 << 20)
+    val uncapped = LshIndex.pairs(skewedCorpus, LshIndex.SetMinHash,
+      bandCap = 1 << 20)
       .select("doc_id_a", "doc_id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(uncapped.size == 2 + 100 * 99 / 2)
@@ -57,9 +59,9 @@ class LshBandCapSpec extends AnyFunSuite {
       (i.toLong, if (i % 2 == 1) s"document number ${i - 1} speaks about " +
         s"topic ${i - 1} in original words ${i - 1}" else base)
     }.toDF("doc_id", "text")
-    val a = TextOps.lshVerifiedPairs(docs)
+    val a = LshIndex.pairs(docs, LshIndex.SetMinHash)
       .select("doc_id_a", "doc_id_b").collect().toSet
-    val b = TextOps.lshVerifiedPairs(docs, bandCap = 1 << 20)
+    val b = LshIndex.pairs(docs, LshIndex.SetMinHash, bandCap = 1 << 20)
       .select("doc_id_a", "doc_id_b").collect().toSet
     assert(a == b && a.nonEmpty)
   }
@@ -101,17 +103,14 @@ class LshBandCapSpec extends AnyFunSuite {
     val text = "the quick brown fox jumps over the lazy dog"
     // every row shares both band buckets; cap = 2 non-null ids keeps the
     // bucket, 3 drops it, and the NULL row never counts or pairs
-    def pairs(ids: Seq[Option[Long]],
-        f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) =
-      f(ids.map(i => (i, text)).toDF("doc_id", "text"))
+    def pairs(ids: Seq[Option[Long]], f: LshIndex.Family) =
+      LshIndex.pairs(ids.map(i => (i, text)).toDF("doc_id", "text"), f,
+          bandCap = 2)
         .select("doc_id_a", "doc_id_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val fs = Seq[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame](
-      TextOps.lshVerifiedPairs(_, bandCap = 2),
-      TextOps.weightedVerifiedPairs(_, bandCap = 2))
-    fs.foreach { f =>
-      assert(pairs(Seq(Some(1L), Some(2L), None), f) == Set((1L, 2L)))
-      assert(pairs(Seq(Some(1L), Some(2L), Some(3L), None), f).isEmpty)
+    LshIndex.Families.foreach { f =>
+      assert(pairs(Seq(Some(1L), Some(2L), None), f) == Set((1L, 2L)), f.score)
+      assert(pairs(Seq(Some(1L), Some(2L), Some(3L), None), f).isEmpty, f.score)
     }
   }
 }

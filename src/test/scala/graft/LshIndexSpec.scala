@@ -23,8 +23,8 @@ class LshIndexSpec extends AnyFunSuite {
     s
   }
 
-  private def freshTables(): Unit = Seq("t_idx_bands", "t_idx_shingles")
-    .foreach { t =>
+  private def freshTables(): Unit =
+    Seq("t_idx_bands", "t_idx_shingles", "t_idx_tfs").foreach { t =>
       spark.sql(s"DROP TABLE IF EXISTS $t")
       val loc = new java.io.File(spark.conf
         .get("spark.sql.warehouse.dir").stripPrefix("file:"), t)
@@ -40,12 +40,13 @@ class LshIndexSpec extends AnyFunSuite {
       .load(spark, "/root/testdata/sf0.001", "documents")
       .select(col("doc_id"), col("text"))
     val isNew = col("doc_id") % 5 === 0
-    LshIndex.write(spark, docs.filter(!isNew), "t_idx", buckets = 4)
-    val got = LshIndex.matchIncrement(spark, docs.filter(isNew), "t_idx")
+    val set = LshIndex.SetMinHash
+    LshIndex.write(spark, docs.filter(!isNew), "t_idx", set, buckets = 4)
+    val got = LshIndex.matchIncrement(spark, docs.filter(isNew), "t_idx", set)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
     // reference: the q29 whole-corpus path, keeping only new×old pairs
-    val all = graft.queries.TextOps.lshVerifiedPairs(docs).collect()
+    val all = LshIndex.pairs(docs, set).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val expected = all.collect {
       case (a, b) if a % 5 == 0 && b % 5 != 0 => (a, b)
@@ -64,15 +65,19 @@ class LshIndexSpec extends AnyFunSuite {
     val old = (1L to 30L).map(i => (i, boiler)) :+
       (99L, "totally different words that share no shingle with boiler x")
     val fresh = Seq((1000L, boiler))
-    freshTables()
-    LshIndex.write(spark, old.toDF("doc_id", "text"), "t_idx", buckets = 4)
-    val capped = LshIndex.matchIncrement(
-      spark, fresh.toDF("doc_id", "text"), "t_idx", bandCap = 8)
-    assert(capped.count() == 0, "over-cap band must contribute no pairs")
-    // sanity: with a generous cap the same increment matches all 30
-    val uncapped = LshIndex.matchIncrement(
-      spark, fresh.toDF("doc_id", "text"), "t_idx", bandCap = 1000)
-    assert(uncapped.count() == 30)
+    // the set family runs last: the next test reads its t_idx_bands
+    LshIndex.Families.reverse.foreach { fam =>
+      freshTables()
+      LshIndex.write(spark, old.toDF("doc_id", "text"), "t_idx", fam,
+        buckets = 4)
+      val capped = LshIndex.matchIncrement(
+        spark, fresh.toDF("doc_id", "text"), "t_idx", fam, bandCap = 8)
+      assert(capped.count() == 0, s"${fam.score}: over-cap band must contribute no pairs")
+      // sanity: with a generous cap the same increment matches all 30
+      val uncapped = LshIndex.matchIncrement(
+        spark, fresh.toDF("doc_id", "text"), "t_idx", fam, bandCap = 1000)
+      assert(uncapped.count() == 30, fam.score)
+    }
   }
 
   test("index side of the candidate join reads buckets with no Exchange") {
@@ -105,26 +110,29 @@ class LshIndexSpec extends AnyFunSuite {
     val text = "alpha beta gamma delta epsilon zeta"
     val hist = (0L until 7L).map(i => (i, text)).toDF("doc_id", "text")
     val batch = Seq((100L, text), (101L, text)).toDF("doc_id", "text")
-    LshIndex.write(spark, hist, "t_cap_idx", buckets = 4)
-    LshIndex.append(spark, batch, "t_cap_idx") // the crashed run's append
-    val without = LshIndex.matchIncrement(spark, batch, "t_cap_idx",
-      bandCap = 8)
-    val withEx = LshIndex.matchIncrement(spark, batch, "t_cap_idx",
-      bandCap = 8, excludeIds = Some(batch.select("doc_id")))
-    assert(without.count() == 0,
-      "setup: counting the batch's own ids must tip the band hot")
-    val got = withEx.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == (for (n <- Seq(100L, 101L); o <- 0L until 7L)
-      yield (n, o)).toSet,
-      "excluding the replaying batch must reproduce the original match set")
-    // and the exclusion preserves the exchange-free cap count
-    val idx = spark.table("t_cap_idx_bands").join(
-      broadcast(batch.select("doc_id")), Seq("doc_id"), "left_anti")
-    val capPlan = idx.groupBy("band")
-      .agg(countDistinct(col("doc_id")).as("c"))
-      .queryExecution.executedPlan.toString
-    assert(!capPlan.contains("Exchange hashpartitioning"),
-      s"cap count must stay exchange-free under exclusion:\n${capPlan.take(600)}")
+    LshIndex.Families.foreach { fam =>
+      val name = s"t_cap_${fam.score}_idx"
+      LshIndex.write(spark, hist, name, fam, buckets = 4)
+      LshIndex.append(spark, batch, name, fam) // the crashed run's append
+      val without = LshIndex.matchIncrement(spark, batch, name, fam,
+        bandCap = 8)
+      val withEx = LshIndex.matchIncrement(spark, batch, name, fam,
+        bandCap = 8, excludeIds = Some(batch.select("doc_id")))
+      assert(without.count() == 0,
+        s"${fam.score} setup: counting the batch's own ids must tip the band hot")
+      val got = withEx.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got == (for (n <- Seq(100L, 101L); o <- 0L until 7L)
+        yield (n, o)).toSet,
+        s"${fam.score}: excluding the replaying batch must reproduce the original match set")
+      // and the exclusion preserves the exchange-free cap count
+      val idx = spark.table(s"${name}_bands").join(
+        broadcast(batch.select("doc_id")), Seq("doc_id"), "left_anti")
+      val capPlan = idx.groupBy("band")
+        .agg(countDistinct(col("doc_id")).as("c"))
+        .queryExecution.executedPlan.toString
+      assert(!capPlan.contains("Exchange hashpartitioning"),
+        s"${fam.score}: cap count must stay exchange-free under exclusion:\n${capPlan.take(600)}")
+    }
   }
 
   test("weighted index: incremental matches == weightedVerifiedPairs " +
@@ -133,14 +141,15 @@ class LshIndexSpec extends AnyFunSuite {
       .load(spark, "/root/testdata/sf0.001", "documents")
       .select(col("doc_id"), col("text"))
     val isNew = col("doc_id") % 10 === 7
-    LshIndex.writeWeighted(spark, docs.filter(!isNew), "t_w_idx", buckets = 4)
-    LshIndex.appendWeighted(spark, docs.filter(isNew), "t_w_idx")
+    val w = LshIndex.WeightedMinHash
+    LshIndex.write(spark, docs.filter(!isNew), "t_w_idx", w, buckets = 4)
+    LshIndex.append(spark, docs.filter(isNew), "t_w_idx", w)
     // replay the append (crash window) — duplicated rows in both tables
-    LshIndex.appendWeighted(spark, docs.filter(isNew), "t_w_idx")
-    val got = LshIndex.matchIncrementWeighted(spark, docs.filter(isNew),
-        "t_w_idx", excludeIds = Some(docs.filter(isNew).select("doc_id")))
+    LshIndex.append(spark, docs.filter(isNew), "t_w_idx", w)
+    val got = LshIndex.matchIncrement(spark, docs.filter(isNew),
+        "t_w_idx", w, excludeIds = Some(docs.filter(isNew).select("doc_id")))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val whole = graft.queries.TextOps.weightedVerifiedPairs(docs).collect()
+    val whole = LshIndex.pairs(docs, w).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val expect = whole.collect {
       case (a, b) if a % 10 == 7 && b % 10 != 7 => (a, b)
@@ -153,8 +162,8 @@ class LshIndexSpec extends AnyFunSuite {
     assert(bandFiles("t_w_idx_bands") < filesBefore)
     assert(spark.table("t_w_idx_bands").count() ==
       spark.table("t_w_idx_bands").dropDuplicates("band", "doc_id").count())
-    val postCompact = LshIndex.matchIncrementWeighted(spark,
-        docs.filter(isNew), "t_w_idx",
+    val postCompact = LshIndex.matchIncrement(spark,
+        docs.filter(isNew), "t_w_idx", w,
         excludeIds = Some(docs.filter(isNew).select("doc_id")))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(postCompact == expect, "compaction must not change matches")

@@ -46,7 +46,7 @@ class NearDupIngestSpec extends AnyFunSuite {
   /** The batch q80 keep rule over any doc set. */
   private def batchKept(d: org.apache.spark.sql.DataFrame): Set[Long] = {
     implicit val s: SparkSession = spark
-    val pairs = TextOps.lshVerifiedPairs(d)
+    val pairs = LshIndex.pairs(d, LshIndex.SetMinHash)
       .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
     val drops = ConnectedComponents.runPropagation(pairs)
       .filter(col("node") =!= col("component"))
@@ -82,7 +82,7 @@ class NearDupIngestSpec extends AnyFunSuite {
     // reference for batch 1: drop docs with a verified pair into batch 0
     // (kept or dropped — the greedy transitive rule), then the q80 rule
     // on the survivors
-    val all = TextOps.lshVerifiedPairs(docs).collect()
+    val all = LshIndex.pairs(docs, LshIndex.SetMinHash).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val histDrop = all.collect {
       case (a, b) if a % 2 == 1 && b % 2 == 0 => a
@@ -135,7 +135,7 @@ class NearDupIngestSpec extends AnyFunSuite {
     // fresh increment still matches (distinct cap count, distinct pairs)
     val probe = docs.limit(1)
     val m = LshIndex.matchIncrement(spark, probe.withColumn(
-      "doc_id", col("doc_id") + 100000L), "ndi5")
+      "doc_id", col("doc_id") + 100000L), "ndi5", LshIndex.SetMinHash)
     assert(m.filter(col("jaccard") === 1.0).count() >= 1,
       "exact re-crawl must still match after a double append")
   }
@@ -143,7 +143,7 @@ class NearDupIngestSpec extends AnyFunSuite {
   /** The batch q186 (weighted dedup apply) keep rule over any doc set. */
   private def batchKeptWeighted(d: org.apache.spark.sql.DataFrame): Set[Long] = {
     implicit val s: SparkSession = spark
-    val pairs = TextOps.weightedVerifiedPairs(d)
+    val pairs = LshIndex.pairs(d, LshIndex.WeightedMinHash)
       .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
     val drops = ConnectedComponents.runPropagation(pairs)
       .filter(col("node") =!= col("component"))
@@ -154,9 +154,11 @@ class NearDupIngestSpec extends AnyFunSuite {
   test("weighted tier: one-batch stream == the batch q186 weighted-dedup rule") {
     spark.sql("DROP TABLE IF EXISTS ndw1_bands")
     spark.sql("DROP TABLE IF EXISTS ndw1_tfs")
-    NearDupIngest.ensureIndex(spark, "ndw1", buckets = 4, weighted = true)
+    NearDupIngest.ensureIndex(spark, "ndw1", buckets = 4,
+      family = LshIndex.WeightedMinHash)
     val out = Files.createTempDirectory("ndw1_out").toString
-    NearDupIngest.processBatch(spark, docs, 0L, "ndw1", out, weighted = true)
+    NearDupIngest.processBatch(spark, docs, 0L, "ndw1", out,
+      family = LshIndex.WeightedMinHash)
     val kept = spark.read.parquet(s"$out/batch=0")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     val expect = batchKeptWeighted(docs)
@@ -168,12 +170,15 @@ class NearDupIngestSpec extends AnyFunSuite {
     "replay reproduces the kept set") {
     spark.sql("DROP TABLE IF EXISTS ndw2_bands")
     spark.sql("DROP TABLE IF EXISTS ndw2_tfs")
-    NearDupIngest.ensureIndex(spark, "ndw2", buckets = 4, weighted = true)
+    NearDupIngest.ensureIndex(spark, "ndw2", buckets = 4,
+      family = LshIndex.WeightedMinHash)
     val out = Files.createTempDirectory("ndw2_out").toString
     val b0 = docs.filter(col("doc_id") % 2 === 0)
     val b1 = docs.filter(col("doc_id") % 2 === 1)
-    NearDupIngest.processBatch(spark, b0, 0L, "ndw2", out, weighted = true)
-    NearDupIngest.processBatch(spark, b1, 1L, "ndw2", out, weighted = true)
+    NearDupIngest.processBatch(spark, b0, 0L, "ndw2", out,
+      family = LshIndex.WeightedMinHash)
+    NearDupIngest.processBatch(spark, b1, 1L, "ndw2", out,
+      family = LshIndex.WeightedMinHash)
     val kept0 = spark.read.parquet(s"$out/batch=0")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     val kept1 = spark.read.parquet(s"$out/batch=1")
@@ -181,7 +186,7 @@ class NearDupIngestSpec extends AnyFunSuite {
     assert(kept0 == batchKeptWeighted(b0))
     // reference for batch 1: drop docs weighted-paired into batch 0, then
     // the weighted q186 rule on the survivors
-    val all = TextOps.weightedVerifiedPairs(docs).collect()
+    val all = LshIndex.pairs(docs, LshIndex.WeightedMinHash).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val histDrop = all.collect {
       case (a, b) if a % 2 == 1 && b % 2 == 0 => a
@@ -197,7 +202,8 @@ class NearDupIngestSpec extends AnyFunSuite {
     // crash window: batch 1's rows are indexed but the marker vanished —
     // the excludeIds guard must reproduce the kept set exactly
     new java.io.File(out, "_committed/1").delete()
-    NearDupIngest.processBatch(spark, b1, 1L, "ndw2", out, weighted = true)
+    NearDupIngest.processBatch(spark, b1, 1L, "ndw2", out,
+      family = LshIndex.WeightedMinHash)
     val replayed = spark.read.parquet(s"$out/batch=1")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(replayed == kept1,

@@ -326,7 +326,7 @@ class PlanBudgetSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     "q161_equidepth_bins"     -> (1, "bin lookup filter over <= 10 boundaries"),
     "q180_substring_cut"      -> (1, "span-cut aggregate (TextOps: the documented trade vs a second text exchange)"),
     "q182_kn_perplexity"      -> (3, s"map-literal Kneser-Ney fold aggregate(transform(bigs)) + $bigrams; next native candidate"),
-    "q184_weighted_minhash"   -> (6, "tf-weighted instance expansion transform(token_tf, transform(sequence)) (Project, Filter, pushed scan filter)"),
+    "q184_weighted_minhash"   -> (2, "tf-weighted instance expansion transform(tfs, transform(sequence)), once in the Project (the non-empty filter counts tokens)"),
     "q185_weighted_pairs"     -> (2, bandPairs),
     "q189_vecdup_batch"       -> (2, argmax),
     "q190_vecdup_recall"      -> (2, argmax),

@@ -1,12 +1,16 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.catalyst.expressions.{Expression, Flatten, Sequence}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
   QueryStageExec}
 import org.apache.spark.sql.functions._
-import graft.functions.{TextExpressions, Tokens}
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.util.QueryExecutionListener
+import graft.functions.{Shingles3, TextExpressions, TokenTf, Tokens}
 import graft.queries.TextOps
 
 /** The native one-pass shingle/minhash kernels must produce EXACTLY the
@@ -59,18 +63,20 @@ class TextOpsNativeSpec extends AnyFunSuite {
     assert(both.filter(col("native") > 5).count() > 50) // non-trivial corpus
   }
 
-  /** The most `graft_tokens` calls one row meets on its way up the plan:
-    * the calls in a node's expressions plus the most on any input path,
-    * through adaptive query stages. */
-  private def tokenizeDepth(p: SparkPlan): Int = {
-    val own = p.expressions.map(_.collect { case t: Tokens => t }.size).sum
+  /** The most expressions matching `pick` one row meets on its way up
+    * the plan: the matches in a node's expressions plus the most on any
+    * input path, through adaptive query stages. */
+  private def depth(p: SparkPlan)(pick: PartialFunction[Expression, Unit]): Int = {
+    val own = p.expressions.map(_.collect(pick).size).sum
     val kids = p match {
       case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
       case q: QueryStageExec => Seq(q.plan)
       case _ => p.children
     }
-    own + (kids.map(tokenizeDepth) :+ 0).max
+    own + (kids.map(depth(_)(pick)) :+ 0).max
   }
+
+  private def tokenizeDepth(p: SparkPlan): Int = depth(p) { case _: Tokens => }
 
   test("q105/q115/q116/q118 tokenize each row once: the non-empty " +
       "filter counts tokens instead of re-running graft_tokens") {
@@ -84,6 +90,42 @@ class TextOpsNativeSpec extends AnyFunSuite {
       else Some(s"$q: a row meets graft_tokens $depth times:\n$plan")
     }
     assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
+  test("q28/q29/q184/q185 run each band kernel once per row: the band " +
+      "front end filters on the token count before the kernel projection") {
+    val shingles: PartialFunction[Expression, Unit] = { case _: Shingles3 => }
+    val tf: PartialFunction[Expression, Unit] = { case _: TokenTf => }
+    // the multiset expansion, not the pair expansion (no sequence)
+    val expansion: PartialFunction[Expression, Unit] = {
+      case f: Flatten if f.exists(_.isInstanceOf[Sequence]) => }
+    val kernels = Seq(
+      "q28_minhash_sig" -> Seq("shingles3" -> shingles),
+      "q29_minhash_pairs" -> Seq("shingles3" -> shingles),
+      "q184_weighted_minhash" -> Seq("token_tf" -> tf, "expansion" -> expansion),
+      "q185_weighted_pairs" -> Seq("token_tf" -> tf, "expansion" -> expansion))
+    // q29/q185 run their kernels inside an eager localCheckpoint, so every
+    // plan the query executes is inspected, not only the final one
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val bad = kernels.flatMap { case (q, ks) =>
+        plans.clear()
+        val df = SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
+        assert(df.collect().nonEmpty, q)
+        Bridge.drainListeners(spark.sparkContext)
+        ks.flatMap { case (k, pick) =>
+          val d = plans.asScala.map(depth(_)(pick)).max
+          if (d == 1) None else Some(s"$q: a row meets $k $d times")
+        }
+      }
+      assert(bad.isEmpty, bad.mkString("\n"))
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("minhashSig == 8x array_min(transform(md5)) formulation") {

@@ -32,7 +32,8 @@ object CcProbe {
       })
     // q186's real call shape: RAW pairs plan straight into runPropagation
     locally {
-      val pairs = graft.queries.TextOps.weightedVerifiedPairs(docs)
+      val pairs = graft.operators.LshIndex.pairs(docs,
+          graft.operators.LshIndex.WeightedMinHash)
         .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
       taskNs.set(0)
       val t0 = System.nanoTime()
@@ -43,9 +44,11 @@ object CcProbe {
     }
 
     for ((label, pairs) <- Seq(
-      "lsh(q46/q80/q136/q211)" -> graft.queries.TextOps.lshVerifiedPairs(docs)
+      "lsh(q46/q80/q136/q211)" -> graft.operators.LshIndex.pairs(docs,
+          graft.operators.LshIndex.SetMinHash)
         .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst")),
-      "weighted(q186)" -> graft.queries.TextOps.weightedVerifiedPairs(docs)
+      "weighted(q186)" -> graft.operators.LshIndex.pairs(docs,
+          graft.operators.LshIndex.WeightedMinHash)
         .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst")))) {
       val e = pairs.localCheckpoint(true)
       println(s"=== $label: ${e.count()} edges, " +

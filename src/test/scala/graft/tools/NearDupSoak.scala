@@ -187,15 +187,16 @@ object NearDupSoak {
         val (docsW, dupsW, reorders, inflates) = corpusW(nDocs)
         val perBatchW = docsW.grouped((nDocs + nBatches - 1) / nBatches)
           .toArray
-        def runTier(weighted: Boolean): (Set[Long], Array[Double]) = {
-          val name = if (weighted) "soakw_idx" else "soaku_idx"
-          NearDupIngest.ensureIndex(spark, name, weighted = weighted)
+        def runTier(family: graft.operators.LshIndex.Family)
+            : (Set[Long], Array[Double]) = {
+          val name = s"soak_${family.score}_idx"
+          NearDupIngest.ensureIndex(spark, name, family = family)
           val out = java.nio.file.Files
             .createTempDirectory(s"ndsoak_${name}_out").toString
           val times = perBatchW.zipWithIndex.map { case (b, i) =>
             val t0 = System.nanoTime()
             NearDupIngest.processBatch(spark, b.toSeq.toDF("doc_id", "text"),
-              i.toLong, name, out, weighted = weighted)
+              i.toLong, name, out, family = family)
             (System.nanoTime() - t0) / 1e9
           }
           val kept = spark.read.parquet(s"$out/batch=*")
@@ -212,8 +213,8 @@ object NearDupSoak {
             f""""inflate_flag_rate":$inflateRate%.3f,""" +
             f""""total_s":${times.sum}%.1f}"""
         }
-        val (wFlag, wTimes) = runTier(weighted = true)
-        val (uFlag, uTimes) = runTier(weighted = false)
+        val (wFlag, wTimes) = runTier(graft.operators.LshIndex.WeightedMinHash)
+        val (uFlag, uTimes) = runTier(graft.operators.LshIndex.SetMinHash)
         println(s"""{"soak":"neardup-weighted","docs":$nDocs,""" +
           s""""batches":$nBatches,"true_dups":${dupsW.size},""" +
           s""""reorders":${reorders.size},"inflates":${inflates.size},""" +

@@ -26,10 +26,12 @@ object WSigProbe {
       time(s"$i tokenTf        ",
         size(TextExpressions.tokenTf(col("text"))))
       time(s"$i expansion      ",
-        size(graft.queries.TextOps.expandedInstances(col("text"))))
+        size(graft.operators.LshIndex.expandedInstances(
+          TextExpressions.tokenTf(col("text")))))
       time(s"$i expansion+mh8  ", element_at(
         TextExpressions.minhashSig(
-          graft.queries.TextOps.expandedInstances(col("text")), 8), 1))
+          graft.operators.LshIndex.expandedInstances(
+            TextExpressions.tokenTf(col("text"))), 8), 1))
     }
     spark.stop()
   }
