@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import graft.functions.{CharsetDecode, CosineSimilarity, KmvMinima, MinHashSig, MojibakeFix, NfcNormalize, Shingles3, SpanHashes, StripAccents, UrlCanon}
+import graft.functions.{KmvMinima, Kernels}
 
 /** SQL function surface (SURVEY.md §2.10): the engine's native expressions
   * registered by name, so `spark.sql("SELECT minhash_sig(shingles3(text), 8)
@@ -34,67 +34,37 @@ object GraftExtensions {
   /** (name, info, builder) triples — the injectFunction contract. */
   val entries: Seq[(FunctionIdentifier, ExpressionInfo,
       Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("cosine_similarity"),
-      info("cosine_similarity",
-        "cosine_similarity(a, b) - cosine of two array<float> embeddings"),
-      (args: Seq[Expression]) => CosineSimilarity(args(0), args(1))),
-    (FunctionIdentifier("graft_tokens"),
-      info("graft_tokens",
-        "graft_tokens(text) - non-empty space-delimited tokens " +
-          "(one-pass codegen kernel)"),
-      (args: Seq[Expression]) => graft.functions.Tokens(args.head)),
-    (FunctionIdentifier("shingles3"),
-      info("shingles3",
-        "shingles3(text) - distinct space-token 3-gram shingles"),
-      (args: Seq[Expression]) => Shingles3(args.head)),
-    (FunctionIdentifier("minhash_sig"),
-      info("minhash_sig",
-        "minhash_sig(shingles, n) - n md5-minhash values (n literal)"),
-      (args: Seq[Expression]) =>
-        MinHashSig(args(0), intLit(args(1), "minhash_sig n"))),
-    (FunctionIdentifier("span_hashes"),
-      info("span_hashes",
-        "span_hashes(text, n) - distinct md5 hashes of n-token spans " +
-          "(one-pass kernel; n literal)"),
-      (args: Seq[Expression]) =>
-        SpanHashes(args(0), intLit(args(1), "span_hashes n"))),
-    (FunctionIdentifier("pq_encode"),
-      info("pq_encode",
-        "pq_encode(q, cents, m, subdim) - PQ codes vs a packed codebook " +
-          "(m/subdim literals)"),
-      (args: Seq[Expression]) =>
-        graft.functions.PqNative.PqEncode(args(0), args(1),
-          intLit(args(2), "pq_encode m"), intLit(args(3), "pq_encode subdim"))),
-    (FunctionIdentifier("adc_sum"),
-      info("adc_sum",
-        "adc_sum(codes, dtable, m) - asymmetric-distance sum over a " +
-          "query's sub-distance table (m literal)"),
-      (args: Seq[Expression]) =>
-        graft.functions.PqNative.AdcSum(args(0), args(1),
-          intLit(args(2), "adc_sum m"))),
-    (FunctionIdentifier("url_canon"),
-      info("url_canon",
-        "url_canon(url) - canonical http(s) URL (case/www/default-port/" +
-          "trailing-slash/fragment/tracking-param/param-order normalized)"),
-      (args: Seq[Expression]) => UrlCanon(args.head)),
-    (FunctionIdentifier("mojibake_fix"),
-      info("mojibake_fix",
-        "mojibake_fix(text) - repair cp1252-mojibake UTF-8 sequences"),
-      (args: Seq[Expression]) => MojibakeFix(args.head)),
-    (FunctionIdentifier("nfc_normalize"),
-      info("nfc_normalize",
-        "nfc_normalize(text) - Unicode NFC canonical composition (UAX #15)"),
-      (args: Seq[Expression]) => NfcNormalize(args.head)),
-    (FunctionIdentifier("strip_accents"),
-      info("strip_accents",
-        "strip_accents(text) - NFD-decompose then drop non-spacing marks " +
-          "(diacritic fold)"),
-      (args: Seq[Expression]) => StripAccents(args.head)),
-    (FunctionIdentifier("ora_charset_decode"),
-      info("ora_charset_decode",
-        "ora_charset_decode(bin, charset_id) - decode raw column bytes " +
-          "under an Oracle NLS charset id (Locales.cpp id space)"),
-      (args: Seq[Expression]) => CharsetDecode(args(0), args(1))),
+    Kernels.CosineSimilarity.entry(
+      "cosine_similarity(a, b) - cosine of two array<float> embeddings"),
+    Kernels.Tokens.entry(
+      "graft_tokens(text) - non-empty space-delimited tokens " +
+        "(one-pass codegen kernel)"),
+    Kernels.Shingles3.entry(
+      "shingles3(text) - distinct space-token 3-gram shingles"),
+    Kernels.MinHashSig.entry(
+      "minhash_sig(shingles, n) - n md5-minhash values (n literal)"),
+    Kernels.SpanHashes.entry(
+      "span_hashes(text, n) - distinct md5 hashes of n-token spans " +
+        "(one-pass kernel; n literal)"),
+    Kernels.PqEncode.entry(
+      "pq_encode(q, cents, m, subdim) - PQ codes vs a packed codebook " +
+        "(m/subdim literals)"),
+    Kernels.AdcSum.entry(
+      "adc_sum(codes, dtable, m) - asymmetric-distance sum over a " +
+        "query's sub-distance table (m literal)"),
+    Kernels.UrlCanon.entry(
+      "url_canon(url) - canonical http(s) URL (case/www/default-port/" +
+        "trailing-slash/fragment/tracking-param/param-order normalized)"),
+    Kernels.MojibakeFix.entry(
+      "mojibake_fix(text) - repair cp1252-mojibake UTF-8 sequences"),
+    Kernels.NfcNormalize.entry(
+      "nfc_normalize(text) - Unicode NFC canonical composition (UAX #15)"),
+    Kernels.StripAccents.entry(
+      "strip_accents(text) - NFD-decompose then drop non-spacing marks " +
+        "(diacritic fold)"),
+    Kernels.CharsetDecode.entry(
+      "ora_charset_decode(bin, charset_id) - decode raw column bytes " +
+        "under an Oracle NLS charset id (Locales.cpp id space)"),
     (FunctionIdentifier("kmv_minima"),
       info("kmv_minima",
         "kmv_minima(h, k) - k smallest distinct values (KMV sketch; " +

@@ -1,12 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types._
 
 /** Native BM25 scorer (q109's hot loop): merge the document's
   * token-sorted (token, tf) array against the query's token-sorted
@@ -21,28 +15,12 @@ import org.apache.spark.sql.types._
   * k1 = 1.2, b = 0.75 baked; nDocs/avgdl arrive as driver-computed
   * constants (the q55/q109 dimension-artifact discipline).
   */
-case class Bm25Score(first: Expression, second: Expression,
-    third: Expression, nDocs: Double, avgdl: Double)
-  extends TernaryExpression with CodegenFallback {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (ArrayType(_: StructType, _), ArrayType(_: StructType, _),
-          IntegerType | LongType) => TypeCheckResult.TypeCheckSuccess
-      case (a, b, c) => TypeCheckResult.TypeCheckFailure(
-        s"bm25_score needs (array<struct>, array<struct>, int), " +
-          s"got ${a.sql}/${b.sql}/${c.sql}")
-    }
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "bm25_score"
-
-  override def nullSafeEval(dv: Any, qv: Any, dlv: Any): Any = {
-    val dtf = dv.asInstanceOf[ArrayData]    // (token, tf) sorted by token
-    val terms = qv.asInstanceOf[ArrayData]  // (token, df) sorted by token
-    val dl = dlv match {
-      case i: Int => i.toDouble
-      case l: Long => l.toDouble
-    }
+object Bm25Native {
+  /** `dtf`: the document's (token, tf) sorted by token; `terms`: the
+    * query's (token, df) sorted by token; `dlTokens`: document length. */
+  def score(dtf: ArrayData, terms: ArrayData, dlTokens: Int, nDocs: Double,
+      avgdl: Double): Double = {
+    val dl = dlTokens.toDouble
     val n = dtf.numElements()
     val m = terms.numElements()
     // the dl-dependent factor is per-document — hoist it, preserving the
@@ -68,15 +46,4 @@ case class Bm25Score(first: Expression, second: Expression,
     }
     acc
   }
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): Bm25Score =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-object Bm25Native {
-  def score(docTf: Column, terms: Column, dl: Column, nDocs: Double,
-      avgdl: Double): Column =
-    Bridge.column(Bm25Score(Bridge.expression(docTf),
-      Bridge.expression(terms), Bridge.expression(dl), nDocs, avgdl))
 }

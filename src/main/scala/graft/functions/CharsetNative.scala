@@ -1,22 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.OracleCharsets
-
-/** JVM-side kernel for [[CharsetDecode]] — kept as a static object method
-  * so generated code can call it directly (the codegen idiom of
-  * [[CurationNative]]). */
-object CharsetNative {
-  def decode(bytes: Array[Byte], charsetId: Int): UTF8String =
-    UTF8String.fromString(OracleCharsets.decode(bytes, charsetId))
-}
 
 /** `ora_charset_decode(bin, charset_id)` — raw column bytes → UTF-8 text
   * under an Oracle NLS charset ID (§2.7 charset-decode row;
@@ -27,32 +13,7 @@ object CharsetNative {
   * plan. Unknown IDs throw (the reference's config-error semantics);
   * malformed bytes substitute U+FFFD (CharacterSet.h:32).
   */
-case class CharsetDecode(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, IntegerType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (binary, int) inputs, got ${l.sql} / ${r.sql}")
-    }
-  override def dataType: DataType = StringType
-  override def prettyName: String = "ora_charset_decode"
-
-  override def nullSafeEval(b: Any, id: Any): Any =
-    CharsetNative.decode(b.asInstanceOf[Array[Byte]], id.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (b, id) => s"graft.functions.CharsetNative.decode($b, $id)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CharsetDecode =
-    copy(left = newLeft, right = newRight)
-}
-
-object CharsetExpressions {
-  def charsetDecode(bin: Column, charsetId: Column): Column =
-    Bridge.column(
-      CharsetDecode(Bridge.expression(bin), Bridge.expression(charsetId)))
+object CharsetNative {
+  def decode(bytes: Array[Byte], charsetId: Int): UTF8String =
+    UTF8String.fromString(OracleCharsets.decode(bytes, charsetId))
 }

@@ -1,12 +1,6 @@
 package graft.functions
 
 import java.nio.charset.StandardCharsets
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native kernels for web-corpus curation scalars: URL canonicalization
@@ -166,84 +160,4 @@ object CurationNative {
     }
     UTF8String.fromString(sb.toString)
   }
-}
-
-/** url → canonical url (codegen-participating; see [[CurationNative.urlCanon]]). */
-case class UrlCanon(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string input, got ${dt.sql}")
-  }
-  override def dataType: DataType = StringType
-  override def prettyName: String = "url_canon"
-  override def nullSafeEval(u: Any): Any =
-    CurationNative.urlCanon(u.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, u => s"graft.functions.CurationNative.urlCanon($u)")
-  override protected def withNewChildInternal(newChild: Expression): UrlCanon =
-    copy(child = newChild)
-}
-
-/** text → mojibake-repaired text ([[CurationNative.mojibakeFix]]). */
-case class MojibakeFix(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string input, got ${dt.sql}")
-  }
-  override def dataType: DataType = StringType
-  override def prettyName: String = "mojibake_fix"
-  override def nullSafeEval(t: Any): Any =
-    CurationNative.mojibakeFix(t.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.functions.CurationNative.mojibakeFix($t)")
-  override protected def withNewChildInternal(newChild: Expression): MojibakeFix =
-    copy(child = newChild)
-}
-
-/** text → NFC-normalized text ([[CurationNative.nfcNormalize]]). */
-case class NfcNormalize(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string input, got ${dt.sql}")
-  }
-  override def dataType: DataType = StringType
-  override def prettyName: String = "nfc_normalize"
-  override def nullSafeEval(t: Any): Any =
-    CurationNative.nfcNormalize(t.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.functions.CurationNative.nfcNormalize($t)")
-  override protected def withNewChildInternal(newChild: Expression): NfcNormalize =
-    copy(child = newChild)
-}
-
-/** text → diacritic-stripped text ([[CurationNative.stripAccents]]). */
-case class StripAccents(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string input, got ${dt.sql}")
-  }
-  override def dataType: DataType = StringType
-  override def prettyName: String = "strip_accents"
-  override def nullSafeEval(t: Any): Any =
-    CurationNative.stripAccents(t.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.functions.CurationNative.stripAccents($t)")
-  override protected def withNewChildInternal(newChild: Expression): StripAccents =
-    copy(child = newChild)
-}
-
-/** Column-API facade (mirrors [[TextExpressions]]). */
-object CurationExpressions {
-  def urlCanon(url: Column): Column =
-    Bridge.column(UrlCanon(Bridge.expression(url)))
-  def mojibakeFix(text: Column): Column =
-    Bridge.column(MojibakeFix(Bridge.expression(text)))
-  def nfcNormalize(text: Column): Column =
-    Bridge.column(NfcNormalize(Bridge.expression(text)))
-  def stripAccents(text: Column): Column =
-    Bridge.column(StripAccents(Bridge.expression(text)))
 }

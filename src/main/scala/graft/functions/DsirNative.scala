@@ -1,14 +1,8 @@
 package graft.functions
 
 import java.security.MessageDigest
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native kernels for DSIR importance weighting (q120, and through it q125
@@ -76,78 +70,4 @@ object DsirNative {
     ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
       ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
   }
-}
-
-/** tokens → their DSIR buckets (`array<int>`, token order). */
-case class DsirBuckets(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string> input, got ${dt.sql}")
-  }
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "dsir_buckets"
-  override def nullSafeEval(t: Any): Any =
-    DsirNative.buckets(t.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.functions.DsirNative.buckets($t)")
-  override protected def withNewChildInternal(newChild: Expression): DsirBuckets =
-    copy(child = newChild)
-}
-
-/** (tokens, per-bucket log-ratio table) → the unrounded DSIR score, NULL
-  * when a token falls in a bucket the table has no entry for. */
-case class DsirScore(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), ArrayType(DoubleType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<string> and array<double> inputs, " +
-          s"got ${l.sql} and ${r.sql}")
-    }
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "dsir_score"
-  override def nullSafeEval(t: Any, lr: Any): Any =
-    DsirNative.score(t.asInstanceOf[ArrayData], lr.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, lr) => {
-      val s = ctx.freshName("score")
-      s"""
-         |java.lang.Double $s = graft.functions.DsirNative.score($t, $lr);
-         |${ev.isNull} = ($s == null);
-         |if (!${ev.isNull}) ${ev.value} = $s;
-       """.stripMargin
-    })
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DsirScore =
-    copy(left = newLeft, right = newRight)
-}
-
-/** string → the first four md5 bytes as an unsigned int (a bigint). */
-case class Md5U32(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string input, got ${dt.sql}")
-  }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "md5_u32"
-  override def nullSafeEval(s: Any): Any =
-    DsirNative.md5U32(s.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, s => s"graft.functions.DsirNative.md5U32($s)")
-  override protected def withNewChildInternal(newChild: Expression): Md5U32 =
-    copy(child = newChild)
-}
-
-object DsirExpressions {
-  def buckets(tokens: Column): Column =
-    Bridge.column(DsirBuckets(Bridge.expression(tokens)))
-  def score(tokens: Column, lr: Column): Column =
-    Bridge.column(DsirScore(Bridge.expression(tokens), Bridge.expression(lr)))
-  def md5U32(s: Column): Column =
-    Bridge.column(Md5U32(Bridge.expression(s)))
 }

@@ -1,12 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types._
 
 /** Native kernels for the PQ-ANN hot path (q104) — the §2.10 promotion
   * rule applied to product quantization. The Column-HOF formulation
@@ -14,157 +9,90 @@ import org.apache.spark.sql.types._
   * lambda expression tree PER ELEMENT: encoding one vector touches
   * 4 subspaces × 8 centroids × 16 dims of boxed folds, and the ADC
   * lookup scans a 32-struct array with an interpreted predicate per
-  * candidate×query row. These eval as tight JVM loops over Tungsten
-  * ArrayData (CodegenFallback: the row loop is interpreted but the body
-  * is compiled Scala — the lambda-tree overhead is what dominated).
-  * VectorOpsSpec pins output equality against the plain-Scala mirror.
+  * candidate×query row. These are tight JVM loops over Tungsten
+  * ArrayData, each one static call inside whole-stage codegen
+  * ([[Kernels]]). VectorOpsSpec pins output equality against the
+  * plain-Scala mirror.
   */
 object PqNative {
+
+  /** The PQ layout every index uses: M subspaces of SubDim dimensions. */
+  val M = 4
+  val SubDim = 16
 
   /** codes = per-subspace argmin squared-L2 of `q` against the packed
     * codebook (array of (m, cluster, cent) structs sorted by (m,
     * cluster)); ties to the lowest cluster id. */
-  case class PqEncode(left: Expression, right: Expression, m: Int,
-      subDim: Int) extends BinaryExpression with CodegenFallback {
-
-    override def checkInputDataTypes(): TypeCheckResult =
-      (left.dataType, right.dataType) match {
-        case (ArrayType(LongType, _), ArrayType(_: StructType, _)) =>
-          TypeCheckResult.TypeCheckSuccess
-        case (l, r) => TypeCheckResult.TypeCheckFailure(
-          s"pq_encode needs (array<bigint>, array<struct>), got ${l.sql}/${r.sql}")
-      }
-    override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-    override def prettyName: String = "pq_encode"
-
-    override def nullSafeEval(qv: Any, cb: Any): Any = {
-      val q = qv.asInstanceOf[ArrayData]
-      val cents = cb.asInstanceOf[ArrayData]
-      val n = cents.numElements()
-      val codes = new Array[Any](m)
-      var mi = 0
-      while (mi < m) {
-        var best = Long.MaxValue
-        var bestC = -1
-        var ci = 0
-        while (ci < n) {
-          val row = cents.getStruct(ci, 3)
-          if (row.getInt(0) == mi) {
-            val cent = row.getArray(2)
-            var d = 0L
-            var j = 0
-            while (j < subDim) {
-              val diff = q.getLong(mi * subDim + j) - cent.getLong(j)
-              d += diff * diff
-              j += 1
-            }
-            // strict < over the (m, cluster)-sorted array → lowest
-            // cluster id wins ties (the oracle's ORDER BY dist2, cluster)
-            if (d < best) { best = d; bestC = row.getInt(1) }
+  def pqEncode(q: ArrayData, cents: ArrayData, m: Int, subDim: Int): ArrayData = {
+    val n = cents.numElements()
+    val codes = new Array[Any](m)
+    var mi = 0
+    while (mi < m) {
+      var best = Long.MaxValue
+      var bestC = -1
+      var ci = 0
+      while (ci < n) {
+        val row = cents.getStruct(ci, 3)
+        if (row.getInt(0) == mi) {
+          val cent = row.getArray(2)
+          var d = 0L
+          var j = 0
+          while (j < subDim) {
+            val diff = q.getLong(mi * subDim + j) - cent.getLong(j)
+            d += diff * diff
+            j += 1
           }
-          ci += 1
+          // strict < over the (m, cluster)-sorted array → lowest
+          // cluster id wins ties (the oracle's ORDER BY dist2, cluster)
+          if (d < best) { best = d; bestC = row.getInt(1) }
         }
-        codes(mi) = bestC
-        mi += 1
+        ci += 1
       }
-      new GenericArrayData(codes)
+      codes(mi) = bestC
+      mi += 1
     }
-
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): PqEncode =
-      copy(left = newLeft, right = newRight)
+    new GenericArrayData(codes)
   }
 
   /** Asymmetric-distance sum: for each subspace m, look up the query's
     * precomputed sub-distance for this candidate's code and add. */
-  case class AdcSum(left: Expression, right: Expression, m: Int)
-      extends BinaryExpression with CodegenFallback {
-
-    override def checkInputDataTypes(): TypeCheckResult =
-      (left.dataType, right.dataType) match {
-        case (ArrayType(IntegerType, _), ArrayType(_: StructType, _)) =>
-          TypeCheckResult.TypeCheckSuccess
-        case (l, r) => TypeCheckResult.TypeCheckFailure(
-          s"adc_sum needs (array<int>, array<struct>), got ${l.sql}/${r.sql}")
-      }
-    override def dataType: DataType = LongType
-    override def prettyName: String = "adc_sum"
-
-    override def nullSafeEval(cv: Any, tv: Any): Any = {
-      val codes = cv.asInstanceOf[ArrayData]
-      val dtable = tv.asInstanceOf[ArrayData]
-      val n = dtable.numElements()
-      var sum = 0L
-      var i = 0
-      while (i < n) {
-        val row = dtable.getStruct(i, 3)
-        val mi = row.getInt(0)
-        if (mi < m && codes.getInt(mi) == row.getInt(1))
-          sum += row.getLong(2)
-        i += 1
-      }
-      sum
+  def adcSum(codes: ArrayData, dtable: ArrayData, m: Int): Long = {
+    val n = dtable.numElements()
+    var sum = 0L
+    var i = 0
+    while (i < n) {
+      val row = dtable.getStruct(i, 3)
+      val mi = row.getInt(0)
+      if (mi < m && codes.getInt(mi) == row.getInt(1))
+        sum += row.getLong(2)
+      i += 1
     }
-
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): AdcSum =
-      copy(left = newLeft, right = newRight)
+    sum
   }
 
   /** Full-dimension argmin over a (cluster, cent)-packed codebook — the
     * k-means assignment hot loop (q91/q92/q110's `nearest` fold, native).
     * Returns struct(d, c): min squared-L2 and its cluster, ties to the
     * lowest cluster id (strict < over the cluster-sorted array). */
-  case class NearestCent(left: Expression, right: Expression)
-      extends BinaryExpression with CodegenFallback {
-
-    override def checkInputDataTypes(): TypeCheckResult =
-      (left.dataType, right.dataType) match {
-        case (ArrayType(LongType, _), ArrayType(_: StructType, _)) =>
-          TypeCheckResult.TypeCheckSuccess
-        case (l, r) => TypeCheckResult.TypeCheckFailure(
-          s"nearest_cent needs (array<bigint>, array<struct>), got ${l.sql}/${r.sql}")
+  def nearestCent(q: ArrayData, cents: ArrayData): InternalRow = {
+    val dims = q.numElements()
+    val n = cents.numElements()
+    var best = Long.MaxValue
+    var bestC = -1
+    var i = 0
+    while (i < n) {
+      val row = cents.getStruct(i, 2)
+      val cent = row.getArray(1)
+      var d = 0L
+      var j = 0
+      while (j < dims) {
+        val diff = q.getLong(j) - cent.getLong(j)
+        d += diff * diff
+        j += 1
       }
-    override def dataType: DataType = StructType(Seq(
-      StructField("d", LongType, nullable = false),
-      StructField("c", IntegerType, nullable = false)))
-    override def prettyName: String = "nearest_cent"
-
-    override def nullSafeEval(qv: Any, cb: Any): Any = {
-      val q = qv.asInstanceOf[ArrayData]
-      val cents = cb.asInstanceOf[ArrayData]
-      val dims = q.numElements()
-      val n = cents.numElements()
-      var best = Long.MaxValue
-      var bestC = -1
-      var i = 0
-      while (i < n) {
-        val row = cents.getStruct(i, 2)
-        val cent = row.getArray(1)
-        var d = 0L
-        var j = 0
-        while (j < dims) {
-          val diff = q.getLong(j) - cent.getLong(j)
-          d += diff * diff
-          j += 1
-        }
-        if (d < best) { best = d; bestC = row.getInt(0) }
-        i += 1
-      }
-      org.apache.spark.sql.catalyst.InternalRow(best, bestC)
+      if (d < best) { best = d; bestC = row.getInt(0) }
+      i += 1
     }
-
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): NearestCent =
-      copy(left = newLeft, right = newRight)
+    InternalRow(best, bestC)
   }
-
-  def pqEncode(q: Column, cents: Column, m: Int = 4, subDim: Int = 16): Column =
-    Bridge.column(PqEncode(Bridge.expression(q), Bridge.expression(cents), m, subDim))
-
-  def adcSum(codes: Column, dtable: Column, m: Int = 4): Column =
-    Bridge.column(AdcSum(Bridge.expression(codes), Bridge.expression(dtable), m))
-
-  def nearestCent(q: Column, cents: Column): Column =
-    Bridge.column(NearestCent(Bridge.expression(q), Bridge.expression(cents)))
 }

@@ -1,12 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types._
 
 /** Native kernels for SQ8 scalar quantization (q232/q233) — the OTHER
   * FAISS-standard code layout next to PQ (IndexScalarQuantizer, QT_8bit):
@@ -18,51 +12,30 @@ import org.apache.spark.sql.types._
   * bit-identical to the DuckDB oracle restatement. Packed `binary`
   * storage (not array<int>): at 10^9 vectors the codes table is the
   * serving working set, and 4-bytes-per-code boxing would quadruple it.
-  * CodegenFallback like PqNative: the per-row loop body is compiled
-  * Scala over Tungsten ArrayData; Sq8Spec pins output equality against
-  * plain-Scala mirrors. */
+  * Static kernels like PqNative ([[Kernels]]); Sq8Spec pins output
+  * equality against plain-Scala mirrors. */
 object SqNative {
 
   /** codes(i) = clamp(((q(i) − mn(i)) · 255) / sc(i), 0, 255) as one
     * byte (floor division; all numerators clamped non-negative, so
     * trunc ≡ floor and the oracle's `//` matches). A zero span (a
     * constant dimension over the index) encodes as 0. */
-  case class SqEncode(left: Expression, right: Expression)
-      extends BinaryExpression with CodegenFallback {
-
-    override def checkInputDataTypes(): TypeCheckResult =
-      (left.dataType, right.dataType) match {
-        case (ArrayType(LongType, _), ArrayType(_: StructType, _)) =>
-          TypeCheckResult.TypeCheckSuccess
-        case (l, r) => TypeCheckResult.TypeCheckFailure(
-          s"sq_encode needs (array<bigint>, array<struct>), got ${l.sql}/${r.sql}")
-      }
-    override def dataType: DataType = BinaryType
-    override def prettyName: String = "sq_encode"
-
-    override def nullSafeEval(qv: Any, bv: Any): Any = {
-      val q = qv.asInstanceOf[ArrayData]
-      val book = bv.asInstanceOf[ArrayData]
-      val d = q.numElements()
-      val out = new Array[Byte](d)
-      var i = 0
-      while (i < d) {
-        val row = book.getStruct(i, 2)
-        val mn = row.getLong(0)
-        val sc = row.getLong(1)
-        val v = q.getLong(i)
-        val c =
-          if (sc <= 0L || v <= mn) 0L
-          else math.min(255L, (v - mn) * 255L / sc)
-        out(i) = c.toByte
-        i += 1
-      }
-      out
+  def sqEncode(q: ArrayData, book: ArrayData): Array[Byte] = {
+    val d = q.numElements()
+    val out = new Array[Byte](d)
+    var i = 0
+    while (i < d) {
+      val row = book.getStruct(i, 2)
+      val mn = row.getLong(0)
+      val sc = row.getLong(1)
+      val v = q.getLong(i)
+      val c =
+        if (sc <= 0L || v <= mn) 0L
+        else math.min(255L, (v - mn) * 255L / sc)
+      out(i) = c.toByte
+      i += 1
     }
-
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): SqEncode =
-      copy(left = newLeft, right = newRight)
+    out
   }
 
   /** Squared-L2 between a query and a RECONSTRUCTED candidate:
@@ -70,76 +43,29 @@ object SqNative {
     * numerator), summed over dims. `qt` packs the query value with the
     * book per dim — struct(qv, mn, sc), built in-row on the query side
     * once — so candidates carry ONLY their bytes across the join. */
-  case class SqDist(left: Expression, right: Expression)
-      extends BinaryExpression with CodegenFallback {
-
-    override def checkInputDataTypes(): TypeCheckResult =
-      (left.dataType, right.dataType) match {
-        case (BinaryType, ArrayType(_: StructType, _)) =>
-          TypeCheckResult.TypeCheckSuccess
-        case (l, r) => TypeCheckResult.TypeCheckFailure(
-          s"sq_dist needs (binary, array<struct>), got ${l.sql}/${r.sql}")
-      }
-    override def dataType: DataType = LongType
-    override def prettyName: String = "sq_dist"
-
-    override def nullSafeEval(cv: Any, tv: Any): Any = {
-      val codes = cv.asInstanceOf[Array[Byte]]
-      val qt = tv.asInstanceOf[ArrayData]
-      val d = math.min(codes.length, qt.numElements())
-      var sum = 0L
-      var i = 0
-      while (i < d) {
-        val row = qt.getStruct(i, 3)
-        val recon = row.getLong(1) +
-          (codes(i) & 0xFF).toLong * row.getLong(2) / 255L
-        val diff = row.getLong(0) - recon
-        sum += diff * diff
-        i += 1
-      }
-      sum
+  def sqDist(codes: Array[Byte], qt: ArrayData): Long = {
+    val d = math.min(codes.length, qt.numElements())
+    var sum = 0L
+    var i = 0
+    while (i < d) {
+      val row = qt.getStruct(i, 3)
+      val recon = row.getLong(1) +
+        (codes(i) & 0xFF).toLong * row.getLong(2) / 255L
+      val diff = row.getLong(0) - recon
+      sum += diff * diff
+      i += 1
     }
-
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): SqDist =
-      copy(left = newLeft, right = newRight)
+    sum
   }
 
   /** Unpack stored bytes to array<int> 0..255 — the read-back surface
     * for the q232 hash gate (the oracle restates codes as integer
     * lists; the packed binary is a layout choice the gate must see
     * through). */
-  case class SqBytes(child: Expression)
-      extends UnaryExpression with CodegenFallback {
-
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case BinaryType => TypeCheckResult.TypeCheckSuccess
-        case t => TypeCheckResult.TypeCheckFailure(
-          s"sq_bytes needs binary, got ${t.sql}")
-      }
-    override def dataType: DataType =
-      ArrayType(IntegerType, containsNull = false)
-    override def prettyName: String = "sq_bytes"
-
-    override def nullSafeEval(cv: Any): Any = {
-      val codes = cv.asInstanceOf[Array[Byte]]
-      val out = new Array[Any](codes.length)
-      var i = 0
-      while (i < codes.length) { out(i) = codes(i) & 0xFF; i += 1 }
-      new GenericArrayData(out)
-    }
-
-    override protected def withNewChildInternal(
-        newChild: Expression): SqBytes = copy(child = newChild)
+  def sqBytes(codes: Array[Byte]): ArrayData = {
+    val out = new Array[Any](codes.length)
+    var i = 0
+    while (i < codes.length) { out(i) = codes(i) & 0xFF; i += 1 }
+    new GenericArrayData(out)
   }
-
-  def sqEncode(q: Column, book: Column): Column =
-    Bridge.column(SqEncode(Bridge.expression(q), Bridge.expression(book)))
-
-  def sqDist(codes: Column, qt: Column): Column =
-    Bridge.column(SqDist(Bridge.expression(codes), Bridge.expression(qt)))
-
-  def sqBytes(codes: Column): Column =
-    Bridge.column(SqBytes(Bridge.expression(codes)))
 }

@@ -1,17 +1,12 @@
 package graft.functions
 
 import java.security.MessageDigest
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native one-pass kernels for the dedup/text pack (SURVEY.md §2.10
-  * promotion rule: hot scalar paths become codegen'd Expressions).
+  * promotion rule: hot scalar paths become static kernels, declared in
+  * [[Kernels]]).
   *
   * The Column-API formulation (`split` → `slice`×3 → `zip_with`×2 →
   * `array_distinct`, then 8× `array_min(transform(md5(...)))`) evaluates
@@ -497,262 +492,4 @@ object TextNative {
     while (i < nSig) { out(i) = toHex(mins(i)); i += 1 }
     new GenericArrayData(out)
   }
-}
-
-/** text → non-empty space tokens, codegen-participating (replaces the
-  * CodegenFallback `filter(split(...), lambda)` at every tokenize site). */
-case class Tokens(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string input, got ${dt.sql}")
-  }
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_tokens"
-  override def nullSafeEval(t: Any): Any =
-    TextNative.tokens(t.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t =>
-      s"graft.functions.TextNative.tokens($t)")
-  override protected def withNewChildInternal(newChild: Expression): Tokens =
-    copy(child = newChild)
-}
-
-/** text → its token count, equal to `size(graft_tokens(text))` (for the
-  * projections that use the token array only for its size). */
-case class TokenCount(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string input, got ${dt.sql}")
-  }
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_token_count"
-  override def nullSafeEval(t: Any): Any =
-    TextNative.tokenCount(t.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t =>
-      s"graft.functions.TextNative.tokenCount($t)")
-  override protected def withNewChildInternal(newChild: Expression): TokenCount =
-    copy(child = newChild)
-}
-
-/** text → distinct token-3-gram shingles, as a codegen-participating
-  * expression (single static call inside the generated loop). */
-case class Shingles3(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string input, got ${dt.sql}")
-  }
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "shingles3"
-  override def nullSafeEval(t: Any): Any =
-    TextNative.shingles3(t.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t =>
-      s"graft.functions.TextNative.shingles3($t)")
-  override protected def withNewChildInternal(newChild: Expression): Shingles3 =
-    copy(child = newChild)
-}
-
-/** text → distinct hashes of its n-token spans (one-pass kernel,
-  * codegen-participating — the hot path of q90_dup_spans/q84_contamination).
-  * `hash` is the session's `graft.hash` knob: "md5" (hex strings, what the
-  * DuckDB oracles restate — default) or "xxhash64" (longs, 1/4 the key
-  * bytes — the production mode for corpus-scale dedup joins). */
-case class SpanHashes(child: Expression, n: Int, hash: String = "md5")
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string input, got ${dt.sql}")
-  }
-  override def dataType: DataType = ArrayType(
-    if (hash == "xxhash64") LongType else StringType, containsNull = false)
-  override def prettyName: String = "span_hashes"
-  override def nullSafeEval(t: Any): Any =
-    if (hash == "xxhash64")
-      TextNative.spanHashes64(t.asInstanceOf[UTF8String], n)
-    else TextNative.spanHashes(t.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t =>
-      if (hash == "xxhash64")
-        s"graft.functions.TextNative.spanHashes64($t, $n)"
-      else s"graft.functions.TextNative.spanHashes($t, $n)")
-  override protected def withNewChildInternal(newChild: Expression): SpanHashes =
-    copy(child = newChild)
-}
-
-/** text → array<struct<p:int, h:string>> of window starts + window
-  * hashes — one-pass kernel, the q179/q180/q181 hot path. `thresh < 0`
-  * = fixed stride grid; otherwise winnowed anchors over a stride-1 grid
-  * (see [[TextNative.winnowedWindows]]). */
-case class WindowHashes(child: Expression, w: Int, stride: Int, k: Int,
-    thresh: Int) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string input, got ${dt.sql}")
-  }
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("p", IntegerType, nullable = false),
-    StructField("h", StringType, nullable = false))), containsNull = false)
-  override def prettyName: String = "window_hashes"
-  override def nullSafeEval(t: Any): Any =
-    if (thresh < 0)
-      TextNative.stridedWindows(t.asInstanceOf[UTF8String], w, stride)
-    else TextNative.winnowedWindows(t.asInstanceOf[UTF8String], w, k, thresh)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t =>
-      if (thresh < 0)
-        s"graft.functions.TextNative.stridedWindows($t, $w, $stride)"
-      else s"graft.functions.TextNative.winnowedWindows($t, $w, $k, $thresh)")
-  override protected def withNewChildInternal(
-      newChild: Expression): WindowHashes =
-    copy(child = newChild)
-}
-
-/** shingles → nSig-element minhash signature (md5-hex minima, or signed
-  * xxhash64 minima under `graft.hash=xxhash64`). Null on empty shingle
-  * sets — callers filter those rows anyway. */
-case class MinHashSig(child: Expression, nSig: Int, hash: String = "md5")
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string> input, got ${dt.sql}")
-  }
-  override def dataType: DataType = ArrayType(
-    if (hash == "xxhash64") LongType else StringType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "minhash_sig"
-  override def nullSafeEval(sh: Any): Any =
-    if (hash == "xxhash64")
-      TextNative.minhashSig64(sh.asInstanceOf[ArrayData], nSig)
-    else TextNative.minhashSig(sh.asInstanceOf[ArrayData], nSig)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, sh => {
-      val fn = if (hash == "xxhash64") "minhashSig64" else "minhashSig"
-      s"""
-         |${ev.value} = graft.functions.TextNative.$fn($sh, $nSig);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin
-    })
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
-}
-
-/** shingles → densified one-permutation-hashing signature (nSig hex
-  * minima; ONE digest per shingle — see [[TextNative.ophSig]]). */
-case class OphSig(child: Expression, nSig: Int) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string> input, got ${dt.sql}")
-  }
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "oph_sig"
-  override def nullSafeEval(sh: Any): Any =
-    TextNative.ophSig(sh.asInstanceOf[ArrayData], nSig)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, sh =>
-      s"""
-         |${ev.value} = graft.functions.TextNative.ophSig($sh, $nSig);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin)
-  override protected def withNewChildInternal(newChild: Expression): OphSig =
-    copy(child = newChild)
-}
-
-/** text → (token, tf) structs, distinct tokens in first-occurrence order
-  * (one-pass kernel — deletes q55's (doc_id, token) tf shuffle). */
-case class TokenTf(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string input, got ${dt.sql}")
-  }
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("token", StringType, nullable = false),
-    StructField("tf", IntegerType, nullable = false))), containsNull = false)
-  override def prettyName: String = "token_tf"
-  override def nullSafeEval(t: Any): Any =
-    TextNative.tokenTf(t.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t =>
-      s"graft.functions.TextNative.tokenTf($t)")
-  override protected def withNewChildInternal(newChild: Expression): TokenTf =
-    copy(child = newChild)
-}
-
-/** Two (token, tf) arrays → Σ min(tf) over shared tokens, as a
-  * codegen-participating expression ([[TextNative.tfIntersect]]). */
-case class TfIntersect(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(_: StructType, _), ArrayType(_: StructType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two array<struct<token,tf>> inputs, " +
-          s"got ${l.sql} and ${r.sql}")
-    }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "tf_intersect"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    TextNative.tfIntersect(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.TextNative.tfIntersect($a, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): TfIntersect =
-    copy(left = newLeft, right = newRight)
-}
-
-/** features → nBits-bit simhash as a long (majority md5-nibble votes). */
-case class SimHashBits(child: Expression, nBits: Int) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string> input, got ${dt.sql}")
-  }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash_bits"
-  override def nullSafeEval(sh: Any): Any =
-    TextNative.simhashSig(sh.asInstanceOf[ArrayData], nBits)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, sh =>
-      s"graft.functions.TextNative.simhashSig($sh, $nBits)")
-  override protected def withNewChildInternal(newChild: Expression): SimHashBits =
-    copy(child = newChild)
-}
-
-object TextExpressions {
-  /** The session's `graft.hash` knob ("md5" default, "xxhash64" the
-    * compact production mode), read at plan-construction time — the
-    * expression carries the resolved mode, so executors never consult
-    * conf. */
-  private def hashMode: String =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .map(_.conf.get("graft.hash", "md5")).getOrElse("md5")
-  def shingles3(text: Column): Column =
-    Bridge.column(Shingles3(Bridge.expression(text)))
-  def spanHashes(text: Column, n: Int): Column =
-    Bridge.column(SpanHashes(Bridge.expression(text), n, hashMode))
-  def winnowedWindows(text: Column, w: Int, k: Int, thresh: Int): Column =
-    Bridge.column(WindowHashes(Bridge.expression(text), w, 1, k, thresh))
-  def stridedWindows(text: Column, w: Int, stride: Int): Column =
-    Bridge.column(WindowHashes(Bridge.expression(text), w, stride, 0, -1))
-  def minhashSig(shingles: Column, nSig: Int): Column =
-    Bridge.column(MinHashSig(Bridge.expression(shingles), nSig, hashMode))
-  def ophSig(shingles: Column, nSig: Int): Column =
-    Bridge.column(OphSig(Bridge.expression(shingles), nSig))
-  def tokenTf(text: Column): Column =
-    Bridge.column(TokenTf(Bridge.expression(text)))
-  def tfIntersect(a: Column, b: Column): Column =
-    Bridge.column(TfIntersect(Bridge.expression(a), Bridge.expression(b)))
-  def simhashBits(features: Column, nBits: Int): Column =
-    Bridge.column(SimHashBits(Bridge.expression(features), nBits))
 }

@@ -1,11 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -67,7 +65,9 @@ object UnigramNative {
     * whitespace-tokenize, cap each token at [[TokCap]], segment, and sum
     * — entirely in-row, so the corpus never shuffles and the scored
     * vocabulary rides the plan as a bounded dimension artifact
-    * (alphabet + top-K multi-char pieces). */
+    * (alphabet + top-K multi-char pieces). A class, not a [[Kernel]]: the
+    * driver-side vocabulary `Map` has no literal form with its hash-lookup
+    * cost. */
   case class UnigramEncode(child: Expression, vocab: Map[String, Long])
       extends UnaryExpression with CodegenFallback {
 
@@ -106,10 +106,5 @@ object UnigramNative {
 
     override protected def withNewChildInternal(newChild: Expression): UnigramEncode =
       copy(child = newChild)
-  }
-
-  object Expressions {
-    def unigramEncode(text: Column, vocab: Map[String, Long]): Column =
-      Bridge.column(UnigramEncode(Bridge.expression(text), vocab))
   }
 }

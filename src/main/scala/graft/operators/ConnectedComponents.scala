@@ -133,6 +133,19 @@ object ConnectedComponents {
       implicit spark: SparkSession): DataFrame =
     runPropagation(edges, maxRounds, escalateAfter, EdgesPerPartition)
 
+  /** The dedup-apply rule (q80): `rows` without every member of a
+    * component of `edges` (src, dst) but its minimum id, so each cluster
+    * keeps its smallest id. `id` names `rows`' id column. The components
+    * run eagerly here ([[runPropagation]]); the result is a lazy anti-join
+    * against the dropped ids. */
+  def keepMinId(rows: DataFrame, edges: DataFrame, id: String)(
+      implicit spark: SparkSession): DataFrame = {
+    val drops = runPropagation(edges)
+      .filter(col("node") =!= col("component"))
+      .select(col("node").as(id))
+    rows.join(drops, Seq(id), "left_anti")
+  }
+
   private[graft] def runPropagation(edges: DataFrame, maxRounds: Int,
       escalateAfter: Int, edgesPerPart: Long)(
       implicit spark: SparkSession): DataFrame = {

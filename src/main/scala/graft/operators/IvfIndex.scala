@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{SessionMemo, Tables}
-import graft.functions.{PqNative, SqNative}
+import graft.functions.{Kernels, PqNative}
 
 /** Persistent IVF (inverted-file) ANN index — the INCREMENTAL path for a
   * growing embedding corpus, the vector-side twin of [[LshIndex]]. The
@@ -37,7 +37,7 @@ import graft.functions.{PqNative, SqNative}
   */
 object IvfIndex {
 
-  private val cosine = graft.functions.Expressions.cosineSim _
+  private val cosine = graft.functions.Kernels.CosineSimilarity
 
   /** The packed 1-row centroid frame for `name`: a warehouse-scope
     * [[SessionMemo]] row (re-scanning the `_cents` table would be a whole
@@ -476,7 +476,8 @@ object IvfIndex {
     val a0 = Tables.spread(e, col("vec_id"))
       .crossJoin(broadcast(pqPack(cents0)))
       .select(col("vec_id"), col("q"),
-        PqNative.pqEncode(col("q"), col("cents")).as("codes0"))
+        Kernels.PqEncode(col("q"), col("cents"), PqNative.M,
+          PqNative.SubDim).as("codes0"))
     // one Lloyd update per (subspace, code): floor(sum/n) in pure
     // integer arithmetic; shuffles k·M·subdim cells, corpus-size-free
     val cents1 = a0
@@ -544,7 +545,8 @@ object IvfIndex {
       buckets: Int): DataFrame =
     rows.crossJoin(broadcast(book.select(col("cents"))))
       .select(col("cell"), col("vec_id"),
-        PqNative.pqEncode(col("q"), col("cents")).as("codes"))
+        Kernels.PqEncode(col("q"), col("cents"), PqNative.M,
+          PqNative.SubDim).as("codes"))
       .repartition(buckets, col("cell"))
 
   /** Attach the PQ serving family to an existing IVF index (FAISS
@@ -699,7 +701,7 @@ object IvfIndex {
     Tables.writeBucketed(
       qrows.crossJoin(broadcast(bookLocal))
         .select(col("cell"), col("vec_id"),
-          SqNative.sqEncode(col("q"), col("book")).as("codes"))
+          Kernels.SqEncode(col("q"), col("book")).as("codes"))
         .repartition(buckets, col("cell")),
       s"${name}_sqcodes", "cell", buckets)
   }
@@ -747,7 +749,8 @@ object IvfIndex {
       broadcast(ex.select(col("vec_id").as("old_id"))), Seq("old_id"),
       "left_anti"))
     cand.join(adcQuerySide(spark, name, delta, nProbe), "cell")
-      .withColumn("approx_d", PqNative.adcSum(col("codes"), col("dtable")))
+      .withColumn("approx_d",
+        Kernels.AdcSum(col("codes"), col("dtable"), PqNative.M))
       .select(col("new_id"), col("cell"), col("old_id"), col("approx_d"))
   }
 
@@ -796,7 +799,7 @@ object IvfIndex {
     val w = Window.partitionBy("new_id")
       .orderBy(col("approx_d"), col("old_id"))
     cand.join(qs, "cell")
-      .withColumn("approx_d", SqNative.sqDist(col("codes"), col("qt")))
+      .withColumn("approx_d", Kernels.SqDist(col("codes"), col("qt")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select("new_id", "old_id", "rank", "approx_d")
@@ -836,7 +839,8 @@ object IvfIndex {
       .orderBy(col("approx_d"), col("old_id"))
     cand.join(qs, "cell")
       .filter(col("old_label") === col("q_label"))
-      .withColumn("approx_d", PqNative.adcSum(col("codes"), col("dtable")))
+      .withColumn("approx_d",
+        Kernels.AdcSum(col("codes"), col("dtable"), PqNative.M))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select("new_id", "old_id", "rank", "approx_d")
@@ -897,7 +901,8 @@ object IvfIndex {
           Seq("cell", "vec_id"))
         .select(col("cell"), col("vec_id").as("old_id"), col("codes"))
       cand.join(adcQuerySide(spark, name, delta, nProbe), "cell")
-        .withColumn("dist", PqNative.adcSum(col("codes"), col("dtable")))
+        .withColumn("dist",
+          Kernels.AdcSum(col("codes"), col("dtable"), PqNative.M))
         .withColumn("rank", row_number().over(w))
         .filter(col("rank") <= k)
         .select("new_id", "old_id", "rank", "dist")

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
-import graft.functions.TextExpressions
+import graft.functions.Kernels
 import graft.queries.TextOps
 
 /** MinHash-LSH near-duplicate detection: the band front end, candidate
@@ -68,8 +68,8 @@ object LshIndex {
     * |A∩B| / |A∪B| over the shingle sets. A doc needs 3 tokens for one
     * shingle. */
   val SetMinHash: Family = new Family("mh", "_shingles", "jaccard", 3,
-    _.select(col("doc_id"), TextExpressions.shingles3(col("text")).as("shingles"))
-      .withColumn("sig", TextExpressions.minhashSig(col("shingles"), TextOps.nSig)),
+    _.select(col("doc_id"), Kernels.Shingles3(col("text")).as("shingles"))
+      .withColumn("sig", Kernels.minhashSig(col("shingles"), TextOps.nSig)),
     Seq("shingles" -> "sh"),
     (a, b) => size(array_intersect(col(s"sh_$a"), col(s"sh_$b"))),
     s => size(col(s"sh_$s")))
@@ -82,13 +82,13 @@ object LshIndex {
     * rides along so the union denominator is a pre-computed scalar per
     * DOC, not a per-PAIR array fold; the one division is the only float. */
   val WeightedMinHash: Family = new Family("wmh", "_tfs", "wjaccard", 1,
-    _.select(col("doc_id"), TextExpressions.tokenTf(col("text")).as("tfs"))
+    _.select(col("doc_id"), Kernels.TokenTf(col("text")).as("tfs"))
       .withColumn("inst", expandedInstances(col("tfs")))
       .select(col("doc_id"), col("tfs"),
         size(col("inst")).cast("long").as("n_tok"),
-        TextExpressions.minhashSig(col("inst"), TextOps.nSig).as("sig")),
+        Kernels.minhashSig(col("inst"), TextOps.nSig).as("sig")),
     Seq("tfs" -> "tf", "n_tok" -> "n"),
-    (a, b) => TextExpressions.tfIntersect(col(s"tf_$a"), col(s"tf_$b")),
+    (a, b) => Kernels.TfIntersect(col(s"tf_$a"), col(s"tf_$b")),
     s => col(s"n_$s"))
 
   val Families: Seq[Family] = Seq(SetMinHash, WeightedMinHash)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.core.Tables
+import graft.queries.OracleSql.{sqlTokens => sqlToks}
 
 /** Event-analytics pack #8: the downstream consumption side of a CDC feed —
   * once changes land in an events table, the questions a data team asks of
@@ -814,8 +815,6 @@ object AnalyticsOps {
         .select("doc_id", "score", "n_tok", "cum")
     })
   )
-
-  private val sqlToks = "list_filter(string_split(text, ' '), x -> x <> '')"
 
   val oracles: Map[String, String] = Map(
 

@@ -985,7 +985,7 @@ object CdcOps {
       LobAssembly.assemble(pages)
         .select(col("lob_id").cast("long").as("event_id"),
           col("n_pages"),
-          graft.functions.CharsetExpressions.charsetDecode(
+          graft.functions.Kernels.CharsetDecode(
             unhex(col("lob_data")), lit(832)).as("clob_text"))
     }),
 

@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
-import graft.functions.{CurationExpressions, CurationNative}
+import graft.functions.{CurationNative, Kernels}
+import graft.queries.OracleSql.{sqlHex4, sqlTokens}
 
 /** Training-data pipeline pack #3: web-corpus curation — URL-level dedup,
   * mojibake repair, HTML boilerplate extraction, and cross-document
@@ -94,7 +95,6 @@ object CurationOps {
   // integer in [-1000, 1000]) so both engines compute the identical model
   // with no trained artifact; a real model swaps the hash for a broadcast
   // weight map — the plan shape (in-row fold, zero exchange) is unchanged.
-  private val hexDigits = "0123456789abcdef"
 
   // ---- q117: corpus snapshot delta -------------------------------------
   // Two deterministic snapshot views of the corpus: A drops doc_id%10==9,
@@ -126,7 +126,7 @@ object CurationOps {
       t(s, dir, "documents")
         .selectExpr("doc_id", s"($urlSynth) AS url")
         .select(col("doc_id"),
-          CurationExpressions.urlCanon(col("url")).as("url"))
+          Kernels.UrlCanon(col("url")).as("url"))
         .groupBy("url")
         .agg(count(lit(1)).as("n_variants"), min("doc_id").as("keep_doc"))
     }),
@@ -136,7 +136,7 @@ object CurationOps {
         .selectExpr("doc_id", s"($mojiSynth) AS corrupt")
         .select(col("doc_id"),
           length(col("corrupt")).as("len_before"),
-          CurationExpressions.mojibakeFix(col("corrupt")).as("fixed"))
+          Kernels.MojibakeFix(col("corrupt")).as("fixed"))
         .select(col("doc_id"), col("len_before"),
           length(col("fixed")).as("len_after"), col("fixed"))
     }),
@@ -246,20 +246,11 @@ object CurationOps {
         .selectExpr("doc_id", s"($accentSynth) AS raw")
         .select(col("doc_id"),
           length(col("raw")).cast("int").as("len_raw"),
-          CurationExpressions.nfcNormalize(col("raw")).as("nfc"))
+          Kernels.NfcNormalize(col("raw")).as("nfc"))
         .select(col("doc_id"), col("len_raw"),
           length(col("nfc")).cast("int").as("len_nfc"), col("nfc"),
-          CurationExpressions.stripAccents(col("nfc")).as("folded"))
+          Kernels.StripAccents(col("nfc")).as("folded"))
     }))
-
-  /** DuckDB has no conv(hex): decode 4 hex chars positionally. */
-  private def sqlHex4(h: String): String =
-    s"""((strpos('$hexDigits', substr($h, 1, 1)) - 1) * 4096 +
-       | (strpos('$hexDigits', substr($h, 2, 1)) - 1) * 256 +
-       | (strpos('$hexDigits', substr($h, 3, 1)) - 1) * 16 +
-       | (strpos('$hexDigits', substr($h, 4, 1)) - 1))""".stripMargin
-
-  private val sqlTokens = "list_filter(string_split(text, ' '), x -> x <> '')"
 
   // q197's raw-text synth, shared verbatim with the oracle (the q113
   // convention): decomposed base+combining-mark sequences (U+0301 acute,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.queries.OracleSql.{sqlTokens => sqlToks}
 
 /** Training-data pipeline pack #2: corpus statistics, contamination
   * screening, weighted mixing, vector quantization — plus the two remaining
@@ -97,7 +98,7 @@ object PipelineOps {
     // to joining on the gram string, which is what the oracle states.
     "q84_contamination" -> ((s, dir) => {
       val d = t(s, dir, "documents").select(col("doc_id"), col("source"),
-        graft.functions.TextExpressions.spanHashes(col("text"), 4).as("grams"))
+        graft.functions.Kernels.spanHashes(col("text"), 4).as("grams"))
       val bench = d.filter(col("source") === "src0")
         .select(explode(col("grams")).as("gr")).distinct()
       d.filter(col("source") =!= "src0")
@@ -370,7 +371,7 @@ object PipelineOps {
     "q90_dup_spans" -> ((s, dir) => {
       val exploded = Tables.spread(t(s, dir, "documents"), col("doc_id"))
         .select(col("doc_id"),
-          explode(graft.functions.TextExpressions.spanHashes(col("text"), 8))
+          explode(graft.functions.Kernels.spanHashes(col("text"), 8))
             .as("h"))
       exploded
         .withColumn("n_docs", count(lit(1)).over(Window.partitionBy("h")))
@@ -412,10 +413,8 @@ object PipelineOps {
       val pairs = graft.operators.LshIndex.pairs(exact,
         graft.operators.LshIndex.SetMinHash)
         .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
-      val drops = graft.operators.ConnectedComponents.runPropagation(pairs)
-        .filter(col("node") =!= col("component"))
-        .select(col("node").as("doc_id"))
-      val deduped = exact.join(drops, Seq("doc_id"), "left_anti")
+      val deduped =
+        graft.operators.ConnectedComponents.keepMinId(exact, pairs, "doc_id")
       // 3. quality rules, in-row (token bounds + mean token length);
       // pinned once — the DSIR stage scans its input twice (bucket
       // counts, then scoring)
@@ -439,8 +438,6 @@ object PipelineOps {
             .as("doc_order"))
     })
   )
-
-  private val sqlToks = "list_filter(string_split(text, ' '), x -> x <> '')"
 
   val oracles: Map[String, String] = Map(
     "q82_repetition" ->

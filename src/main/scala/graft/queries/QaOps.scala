@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.operators.LshIndex
+import graft.queries.OracleSql.{sqlTokens, sqlTokensOf => sqlToksOf}
 
 /** Training-data pipeline pack #7: curation QA / diagnostics — the
   * reports a data team reads BEFORE signing off a corpus build: where the
@@ -123,7 +124,7 @@ object QaOps {
       val corpus = docs.select("doc_id", "text").union(quotes)
       val spans = Tables.spread(corpus, col("doc_id"))
         .select(col("doc_id"),
-          graft.functions.TextExpressions.spanHashes(col("text"), 8)
+          graft.functions.Kernels.spanHashes(col("text"), 8)
             .as("sh"))
         .filter(size(col("sh")) >= 8)
         .select(col("doc_id"), size(col("sh")).cast("long").as("n_spans"),
@@ -173,7 +174,7 @@ object QaOps {
     "q140_decontamination" -> ((s, dir) => {
       val leakOff = 200000000L
       val docs = t(s, dir, "documents")
-      val sh = graft.functions.TextExpressions.shingles3(col("text"))
+      val sh = graft.functions.Kernels.Shingles3(col("text"))
       val evalDocs = docs.filter(col("doc_id") % 97 === 0)
       val leaked = evalDocs
         .select(col("doc_id"), toks(col("text")).as("t"))
@@ -195,10 +196,6 @@ object QaOps {
           when(col("n_overlap").cast("double") / col("n_sh") >= 0.2,
             lit("drop")).otherwise(lit("review")).as("verdict"))
     }))
-
-  private val sqlTokens = "list_filter(string_split(text, ' '), x -> x <> '')"
-  private def sqlToksOf(e: String) =
-    s"list_filter(string_split($e, ' '), x -> x <> '')"
 
   val oracles: Map[String, String] = Map(
 

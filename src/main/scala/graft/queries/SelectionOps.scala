@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.Tables
-import graft.functions.DsirExpressions
+import graft.functions.Kernels
+import graft.queries.OracleSql.{sqlHex4, sqlTokens}
 
 /** Training-data pipeline pack #4: data SELECTION for LM training —
   * retrieval-style chunking, n-gram-LM perplexity filtering (the
@@ -243,7 +244,7 @@ object SelectionOps {
     * only, and a consumer that does not read `rank` prunes it. */
   private[graft] def gumbelTopKOf(w: DataFrame): DataFrame = {
     val g = -log(-log(
-      (DsirExpressions.md5U32(concat(lit("g|"), col("doc_id").cast("string")))
+      (Kernels.Md5U32(concat(lit("g|"), col("doc_id").cast("string")))
         .cast("double") + 0.5) / 4294967296.0))
     w.withColumn("samp_key", col("dsir_lr") / ResampleTau + g)
       .orderBy(col("samp_key").desc, col("doc_id")).limit(ResampleK)
@@ -262,11 +263,11 @@ object SelectionOps {
     *
     * Two passes over `base`. The bucket-count pass is the operator's one
     * eager job: it explodes each document's native token buckets
-    * ([[graft.functions.DsirBuckets]]) into one skinny (bucket, count)
+    * ([[graft.functions.Kernels.DsirBuckets]]) into one skinny (bucket, count)
     * exchange and a 256-row collect. The driver turns the counts into the
     * 256 log-ratios ln[(T_b+1)(C+256) / ((C_b+1)(T+256))] — integer
     * products in Long, `StrictMath.log` as Spark's `log` evaluates it —
-    * and the scoring pass is one [[graft.functions.DsirScore]] call per
+    * and the scoring pass is one [[graft.functions.Kernels.DsirScore]] call per
     * row, which folds that table over the document's tokens in sorted
     * order (NULL for a bucket with no count, as a map lookup gives). The
     * empty-document filter counts tokens without building the array. */
@@ -274,14 +275,14 @@ object SelectionOps {
     val docs = base.filter(TextOps.tokenCountCol > 0)
       .select(col("doc_id"), col("source"), TextOps.tokensCol.as("t"))
     val counts = docs
-      .select(col("source"), explode(DsirExpressions.buckets(col("t"))).as("b"))
+      .select(col("source"), explode(Kernels.DsirBuckets(col("t"))).as("b"))
       .groupBy(col("b"))
       .agg(count(lit(1)).as("cb"),
         sum(when(col("source") === DsirTarget, 1L).otherwise(0L)).as("tb"))
       .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
     docs
       .select(col("doc_id"), col("source"), size(col("t")).as("n_tokens"),
-        round(DsirExpressions.score(col("t"), typedLit(dsirLogRatios(counts))),
+        round(Kernels.DsirScore(col("t"), typedLit(dsirLogRatios(counts))),
           6).as("dsir_lr"))
   }
 
@@ -295,14 +296,6 @@ object SelectionOps {
       StrictMath.log(((tb + 1) * cTot).toDouble / ((cb + 1) * tTot).toDouble)
     })
   }
-
-  private val sqlTokens = "list_filter(string_split(text, ' '), x -> x <> '')"
-  private val hexDigits = "0123456789abcdef"
-  private def sqlHex4(h: String): String =
-    s"""((strpos('$hexDigits', substr($h, 1, 1)) - 1) * 4096 +
-       | (strpos('$hexDigits', substr($h, 2, 1)) - 1) * 256 +
-       | (strpos('$hexDigits', substr($h, 3, 1)) - 1) * 16 +
-       | (strpos('$hexDigits', substr($h, 4, 1)) - 1))""".stripMargin
 
   /** The q120 oracle text — also embedded as q125's derived table.
     * Parametrized by the input relation for pipeline composition (q136). */

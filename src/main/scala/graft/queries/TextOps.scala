@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{SessionMemo, Tables}
 import graft.operators.LshIndex
+import graft.queries.OracleSql.{sqlHex4, sqlTokens}
 
 /** Text-analysis + deduplication pack over the `documents` table.
   *
@@ -33,10 +34,7 @@ object TextOps {
     * must strip them here or re-prove that seed-key encoding. */
   private[graft] def tokensCol: Column = tokensOf(col("text"))
 
-  private[graft] def tokensOf(c: Column): Column =
-    org.apache.spark.sql.graftbridge.Bridge.column(
-      graft.functions.Tokens(
-        org.apache.spark.sql.graftbridge.Bridge.expression(c)))
+  private[graft] def tokensOf(c: Column): Column = graft.functions.Kernels.Tokens(c)
 
   /** `size(tokensCol)` without the array: for projections that use the
     * tokens only for their count, and for filters on the count ahead of
@@ -46,9 +44,7 @@ object TextOps {
   private[graft] def tokenCountCol: Column = tokenCountOf(col("text"))
 
   private[graft] def tokenCountOf(c: Column): Column =
-    org.apache.spark.sql.graftbridge.Bridge.column(
-      graft.functions.TokenCount(
-        org.apache.spark.sql.graftbridge.Bridge.expression(c)))
+    graft.functions.Kernels.TokenCount(c)
 
   /** Distinct 3-gram (token-trigram) shingles.
     *
@@ -70,7 +66,7 @@ object TextOps {
 
   /** MinHash value for seed `i`: lexicographic min of md5(i|shingle).
     * Kept as the REFERENCE formulation: TextOpsNativeSpec pins the native
-    * kernels ([[graft.functions.TextExpressions]]) to this + shinglesCol. */
+    * kernels ([[graft.functions.Kernels]]) to this + shinglesCol. */
   private[graft] def minhash(shingles: Column, i: Int): Column =
     array_min(transform(shingles, sh => md5(concat(lit(s"$i|"), sh))))
 
@@ -129,7 +125,7 @@ object TextOps {
     markAndMerge(w, docs
       .filter(length(col("text")) >= w)
       .select(col("doc_id"),
-        explode(graft.functions.TextExpressions.stridedWindows(
+        explode(graft.functions.Kernels.StridedWindows(
           col("text"), w, stride)).as("win"))
       .select(col("doc_id"), col("win.p").as("p"), col("win.h").as("h")))
 
@@ -157,7 +153,7 @@ object TextOps {
     markAndMerge(w, docs
       .filter(length(col("text")) >= w)
       .select(col("doc_id"),
-        explode(graft.functions.TextExpressions.winnowedWindows(
+        explode(graft.functions.Kernels.WinnowedWindows(
           col("text"), w, k, Integer.parseInt(thresh, 16))).as("win"))
       .select(col("doc_id"), col("win.p").as("p"), col("win.h").as("h")))
 
@@ -276,11 +272,12 @@ object TextOps {
     // CONCURRENTLY — each raced to compute the full kernel pass before
     // the other had materialized it (observed as duplicate 32-task
     // kernel stages in the r6 listener profile).
+    // a doc has a shingle iff it has 3 tokens: filtering on the count
+    // first keeps shingles3 to one run per row
     val sigs = docs
-      .withColumn("sh", graft.functions.TextExpressions.shingles3(col("text")))
-      .filter(size(col("sh")) > 0)
-      .select(col("doc_id"),
-        graft.functions.TextExpressions.simhashBits(col("sh"), 64).as("sig"))
+      .filter(tokenCountCol >= 3)
+      .select(col("doc_id"), graft.functions.Kernels.SimHashBits(
+        graft.functions.Kernels.Shingles3(col("text")), 64).as("sig"))
       .localCheckpoint()
     val banded = sigs.select(col("doc_id"), col("sig"),
       explode(array((0 until 4).map(b =>
@@ -371,7 +368,7 @@ object TextOps {
       import org.apache.spark.sql.expressions.Window
       val vocab = Tables.spread(t(s, dir, "documents"), col("doc_id"))
         .select(explode(
-          graft.functions.TextExpressions.tokenTf(col("text"))).as("e"))
+          graft.functions.Kernels.TokenTf(col("text"))).as("e"))
         .select(col("e.token").as("token"), col("e.tf").cast("long").as("tf"))
         .groupBy("token").agg(sum("tf").as("freq"))
       val top = vocab.orderBy(col("freq").desc, col("token")).limit(256)
@@ -508,7 +505,7 @@ object TextOps {
     "q26_ngram_jaccard" -> ((s, dir) => {
       val docs = spread(t(s, dir, "documents"))
         .select(col("doc_id"),
-          graft.functions.TextExpressions.shingles3(col("text")).as("sh"))
+          graft.functions.Kernels.Shingles3(col("text")).as("sh"))
       graft.operators.AdjacentPairs.pairs(docs, "doc_id")
         // array_intersect = hash-set intersection, O(|a|+|b|) — the
         // element-wise contains scan is quadratic per pair
@@ -576,10 +573,7 @@ object TextOps {
       val docs = t(s, dir, "documents")
       val pairs = LshIndex.pairs(docs, LshIndex.WeightedMinHash)
         .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
-      val drops = graft.operators.ConnectedComponents.runPropagation(pairs)
-        .filter(col("node") =!= col("component"))
-        .select(col("node").as("doc_id"))
-      docs.join(drops, Seq("doc_id"), "left_anti")
+      graft.operators.ConnectedComponents.keepMinId(docs, pairs, "doc_id")
         .select(col("doc_id"), col("source"), col("n_chars"))
     }),
 
@@ -633,11 +627,9 @@ object TextOps {
     // one-pass kernel; [[ophSigRef]] is the pinned Column/oracle mirror.
     "q183_oph_minhash" -> ((s, dir) => {
       val base = spread(t(s, dir, "documents"))
-        .select(col("doc_id"),
-          graft.functions.TextExpressions.shingles3(col("text")).as("shingles"))
-        .filter(size(col("shingles")) > 0)
-        .select(col("doc_id"),
-          graft.functions.TextExpressions.ophSig(col("shingles"), nSig).as("sig"))
+        .filter(tokenCountCol >= 3) // has a shingle; shingles3 runs once
+        .select(col("doc_id"), graft.functions.Kernels.OphSig(
+          graft.functions.Kernels.Shingles3(col("text")), nSig).as("sig"))
       val sl = (i: Int) => element_at(col("sig"), i + 1)
       base.select(col("doc_id"), sl(0).as("oph0"), sl(7).as("oph7"),
         md5(concat(sl(0), sl(1), sl(2), sl(3))).as("band0"),
@@ -947,7 +939,7 @@ object TextOps {
     //     the scoring pass has NO corpus-wide exchange at all.
     "q55_tfidf_top_term" -> ((s, dir) => {
       val docs0 = t(s, dir, "documents")
-      val tfPairs = graft.functions.TextExpressions.tokenTf(col("text"))
+      val tfPairs = graft.functions.Kernels.TokenTf(col("text"))
       // nDocs (docs with ≥1 token) is the ONLY driver-side artifact — a
       // 1-row scalar, O(1) at any corpus size
       val nDocs = docs0.filter(size(tfPairs) > 0).count()
@@ -986,7 +978,7 @@ object TextOps {
     "q109_bm25_topk" -> ((s, dir) => {
       import s.implicits._
       val docs0 = t(s, dir, "documents")
-      val tfPairs = graft.functions.TextExpressions.tokenTf(col("text"))
+      val tfPairs = graft.functions.Kernels.TokenTf(col("text"))
       // driver-side artifacts are all BOUNDED: N/avgdl are a 1-row scalar
       // job, and df is computed ONLY for the ≤10 query docs' terms — the
       // exploded (doc, token) stream semi-joins the broadcast query-term
@@ -1026,7 +1018,7 @@ object TextOps {
         .orderBy(col("score").desc, col("doc_id"))
       docsTf.crossJoin(broadcast(qdata))
         .filter(col("doc_id") =!= col("q_id"))
-        .withColumn("raw", graft.functions.Bm25Native.score(
+        .withColumn("raw", graft.functions.Kernels.Bm25Score(
           col("dtf"), col("terms"), col("dl"), nDocs.toDouble, avgdl))
         .filter(col("raw") > 0.0)
         .withColumn("score", round(col("raw"), 6))
@@ -1046,7 +1038,7 @@ object TextOps {
     // bit-identical to the oracle's list(ORDER BY) reduce). Zero
     // exchange; scales with corpus bytes.
     "q111_token_entropy" -> ((s, dir) => {
-      val tfPairs = graft.functions.TextExpressions.tokenTf(col("text"))
+      val tfPairs = graft.functions.Kernels.TokenTf(col("text"))
       val n = col("n_tokens").cast("double")
       spread(t(s, dir, "documents"))
         .select(col("doc_id"), tokenCountCol.as("n_tokens"),
@@ -1260,10 +1252,7 @@ object TextOps {
       val docs = t(s, dir, "documents")
       val pairs = LshIndex.pairs(docs, LshIndex.SetMinHash)
         .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
-      val drops = graft.operators.ConnectedComponents.runPropagation(pairs)
-        .filter(col("node") =!= col("component"))
-        .select(col("node").as("doc_id"))
-      docs.join(drops, Seq("doc_id"), "left_anti")
+      graft.operators.ConnectedComponents.keepMinId(docs, pairs, "doc_id")
         .select(col("doc_id"), col("source"), col("n_chars"))
     }),
 
@@ -1296,7 +1285,7 @@ object TextOps {
     "q133_inverted_index" -> ((s, dir) => {
       t(s, dir, "documents")
         .select(col("doc_id"),
-          explode(graft.functions.TextExpressions.tokenTf(col("text")))
+          explode(graft.functions.Kernels.TokenTf(col("text")))
             .as("p"))
         .select(col("doc_id"), col("p.token").as("tok"),
           col("p.tf").cast("long").as("tf"))
@@ -1505,17 +1494,6 @@ object TextOps {
   private val PiiIp = "([0-9]{1,3}\\.){3}[0-9]{1,3}"
 
   // DuckDB-side building blocks (kept in one place so Spark/SQL stay in sync)
-  private val sqlTokens = "list_filter(string_split(text, ' '), x -> x <> '')"
-  // local copy of the 4-hex-char md5 fold (TrainOps/CurationOps have
-  // their own: referencing a sibling object from this initializer would
-  // deadlock the <clinit> cycle — TrainOps' init already reads our
-  // `oracles` map)
-  private val hexDigits = "0123456789abcdef"
-  private def sqlHex4(h: String): String =
-    s"""((strpos('$hexDigits', substr($h, 1, 1)) - 1) * 4096 +
-       | (strpos('$hexDigits', substr($h, 2, 1)) - 1) * 256 +
-       | (strpos('$hexDigits', substr($h, 3, 1)) - 1) * 16 +
-       | (strpos('$hexDigits', substr($h, 4, 1)) - 1))""".stripMargin
 
   private[graft] def sqlShingles(toks: String) =
     s"""list_distinct(CASE WHEN len($toks) >= 3

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.{SessionMemo, Tables}
+import graft.queries.OracleSql.{sqlHex4, sqlTokens}
 
 /** Training-data pipeline pack #5: training-run preparation and pipeline
   * EVALUATION — deterministic corpus sharding/ordering, tokenizer (BPE)
@@ -493,7 +494,7 @@ object TrainOps {
     // CONSTRUCTION, never per-row work.
     "q142_unigram_tokenizer" -> ((s, dir) => {
       val vocab = unigramVocab(s, dir)
-      val enc = graft.functions.UnigramNative.Expressions
+      val enc = graft.functions.Kernels
         .unigramEncode(col("text"), vocab)
       spread(t(s, dir, "documents"))
         .select(col("doc_id"), enc.as("e"))
@@ -644,15 +645,6 @@ object TrainOps {
        |  round(sum(p) / CAST(count(*) AS DOUBLE), 6) AS avg_pieces
        |FROM docseg GROUP BY doc_id""".stripMargin
   }
-
-  private val hexDigits = "0123456789abcdef"
-  private[graft] def sqlHex4(h: String): String =
-    s"""((strpos('$hexDigits', substr($h, 1, 1)) - 1) * 4096 +
-       | (strpos('$hexDigits', substr($h, 2, 1)) - 1) * 256 +
-       | (strpos('$hexDigits', substr($h, 3, 1)) - 1) * 16 +
-       | (strpos('$hexDigits', substr($h, 4, 1)) - 1))""".stripMargin
-
-  private val sqlTokens = "list_filter(string_split(text, ' '), x -> x <> '')"
 
   /** One oracle-side BPE round: pair counts from s{r-1}, argmax into
     * m{r}, fold-merged sequences into s{r}, corpus symbol total into

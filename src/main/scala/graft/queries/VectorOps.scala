@@ -48,8 +48,8 @@ object VectorOps {
     * reads floats straight out of Tungsten ArrayData inside whole-stage
     * codegen. Identical left-to-right double accumulation → bit-identical
     * to [[cosine]] and the DuckDB list_reduce oracle
-    * (graft.functions.CosineSimilarity, ExpressionsSpec). */
-  private val cosineNative = graft.functions.Expressions.cosineSim _
+    * (graft.functions.Kernels.CosineSimilarity, ExpressionsSpec). */
+  private val cosineNative = graft.functions.Kernels.CosineSimilarity
 
   /** Sign-bucket LSH: signs of the first 4 coordinates (deterministic,
     * portable; random hyperplanes would need engine-specific RNG). */
@@ -229,7 +229,9 @@ object VectorOps {
       val c1p = IvfIndex.pqTrainCodebook(s, e)
       val enc = Tables.spread(e, col("vec_id")).crossJoin(broadcast(c1p))
         .select(col("vec_id").as("c_id"),
-          graft.functions.PqNative.pqEncode(col("q"), col("cents"))
+          graft.functions.Kernels.PqEncode(col("q"), col("cents"),
+            graft.functions.PqNative.M,
+            graft.functions.PqNative.SubDim)
             .as("codes"))
       // asymmetric distance tables: queries stay full-precision
       val qt = e.filter(col("vec_id") < 10).crossJoin(broadcast(c1p))
@@ -243,7 +245,8 @@ object VectorOps {
       enc.crossJoin(broadcast(qt))
         .filter(col("c_id") =!= col("q_id"))
         .withColumn("approx_d",
-          graft.functions.PqNative.adcSum(col("codes"), col("dtable")))
+          graft.functions.Kernels.AdcSum(col("codes"), col("dtable"),
+            graft.functions.PqNative.M))
         .withColumn("rank", row_number().over(w))
         .filter(col("rank") <= 3)
         .select("q_id", "c_id", "rank", "approx_d")
@@ -469,7 +472,7 @@ object VectorOps {
       IvfIndex.sqAttach(s, name)
       IvfIndex.rows(s, name, IvfIndex.Sq).select(col("vec_id"), col("cell"),
         md5(concat_ws(",", transform(
-          graft.functions.SqNative.sqBytes(col("codes")),
+          graft.functions.Kernels.SqBytes(col("codes")),
           _.cast("string")))).as("code_md5"))
     }),
 
@@ -748,8 +751,8 @@ object VectorOps {
       val brute = hist
         .crossJoin(broadcast(delta.select(col("vec_id").as("q_id"),
           col("embedding").as("q_emb"))))
-        .select(col("q_id"), round(graft.functions.Expressions
-          .cosineSim(col("q_emb"), col("embedding")), 6).as("cos"),
+        .select(col("q_id"), round(
+          cosineNative(col("q_emb"), col("embedding")), 6).as("cos"),
           col("vec_id").as("old_id"))
         .groupBy(col("q_id"))
         .agg(max(struct(col("cos"), (-col("old_id")).as("nid")))
@@ -1081,7 +1084,7 @@ object VectorOps {
       .select(col("vec_id").cast("int").as("cluster"), col("q").as("cent"))
     val a1 = e.crossJoin(broadcast(pack(cents0)))
       .select(col("vec_id"), col("q"),
-        graft.functions.PqNative.nearestCent(col("q"), col("cents"))
+        graft.functions.Kernels.NearestCent(col("q"), col("cents"))
           .getField("c").as("cluster"))
     val cents1 = a1
       .select(col("cluster"), posexplode(col("q")).as(Seq("pos", "v")))
@@ -1098,7 +1101,7 @@ object VectorOps {
         x => x.getField("cd")).as("cent"))
     e.crossJoin(broadcast(pack(cents1)))
       .withColumn("best",
-        graft.functions.PqNative.nearestCent(col("q"), col("cents")))
+        graft.functions.Kernels.NearestCent(col("q"), col("cents")))
       .select(col("vec_id"), col("best").getField("c").as("cluster"),
         col("best").getField("d").as("dist2"))
   }
@@ -1322,7 +1325,7 @@ object VectorOps {
   /** Argmin fold over the packed centroid array, Column-HOF REFERENCE
     * formulation: strict `<` on a cluster-ascending array breaks ties to
     * the LOWEST cluster id. q91/q92/q110 run the native kernel
-    * (PqNative.NearestCent — the interpreted fold was the whole cost of
+    * (Kernels.NearestCent — the interpreted fold was the whole cost of
     * a bench-honest assignment pass); VectorOpsSpec pins equality. */
   private[graft] def nearestRef(q: Column, cents: Column): Column =
     aggregate(cents,

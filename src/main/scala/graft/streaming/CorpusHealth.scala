@@ -32,7 +32,7 @@ object CorpusHealth {
   def snapshot(docs: DataFrame): DataFrame = {
     val vocab = docs
       .select(explode(
-        graft.functions.TextExpressions.tokenTf(col("text"))).as("e"))
+        graft.functions.Kernels.TokenTf(col("text"))).as("e"))
       .select(col("e.token").as("token"), col("e.tf").cast("long").as("tf"))
       .groupBy("token").agg(sum("tf").as("freq"))
     val top = vocab.orderBy(col("freq").desc, col("token")).limit(256)

@@ -78,7 +78,7 @@ object CorpusIngest {
     import spark.implicits._
     val keyed =
       if (nfcNormalize)
-        graft.functions.CurationExpressions.nfcNormalize(col("text"))
+        graft.functions.Kernels.NfcNormalize(col("text"))
       else col("text")
     df.select(col("doc_id").cast("long").as("docId"),
       md5(keyed).as("hash"), col("text")).as[Doc]

@@ -95,10 +95,7 @@ object NearDupIngest {
     implicit val s: SparkSession = spark
     val pairs = LshIndex.pairs(survivors, family, bandCap)
       .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
-    val drops = ConnectedComponents.runPropagation(pairs)
-      .filter(col("node") =!= col("component"))
-      .select(col("node").as("doc_id"))
-    val kept = survivors.join(drops, Seq("doc_id"), "left_anti")
+    val kept = ConnectedComponents.keepMinId(survivors, pairs, "doc_id")
     kept.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
     // 3. index the WHOLE batch (kept + dropped) for later arrivals
     LshIndex.append(spark, docs, indexName, family)

@@ -62,7 +62,7 @@ import graft.operators.{ConnectedComponents, IvfIndex}
   */
 object VecDupIngest {
 
-  private val cosine = graft.functions.Expressions.cosineSim _
+  private val cosine = graft.functions.Kernels.CosineSimilarity
 
   /** ADC-mode shortlist width default: the history match scores
     * candidates by stored PQ codes first, then exact-verifies only the
@@ -177,10 +177,7 @@ object VecDupIngest {
       .filter(col("a.vec_id") < col("b.vec_id"))
       .filter(round(cosine(col("a.embedding"), col("b.embedding")), 6) >= tau)
       .select(col("a.vec_id").as("src"), col("b.vec_id").as("dst"))
-    val drops = ConnectedComponents.runPropagation(pairs)
-      .filter(col("node") =!= col("component"))
-      .select(col("node").as("vec_id"))
-    val kept = survivors.join(drops, Seq("vec_id"), "left_anti")
+    val kept = ConnectedComponents.keepMinId(survivors, pairs, "vec_id")
     kept.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
     // 3. index the WHOLE batch (kept + dropped) for later arrivals —
     //    unless this batch just SEEDED the index (it is already in).
@@ -316,10 +313,7 @@ object VecDupIngest {
       .filter(round(cosine(col("a_emb"), col("b_emb")), 6) >= tau)
       .select(col("a_id").as("src"), col("b_id").as("dst"))
     implicit val s: SparkSession = spark
-    val drops = ConnectedComponents.runPropagation(pairs)
-      .filter(col("node") =!= col("component"))
-      .select(col("node").as("vec_id"))
-    survivors.join(drops, Seq("vec_id"), "left_anti")
+    ConnectedComponents.keepMinId(survivors, pairs, "vec_id")
       .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
   }
 

@@ -63,7 +63,7 @@ class ClusteredRecallSpec extends AnyFunSuite {
   test("the fixture itself is clustered (within >> cross center cosine)") {
     val cv = graft.queries.VectorOps.clusteredVecs(
       graft.core.Tables.load(spark, "/root/testdata/sf0.01", "embeddings"))
-    val cos = graft.functions.Expressions.cosineSim _
+    val cos = graft.functions.Kernels.CosineSimilarity
     // within-cluster: id vs id+16 (same center, different noise)
     val a = cv.select(col("vec_id"), col("embedding").as("ea"))
     val b = cv.select((col("vec_id") - 16).as("vec_id"),

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.functions.{CurationExpressions, CurationNative}
+import graft.functions.{CurationNative, Kernels}
 
 /** Pins the curation-pack kernels (CurationNative) and the q115 paragraph
   * dedup contract. The URL spec cases mirror the canonicalization steps

@@ -8,11 +8,11 @@ import org.apache.spark.sql.catalyst.expressions.{Conv, HigherOrderFunction}
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
-import graft.functions.{DsirExpressions, DsirScore}
+import graft.functions.Kernels
 import graft.queries.SelectionOps
 
-/** Property check of the DSIR kernels ([[graft.functions.DsirBuckets]],
-  * [[graft.functions.DsirScore]]) against the Column formulation they
+/** Property check of the DSIR kernels ([[graft.functions.Kernels.DsirBuckets]],
+  * [[graft.functions.Kernels.DsirScore]]) against the Column formulation they
   * replaced ([[DsirReference]]): on random documents — non-ASCII and
   * supplementary-plane tokens whose UTF-16 and UTF-8 orders differ,
   * repeated tokens, one-token documents — buckets must be equal and the
@@ -75,14 +75,14 @@ class DsirKernelSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private def kernelInCodegen(df: DataFrame): Boolean =
     df.queryExecution.executedPlan.collect {
       case w: WholeStageCodegenExec => w
-    }.exists(_.child.expressions.exists(_.exists(_.isInstanceOf[DsirScore])))
+    }.exists(_.child.expressions.exists(_.exists(Kernels.DsirScore.calledBy)))
 
   /** Buckets and unrounded scores of `seed`'s documents, with the bucket
     * of "dropme" taken out of the counts. */
   private def check(seed: Long, codegen: Boolean): Unit = {
     val df = frame(seed, 300).cache()
     val b = df.select(col("doc_id"),
-      DsirExpressions.buckets(col("t")).as("n"),
+      Kernels.DsirBuckets(col("t")).as("n"),
       DsirReference.buckets(col("t")).as("r")).collect()
     b.foreach { r =>
       assert(r.getSeq[Int](1).map(_.toLong) == r.getSeq[Long](2),
@@ -98,9 +98,9 @@ class DsirKernelSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // two projections: a lambda in the kernel's projection would take
     // the kernel out of whole-stage codegen with it
     val scored = df.select(col("doc_id"), col("t"),
-      DsirExpressions.score(col("t"), typedLit(table)).as("n"))
+      Kernels.DsirScore(col("t"), typedLit(table)).as("n"))
     if (codegen) assert(kernelInCodegen(scored),
-      s"DsirScore is outside whole-stage codegen:\n" +
+      s"dsir_score is outside whole-stage codegen:\n" +
         scored.queryExecution.executedPlan)
     val rows = scored.orderBy("doc_id").collect()
     val ref = df.select(col("doc_id"),

@@ -6,8 +6,8 @@ import graft.queries.{SelectionOps, TextOps}
 
 /** Reference semantics for DSIR importance weighting: the Column
   * formulation `SelectionOps.dsirWeightsOf` ran before its bucketing and
-  * scoring moved into the native kernels ([[graft.functions.DsirBuckets]],
-  * [[graft.functions.DsirScore]]) — md5 → hex → `conv` buckets, two
+  * scoring moved into the native kernels ([[graft.functions.Kernels.DsirBuckets]],
+  * [[graft.functions.Kernels.DsirScore]]) — md5 → hex → `conv` buckets, two
   * 256-entry literal count maps, and an interpreted
   * `aggregate(transform(array_sort(t), lr))` fold. Test-only: the kernels
   * are checked against it by DsirKernelSpec. */

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.functions.Expressions.cosineSim
+import graft.functions.Kernels.{CosineSimilarity => cosineSim}
 
 /** Native CosineSimilarity expression: bit-parity with the HOF fold,
   * null handling, codegen path. */

@@ -107,6 +107,32 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(d == 5L + 11L)
   }
 
+  test("every kernel SQL name resolves under its old auto column name") {
+    GraftExtensions.register(spark)
+    val df = spark.sql(
+      """SELECT cosine_similarity(array(CAST(1 AS FLOAT)), array(CAST(1 AS FLOAT))),
+        |  graft_tokens(t), shingles3(t), minhash_sig(shingles3(t), 4),
+        |  span_hashes(t, 2), url_canon(t), mojibake_fix(t), nfc_normalize(t),
+        |  strip_accents(t), ora_charset_decode(CAST(t AS BINARY), 873),
+        |  pq_encode(array(1L, 2L),
+        |    array(named_struct('m', 0, 'cluster', 0, 'cent', array(1L))), 1, 1),
+        |  adc_sum(array(0), array(named_struct('m', 0, 'c', 0, 'd', 1L)), 1)
+        |FROM (SELECT 'a b c d http://X.com/' AS t)""".stripMargin)
+    // the names the hand-written expression classes generated
+    assert(df.columns.toSeq == Seq(
+      "cosine_similarity(array(CAST(1 AS FLOAT)), array(CAST(1 AS FLOAT)))",
+      "graft_tokens(t)", "shingles3(t)", "minhash_sig(shingles3(t))",
+      "span_hashes(t)", "url_canon(t)", "mojibake_fix(t)", "nfc_normalize(t)",
+      "strip_accents(t)", "ora_charset_decode(CAST(t AS BINARY), 873)",
+      "pq_encode(array(1, 2), array(named_struct(m, 0, cluster, 0, cent, array(1))))",
+      "adc_sum(array(0), array(named_struct(m, 0, c, 0, d, 1)))"))
+    val r = df.collect().head
+    assert(r.getDouble(0) == 1.0)
+    assert(r.getSeq[String](2) == Seq("a b c", "b c d", "c d http://X.com/"))
+    assert(r.getString(5) == "a b c d http://x.com")
+    assert(r.getSeq[Int](10) == Seq(0) && r.getLong(11) == 1L)
+  }
+
   test("extensions class injects every entry") {
     // unit-level: the plug-in path applies the same entries (an isolated
     // end-to-end session would race the suite-shared one in this JVM)

@@ -122,7 +122,7 @@ class IvfIndexSpec extends AnyFunSuite {
         broadcast(inc.select(col("vec_id").as("new_id"),
           col("embedding").as("q"))))
       .select(col("new_id"), col("vec_id").as("old_id"),
-        round(graft.functions.Expressions.cosineSim(col("q"),
+        round(graft.functions.Kernels.CosineSimilarity(col("q"),
           col("embedding")), 6).as("cos_sim"))
       .withColumn("rank", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy("new_id")
@@ -178,7 +178,7 @@ class IvfIndexSpec extends AnyFunSuite {
         broadcast(inc.select(col("vec_id").as("new_id"),
           col("embedding").as("q"))))
       .select(col("new_id"), col("vec_id").as("old_id"),
-        round(graft.functions.Expressions.cosineSim(col("q"),
+        round(graft.functions.Kernels.CosineSimilarity(col("q"),
           col("embedding")), 6).as("cos_sim"))
       .withColumn("rank", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy("new_id")

@@ -189,7 +189,7 @@ object MaterializeReference {
     * the null/empty map; the per-row id makes one codegen'd projection
     * serve a feed mixing charsets. */
   def applyCharsetDecode(df: DataFrame): DataFrame = {
-    import graft.functions.CharsetExpressions.charsetDecode
+    import graft.functions.Kernels.{CharsetDecode => charsetDecode}
     def dec(img: Column): Column =
       when(col("charset_cols").isNull || size(col("charset_cols")) === 0,
         img).otherwise(

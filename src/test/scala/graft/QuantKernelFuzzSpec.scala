@@ -4,8 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Seeded-random fuzz of the quantization kernels (PqNative.PqEncode/
-  * AdcSum, SqNative.SqEncode/SqDist/SqBytes) against independent
+/** Seeded-random fuzz of the quantization kernels (Kernels.PqEncode/
+  * AdcSum, Kernels.SqEncode/SqDist/SqBytes) against independent
   * plain-Scala mirrors — the TxnAssemblyPropSpec move for the vector
   * hot path. The gated fixtures exercise well-behaved corpora; this
   * drives the CodegenFallback loop bodies through the edges they never
@@ -78,8 +78,8 @@ class QuantKernelFuzzSpec extends AnyFunSuite {
     val got = vecs.toDF("vec_id", "q")
       .crossJoin(broadcast(bookDf))
       .select(col("vec_id"),
-        graft.functions.SqNative.sqBytes(
-          graft.functions.SqNative.sqEncode(col("q"), col("book")))
+        graft.functions.Kernels.SqBytes(
+          graft.functions.Kernels.SqEncode(col("q"), col("book")))
           .as("codes"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
     vecs.foreach { case (id, v) =>
@@ -95,7 +95,7 @@ class QuantKernelFuzzSpec extends AnyFunSuite {
       .toDF("vec_id", "codes")
     val gotD = qtDf.join(codesDf, "vec_id")
       .select(col("vec_id"),
-        graft.functions.SqNative.sqDist(col("codes"), col("qt")).as("sd"))
+        graft.functions.Kernels.SqDist(col("codes"), col("qt")).as("sd"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     vecs.foreach { case (id, q) =>
       val owner = vecs(((id - 7 + n) % n).toInt)._2
@@ -144,8 +144,8 @@ class QuantKernelFuzzSpec extends AnyFunSuite {
     val bookDf = Seq(Tuple1(book)).toDF("cents")
     val got = vecs.toDF("vec_id", "q")
       .crossJoin(broadcast(bookDf))
-      .select(col("vec_id"), graft.functions.PqNative
-        .pqEncode(col("q"), col("cents"), m, subDim).as("codes"))
+      .select(col("vec_id"), graft.functions.Kernels
+        .PqEncode(col("q"), col("cents"), m, subDim).as("codes"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
     vecs.foreach { case (id, v) =>
       assert(got(id) == encode(v), s"PqEncode mismatch at row $id")
@@ -159,11 +159,11 @@ class QuantKernelFuzzSpec extends AnyFunSuite {
     val dtDf = Seq(Tuple1(dtable)).toDF("dtable")
     val gotA = vecs.toDF("vec_id", "q")
       .crossJoin(broadcast(bookDf))
-      .select(col("vec_id"), graft.functions.PqNative
-        .pqEncode(col("q"), col("cents"), m, subDim).as("codes"))
+      .select(col("vec_id"), graft.functions.Kernels
+        .PqEncode(col("q"), col("cents"), m, subDim).as("codes"))
       .crossJoin(broadcast(dtDf))
-      .select(col("vec_id"), graft.functions.PqNative
-        .adcSum(col("codes"), col("dtable"), m).as("a"))
+      .select(col("vec_id"), graft.functions.Kernels
+        .AdcSum(col("codes"), col("dtable"), m).as("a"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     vecs.foreach { case (id, v) =>
       assert(gotA(id) == adc(encode(v)), s"AdcSum mismatch at row $id")

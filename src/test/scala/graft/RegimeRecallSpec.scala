@@ -65,7 +65,7 @@ class RegimeRecallSpec extends AnyFunSuite {
   test("the regime fixture separates (within >> cross center cosine)") {
     val rv = graft.queries.VectorOps.regimeVecs(
       graft.core.Tables.load(spark, "/root/testdata/sf0.01", "embeddings"))
-    val cos = graft.functions.Expressions.cosineSim _
+    val cos = graft.functions.Kernels.CosineSimilarity
     // within-cluster: hist-rank cid repeats every 64 hist positions ≙
     // vec_id step of ~71; ids v and v+64+7 share a center when neither
     // crosses extra %10==9 exclusions — use the exact rank identity

@@ -66,11 +66,11 @@ class Sq8Spec extends AnyFunSuite {
     val got = vecs.toDF("vec_id", "q")
       .crossJoin(broadcast(bookDf))
       .select(col("vec_id"),
-        graft.functions.SqNative.sqBytes(
-          graft.functions.SqNative.sqEncode(col("q"), col("book")))
+        graft.functions.Kernels.SqBytes(
+          graft.functions.Kernels.SqEncode(col("q"), col("book")))
           .as("codes"),
-        graft.functions.SqNative.sqDist(
-          graft.functions.SqNative.sqEncode(col("q"), col("book")),
+        graft.functions.Kernels.SqDist(
+          graft.functions.Kernels.SqEncode(col("q"), col("book")),
           zip_with(col("q"), col("book"), (x, b) => struct(x.as("qv"),
             b.getField("mn").as("mn"), b.getField("sc").as("sc"))))
           .as("self_d"))

@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.util.QueryExecutionListener
-import graft.functions.{Shingles3, TextExpressions, TokenTf, Tokens}
+import graft.functions.Kernels
 import graft.queries.TextOps
 
 /** The native one-pass shingle/minhash kernels must produce EXACTLY the
@@ -42,7 +42,7 @@ class TextOpsNativeSpec extends AnyFunSuite {
 
   test("shingles3 == slices/zip_with/array_distinct formulation (as sets)") {
     val both = docs.select(
-      TextExpressions.shingles3(col("text")).as("native"),
+      Kernels.Shingles3(col("text")).as("native"),
       TextOps.shinglesCol(TextOps.tokensCol).as("reference"))
       .select(array_sort(col("native")).as("n"),
         array_sort(col("reference")).as("r"))
@@ -76,7 +76,8 @@ class TextOpsNativeSpec extends AnyFunSuite {
     own + (kids.map(depth(_)(pick)) :+ 0).max
   }
 
-  private def tokenizeDepth(p: SparkPlan): Int = depth(p) { case _: Tokens => }
+  private def tokenizeDepth(p: SparkPlan): Int =
+    depth(p) { case e if Kernels.Tokens.calledBy(e) => }
 
   test("q105/q115/q116/q118 tokenize each row once: the non-empty " +
       "filter counts tokens instead of re-running graft_tokens") {
@@ -94,14 +95,18 @@ class TextOpsNativeSpec extends AnyFunSuite {
 
   test("q28/q29/q184/q185 run each band kernel once per row: the band " +
       "front end filters on the token count before the kernel projection") {
-    val shingles: PartialFunction[Expression, Unit] = { case _: Shingles3 => }
-    val tf: PartialFunction[Expression, Unit] = { case _: TokenTf => }
+    val shingles: PartialFunction[Expression, Unit] = {
+      case e if Kernels.Shingles3.calledBy(e) => }
+    val tf: PartialFunction[Expression, Unit] = {
+      case e if Kernels.TokenTf.calledBy(e) => }
     // the multiset expansion, not the pair expansion (no sequence)
     val expansion: PartialFunction[Expression, Unit] = {
       case f: Flatten if f.exists(_.isInstanceOf[Sequence]) => }
     val kernels = Seq(
       "q28_minhash_sig" -> Seq("shingles3" -> shingles),
       "q29_minhash_pairs" -> Seq("shingles3" -> shingles),
+      "q59_simhash_pairs" -> Seq("shingles3" -> shingles),
+      "q183_oph_minhash" -> Seq("shingles3" -> shingles),
       "q184_weighted_minhash" -> Seq("token_tf" -> tf, "expansion" -> expansion),
       "q185_weighted_pairs" -> Seq("token_tf" -> tf, "expansion" -> expansion))
     // q29/q185 run their kernels inside an eager localCheckpoint, so every
@@ -135,7 +140,7 @@ class TextOpsNativeSpec extends AnyFunSuite {
     val refs = (0 until TextOps.nSig).map(i =>
       TextOps.minhash(col("sh"), i).as(s"r$i"))
     val both = base.select(
-      (TextExpressions.minhashSig(col("sh"), TextOps.nSig).as("sig") +: refs): _*)
+      (Kernels.minhashSig(col("sh"), TextOps.nSig).as("sig") +: refs): _*)
     val mismatches = (0 until TextOps.nSig).map(i =>
       both.filter(not(element_at(col("sig"), i + 1) <=> col(s"r$i"))).count())
     assert(mismatches.forall(_ == 0), s"per-seed mismatches: $mismatches")
@@ -146,7 +151,7 @@ class TextOpsNativeSpec extends AnyFunSuite {
       TextOps.shinglesCol(TextOps.tokensCol).as("sh"))
       .filter(size(col("sh")) > 0)
     val both = base.select(
-      TextExpressions.ophSig(col("sh"), TextOps.nSig).as("native"),
+      Kernels.OphSig(col("sh"), TextOps.nSig).as("native"),
       TextOps.ophSigRef(col("sh"), TextOps.nSig).as("reference"))
     assert(both.filter(not(col("native") <=> col("reference"))).count() == 0)
     assert(both.count() > 50) // non-trivial corpus
@@ -156,7 +161,7 @@ class TextOpsNativeSpec extends AnyFunSuite {
     import spark.implicits._
     // one shingle → one occupied slot, 7 borrowed: all 8 defined and equal
     val one = Seq((1L, Seq("only one shingle"))).toDF("doc_id", "sh")
-      .select(TextExpressions.ophSig(col("sh"), 8).as("sig"))
+      .select(Kernels.OphSig(col("sh"), 8).as("sig"))
       .collect().head.getSeq[String](0)
     assert(one.length == 8 && one.toSet.size == 1)
     // same shingle set (any order) → same signature; disjoint → different
@@ -165,13 +170,13 @@ class TextOpsNativeSpec extends AnyFunSuite {
       (2L, Seq("gg hh ii", "aa bb cc", "dd ee ff")),
       (3L, Seq("zz yy xx", "ww vv uu", "qq rr ss"))
     ).toDF("doc_id", "sh")
-      .select(col("doc_id"), TextExpressions.ophSig(col("sh"), 8).as("sig"))
+      .select(col("doc_id"), Kernels.OphSig(col("sh"), 8).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     assert(sigs(1L) == sigs(2L))
     assert(sigs(1L) != sigs(3L))
     // empty shingles → null signature (same contract as minhashSig)
     val nul = Seq((1L, Seq.empty[String])).toDF("doc_id", "sh")
-      .select(TextExpressions.ophSig(col("sh"), 8).as("sig"))
+      .select(Kernels.OphSig(col("sh"), 8).as("sig"))
       .collect().head
     assert(nul.isNullAt(0))
   }
@@ -185,7 +190,7 @@ class TextOpsNativeSpec extends AnyFunSuite {
         size(col("sh"))).cast("long") * lit(1L << (32 - p))
     }.reduce(_ + _)
     val both = base.select(
-      TextExpressions.simhashBits(col("sh"), 32).as("n"), ref.as("r"))
+      Kernels.SimHashBits(col("sh"), 32).as("n"), ref.as("r"))
     assert(both.filter(col("n") =!= col("r")).count() == 0)
     assert(both.filter(col("n") =!= 0L).count() > 50) // non-trivial sigs
   }
@@ -201,11 +206,11 @@ class TextOpsNativeSpec extends AnyFunSuite {
         size(col("sh"))).cast("long") * lit(1L << (32 - p))
     }.reduce(_ + _)
     val both = base.select(
-      shiftright(TextExpressions.simhashBits(col("sh"), 64), 32)
+      shiftright(Kernels.SimHashBits(col("sh"), 64), 32)
         .bitwiseAND(lit(0xffffffffL)).as("hi"),
-      TextExpressions.simhashBits(col("sh"), 64)
+      Kernels.SimHashBits(col("sh"), 64)
         .bitwiseAND(lit(0xffffffffL)).as("lo"),
-      TextExpressions.simhashBits(col("sh"), 32).as("sig32"),
+      Kernels.SimHashBits(col("sh"), 32).as("sig32"),
       loRef.as("loRef"))
     assert(both.filter(col("hi") =!= col("sig32")).count() == 0)
     assert(both.filter(col("lo") =!= col("loRef")).count() == 0)
@@ -216,7 +221,7 @@ class TextOpsNativeSpec extends AnyFunSuite {
     // the kernel's in-row (token, tf) runs must equal the shuffle it
     // deletes: explode(tokens) -> groupBy(doc_id, token).count
     val native = docs
-      .select(col("doc_id"), explode(TextExpressions.tokenTf(col("text"))).as("p"))
+      .select(col("doc_id"), explode(Kernels.TokenTf(col("text"))).as("p"))
       .select(col("doc_id"), col("p.token").as("token"),
         col("p.tf").cast("long").as("tf"))
     val reference = docs
@@ -241,7 +246,7 @@ class TextOpsNativeSpec extends AnyFunSuite {
       val grams = array_distinct(
         when(size(toks) >= n, joined).otherwise(array().cast("array<string>")))
       val both = docs.select(
-        array_sort(TextExpressions.spanHashes(col("text"), n)).as("nat"),
+        array_sort(Kernels.spanHashes(col("text"), n)).as("nat"),
         array_sort(transform(grams, g => md5(g))).as("ref"))
       assert(both.filter(not(col("nat") <=> col("ref"))).count() == 0,
         s"n=$n mismatch")
@@ -271,7 +276,7 @@ class TextOpsNativeSpec extends AnyFunSuite {
     val grams = array_distinct(
       when(size(toks) >= n, joined).otherwise(array().cast("array<string>")))
     val both = docs.select(
-      array_sort(TextExpressions.spanHashes(col("text"), n)).as("nat"),
+      array_sort(Kernels.spanHashes(col("text"), n)).as("nat"),
       array_sort(transform(grams, g => md5(g))).as("ref"))
     assert(both.filter(not(col("nat") <=> col("ref"))).count() == 0)
     assert(both.filter(size(col("nat")) > 0).count() > 20) // non-trivial
@@ -291,13 +296,13 @@ class TextOpsNativeSpec extends AnyFunSuite {
           when(size(toks) >= n, joined)
             .otherwise(array().cast("array<string>")))
         val both = docs.select(
-          array_sort(TextExpressions.spanHashes(col("text"), n)).as("native"),
+          array_sort(Kernels.spanHashes(col("text"), n)).as("native"),
           array_sort(transform(grams, g => xxhash64(g))).as("reference"))
         assert(both.filter(not(col("native") <=> col("reference"))).count() == 0)
         assert(both.filter(size(col("native")) > 0).count() > 50)
       }
       // type flips to array<long> — the 4x-smaller production key
-      val dt = docs.select(TextExpressions.spanHashes(col("text"), 4).as("h"))
+      val dt = docs.select(Kernels.spanHashes(col("text"), 4).as("h"))
         .schema("h").dataType
       assert(dt == org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.LongType, containsNull = false))
@@ -315,7 +320,7 @@ class TextOpsNativeSpec extends AnyFunSuite {
         array_min(transform(col("sh"),
           s => xxhash64(concat(lit(i.toString + "|"), s)))).as(s"r$i"))
       val both = base.withColumn("sig",
-        TextExpressions.minhashSig(col("sh"), nSig))
+        Kernels.minhashSig(col("sh"), nSig))
         .select((0 until nSig).map(i =>
           element_at(col("sig"), i + 1).as(s"n$i")) ++ refCols: _*)
       val mismatch = (0 until nSig).map(i =>
@@ -328,7 +333,7 @@ class TextOpsNativeSpec extends AnyFunSuite {
   test("minhashSig of empty shingle set is null") {
     import spark.implicits._
     val r = Seq(Tuple1(Seq.empty[String])).toDF("sh")
-      .select(TextExpressions.minhashSig(col("sh"), 8).as("sig"))
+      .select(Kernels.minhashSig(col("sh"), 8).as("sig"))
       .collect().head
     assert(r.isNullAt(0))
   }
@@ -338,13 +343,13 @@ class TextOpsNativeSpec extends AnyFunSuite {
     // real-corpus sample: Σ min(tf) from the native kernel must equal the
     // interpreted map-lookup fold it replaced in the q185 verify
     val tf = docs.limit(40).select(col("doc_id"),
-      TextExpressions.tokenTf(col("text")).as("tfs"))
+      Kernels.TokenTf(col("text")).as("tfs"))
     val pairs = tf.select(col("doc_id").as("a"), col("tfs").as("tf_a"))
       .crossJoin(tf.select(col("doc_id").as("b"), col("tfs").as("tf_b")))
       .filter(col("a") < col("b"))
     val both = pairs
       .withColumn("native",
-        TextExpressions.tfIntersect(col("tf_a"), col("tf_b")))
+        Kernels.TfIntersect(col("tf_a"), col("tf_b")))
       .withColumn("mb", map_from_entries(col("tf_b")))
       .withColumn("reference", aggregate(col("tf_a"), lit(0L), (acc, s) =>
         acc + least(s.getField("tf").cast("long"),

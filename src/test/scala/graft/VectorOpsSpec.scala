@@ -148,7 +148,7 @@ class VectorOpsSpec extends AnyFunSuite {
 
   test("PqNative kernels == the Column-HOF reference formulation") {
     import org.apache.spark.sql.functions._
-    import graft.functions.PqNative
+    import graft.functions.{Kernels, PqNative}
     val e = graft.core.Tables.load(spark, sf, "embeddings")
       .select(col("vec_id"),
         transform(col("embedding"),
@@ -161,7 +161,8 @@ class VectorOpsSpec extends AnyFunSuite {
         struct(col("m"), col("cluster"), col("cent")))).as("cents"))
     val both = e.crossJoin(broadcast(cents))
       .select(col("vec_id"),
-        PqNative.pqEncode(col("q"), col("cents")).as("native"),
+        Kernels.PqEncode(col("q"), col("cents"), PqNative.M,
+          PqNative.SubDim).as("native"),
         VectorOps.pqEncodeRef(col("q"), col("cents")).as("ref"))
     assert(both.filter(col("native") =!= col("ref")).count() == 0)
     // AdcSum == the fold over a synthetic dtable derived from the packed
@@ -172,7 +173,7 @@ class VectorOpsSpec extends AnyFunSuite {
         (cs.getField("m").cast("long") * 1000 +
           cs.getField("cluster").cast("long")).as("d"))))
       .select(col("vec_id"),
-        PqNative.adcSum(col("native"), col("dtable")).as("fast"),
+        Kernels.AdcSum(col("native"), col("dtable"), PqNative.M).as("fast"),
         aggregate(sequence(lit(0), lit(3)), lit(0L), (acc, m) =>
           acc + element_at(filter(col("dtable"), tb =>
             tb.getField("m") === m &&
@@ -186,7 +187,7 @@ class VectorOpsSpec extends AnyFunSuite {
         struct(col("cluster"), col("cent")))).as("kc"))
     val near = e.crossJoin(broadcast(kpack))
       .select(col("vec_id"),
-        PqNative.nearestCent(col("q"), col("kc")).as("fast"),
+        Kernels.NearestCent(col("q"), col("kc")).as("fast"),
         VectorOps.nearestRef(col("q"), col("kc")).as("ref"))
     assert(near.filter(col("fast") =!= col("ref")).count() == 0)
   }

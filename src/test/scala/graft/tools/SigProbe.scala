@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
-import graft.functions.TextExpressions
+import graft.functions.Kernels
 
 /** Scratch profiler for the signature kernels (test scope, not shipped):
   * times minhashSig (nSig digests per shingle) vs ophSig (one digest per
@@ -15,7 +15,7 @@ object SigProbe {
     val reps = if (args.length > 1) args(1).toInt else 5
     val spark = graft.Bench.session()
     val sh = graft.core.Tables.load(spark, dir, "documents")
-      .select(col("doc_id"), TextExpressions.shingles3(col("text")).as("sh"))
+      .select(col("doc_id"), Kernels.Shingles3(col("text")).as("sh"))
       .filter(size(col("sh")) > 0)
       .cache()
     println(s"docs with shingles: ${sh.count()}")
@@ -27,8 +27,8 @@ object SigProbe {
       println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.3f s (min=$v%.8s)")
     }
     (1 to reps).foreach { i =>
-      time(s"minhash $i", TextExpressions.minhashSig(col("sh"), 8))
-      time(s"oph     $i", TextExpressions.ophSig(col("sh"), 8))
+      time(s"minhash $i", Kernels.minhashSig(col("sh"), 8))
+      time(s"oph     $i", Kernels.OphSig(col("sh"), 8))
     }
     spark.stop()
   }

@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
-import graft.functions.TextExpressions
+import graft.functions.Kernels
 
 /** Split the weighted-LSH front end's cost (r16): tokenTf kernel vs the
   * interpreted multiset expansion vs expansion+minhash — interleaved over
@@ -24,14 +24,14 @@ object WSigProbe {
     }
     (1 to reps).foreach { i =>
       time(s"$i tokenTf        ",
-        size(TextExpressions.tokenTf(col("text"))))
+        size(Kernels.TokenTf(col("text"))))
       time(s"$i expansion      ",
         size(graft.operators.LshIndex.expandedInstances(
-          TextExpressions.tokenTf(col("text")))))
+          Kernels.TokenTf(col("text")))))
       time(s"$i expansion+mh8  ", element_at(
-        TextExpressions.minhashSig(
+        Kernels.minhashSig(
           graft.operators.LshIndex.expandedInstances(
-            TextExpressions.tokenTf(col("text"))), 8), 1))
+            Kernels.TokenTf(col("text"))), 8), 1))
     }
     spark.stop()
   }
